@@ -20,6 +20,19 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.groupByAgg(Tables(spark, "/root/testdata/sf0.001"))
 
+  /** Content fingerprint of a dataset directory: the full path string plus
+    * its [[Tables.Stamp]] — the quick-check the schema cache uses, listed
+    * through the Hadoop FileSystem API, so it works for any scheme.
+    * Regenerated data at the same path changes the fingerprint. */
+  private def datasetFingerprint(s: SparkSession, dataset: String): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    md.update(dataset.getBytes("UTF-8"))
+    Tables.stamp(s, dataset).foreach(_.files.foreach { case (p, len, mtime) =>
+      md.update(s"$p|$len|$mtime".getBytes("UTF-8"))
+    })
+    md.digest().map("%02x".format(_)).mkString.take(16)
+  }
+
   /** Write-once round-trip directory for the interchange-format queries:
     * keyed on the dataset path PLUS a content fingerprint of its files
     * (path, size, mtime — rsync's quick-check triple), written on first use
@@ -32,31 +45,10 @@ object SparkEntry {
     * 128-bit digest collision needs identical paths). The marker must be
     * something the WRITER creates last — a bare directory-exists check
     * would permanently trust a half-written dir after a crash. */
-  /** Content fingerprint of a dataset directory: the full path string plus
-    * every file's (relative path, size, mtime) — rsync's quick-check
-    * triple. Regenerated data at the same path changes the fingerprint. */
-  private def datasetFingerprint(dataset: String): String = {
-    import java.nio.file.{Files, Path, Paths}
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(dataset.getBytes("UTF-8"))
-    val root = Paths.get(dataset)
-    if (Files.isDirectory(root)) {
-      val stream = Files.walk(root)
-      try {
-        stream.filter(Files.isRegularFile(_)).sorted().forEach { (p: Path) =>
-          md.update(
-            s"${root.relativize(p)}|${Files.size(p)}|${Files.getLastModifiedTime(p).toMillis}"
-              .getBytes("UTF-8"))
-        }
-      } finally stream.close()
-    }
-    md.digest().map("%02x".format(_)).mkString.take(16)
-  }
-
-  private def roundtripDir(prefix: String, dataset: String, marker: String)
-                          (write: String => Unit): String = {
+  private def roundtripDir(s: SparkSession, prefix: String, dataset: String,
+                           marker: String)(write: String => Unit): String = {
     import java.nio.file.{Files, Paths}
-    val fp = datasetFingerprint(dataset)
+    val fp = datasetFingerprint(s, dataset)
     val dir = Paths.get(
       System.getProperty("java.io.tmpdir"), s"${prefix}_$fp").toString
     if (!Files.exists(Paths.get(dir, marker)))
@@ -70,7 +62,7 @@ object SparkEntry {
     * shape). Symbols are whitespace-free by tokenization, so TSV is
     * collision-free. */
   private def trainedBpeMerges(s: SparkSession, d: String): Seq[(String, String)] = {
-    val dir = roundtripDir("graft_bpe", d, "_BPE_OK") { out =>
+    val dir = roundtripDir(s, "graft_bpe", d, "_BPE_OK") { out =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
       val m = TextAnalysis.bpeMerges(Tables(s, d)).collect()
         .map(r => s"${r.getString(1)}\t${r.getString(2)}")
@@ -90,7 +82,7 @@ object SparkEntry {
     * input of `q_triangles` and `q_label_prop` (r13 verdict item 5: both
     * paid the identical pairs-self-join + distinct build per call). */
   private def coPurchaseEdgesDir(s: SparkSession, d: String): String =
-    roundtripDir("graft_copurch", d, "_SUCCESS") { out =>
+    roundtripDir(s, "graft_copurch", d, "_SUCCESS") { out =>
       Graph.coPurchaseEdges(Tables(s, d))
         .repartition(8).write.mode("overwrite").parquet(out)
     }
@@ -101,7 +93,7 @@ object SparkEntry {
     * support rollup is the expensive part; path/community analytics
     * should attach it, not re-derive it per query). */
   private def backboneEdgesDir(s: SparkSession, d: String): String =
-    roundtripDir("graft_cop2", d, "_SUCCESS") { out =>
+    roundtripDir(s, "graft_cop2", d, "_SUCCESS") { out =>
       Graph.coPurchaseEdgesWithSupport(Tables(s, d), 2)
         .repartition(8).write.mode("overwrite").parquet(out)
     }
@@ -111,7 +103,7 @@ object SparkEntry {
     * (the [[trainedBpeMerges]] contract; both halves ship together
     * because the closed-vocab UNK arm needs the alphabet). */
   private def trainedByteBpe(s: SparkSession, d: String): (Seq[(String, String)], Seq[String]) = {
-    val dir = roundtripDir("graft_bpeb", d, "_BPEB_OK") { out =>
+    val dir = roundtripDir(s, "graft_bpeb", d, "_BPEB_OK") { out =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
       val (m, a) = TextAnalysis.trainByteBpe(Tables(s, d))
       java.nio.file.Files.write(java.nio.file.Paths.get(out, "merges.tsv"),
@@ -137,7 +129,7 @@ object SparkEntry {
     * listener evidence put that build at ~17 s of task time inside one
     * query). */
   private def tradePairsDir(s: SparkSession, d: String): String =
-    roundtripDir("graft_tradepairs", d, "_SUCCESS") { out =>
+    roundtripDir(s, "graft_tradepairs", d, "_SUCCESS") { out =>
       Graph.tradePairs(Tables(s, d))
         .repartition(8).write.mode("overwrite").parquet(out)
     }
@@ -191,7 +183,7 @@ object SparkEntry {
           .select((col("c_custkey") + 1000000L).as("k"),
             lit("insert").as("op"), col("c_nationkey").as("nationkey"),
             round(col("c_acctbal"), 2).as("acctbal")))
-      val dir = roundtripDir("graft_cdc", d, "_CDC_OK") { out =>
+      val dir = roundtripDir(s, "graft_cdc", d, "_CDC_OK") { out =>
         // per-segment FILE counts are bounded INSIDE CdcStore.appendChanges
         // (byte-derived, r18) — no call-site coalesce needed here or by
         // any other caller, the streaming loop included
@@ -273,7 +265,7 @@ object SparkEntry {
       // files, so a definition change must land in a fresh directory and
       // fresh catalog names
       def prefix(dir: String) = "gdidx_c400b_" + dir.split('_').last
-      val dir = roundtripDir("graft_dedupidx_c400b", d, "_INDEX_OK") { out =>
+      val dir = roundtripDir(s, "graft_dedupidx_c400b", d, "_INDEX_OK") { out =>
         DedupIndex.buildIndex(s, corpus, prefix(out), out)
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(out, "_INDEX_OK"), "ok")
@@ -310,7 +302,7 @@ object SparkEntry {
       // arithmetic as ivfTopK, so the same SQL oracle verifies it.
       import graft.operators.AnnIndex
       val t = Tables(s, d)
-      val dir = roundtripDir("graft_annidx", d, "_ANN_INDEX_OK") { out =>
+      val dir = roundtripDir(s, "graft_annidx", d, "_ANN_INDEX_OK") { out =>
         AnnIndex.buildIndex(s, t.embeddings, out)
       }
       AnnIndex.queryIndex(s, AnnIndex.attachIndex(s, dir),
@@ -328,7 +320,7 @@ object SparkEntry {
       def prefix(dir: String) = "gann_" + dir.split('_').last
       // r14 bumped the dir generation: the adjacency schema gained the
       // denormalized n_emb column, so pre-r14 cached dirs must not attach
-      val dir = roundtripDir("graft_gann2", d, "graph_ann.meta") { out =>
+      val dir = roundtripDir(s, "graft_gann2", d, "graph_ann.meta") { out =>
         GraphAnn.buildIndex(s, t.embeddings, prefix(out), out)
       }
       GraphAnn.beamSearch(s, GraphAnn.attachIndex(s, prefix(dir), dir),
@@ -347,7 +339,7 @@ object SparkEntry {
       import graft.operators.GraphAnn
       val t = Tables(s, d)
       def prefix(dir: String) = "gann_" + dir.split('_').last
-      val dir = roundtripDir("graft_gann2", d, "graph_ann.meta") { out =>
+      val dir = roundtripDir(s, "graft_gann2", d, "graph_ann.meta") { out =>
         GraphAnn.buildIndex(s, t.embeddings, prefix(out), out)
       }
       GraphAnn.beamSearchExactScored(s, GraphAnn.attachIndex(s, prefix(dir), dir),
@@ -420,12 +412,12 @@ object SparkEntry {
       import graft.operators.{AnnIndex, TextIndex}
       val t = Tables(s, d)
       def prefix(dir: String) = "gtidx_" + dir.split('_').last
-      val tdir = roundtripDir("graft_textidx", d, "_TEXT_INDEX_OK") { out =>
+      val tdir = roundtripDir(s, "graft_textidx", d, "_TEXT_INDEX_OK") { out =>
         TextIndex.buildIndex(s, t.documents, prefix(out), out)
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(out, "_TEXT_INDEX_OK"), "ok")
       }
-      val adir = roundtripDir("graft_annidx", d, "_ANN_INDEX_OK") { out =>
+      val adir = roundtripDir(s, "graft_annidx", d, "_ANN_INDEX_OK") { out =>
         AnnIndex.buildIndex(s, t.embeddings, out)
       }
       graft.operators.Pipeline.hybridIndexedSearch(s,
@@ -443,7 +435,7 @@ object SparkEntry {
       import graft.operators.TextIndex
       val t = Tables(s, d)
       def prefix(dir: String) = "gtidx_" + dir.split('_').last
-      val dir = roundtripDir("graft_textidx", d, "_TEXT_INDEX_OK") { out =>
+      val dir = roundtripDir(s, "graft_textidx", d, "_TEXT_INDEX_OK") { out =>
         TextIndex.buildIndex(s, t.documents, prefix(out), out)
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(out, "_TEXT_INDEX_OK"), "ok")
@@ -462,7 +454,7 @@ object SparkEntry {
       // split on the residue, not an absolute id: every sf has both halves
       def halfA = col("doc_id") % 2 === 0
       def prefix(dir: String) = "gtseg_" + dir.split('_').last
-      val dir = roundtripDir("graft_textseg", d, "_TEXT_SEG_OK") { out =>
+      val dir = roundtripDir(s, "graft_textseg", d, "_TEXT_SEG_OK") { out =>
         // batch tags make a re-run of a crashed warmup idempotent: a half
         // whose tag already rides the segment list is skipped, so a crash
         // between the list commit and the _TEXT_SEG_OK marker cannot
@@ -628,11 +620,11 @@ object SparkEntry {
     "q_kaplan_meier" -> ((s, d) => Analytics.kaplanMeier(Tables(s, d))),
     "q_attribution" -> ((s, d) => Analytics.touchAttribution(Tables(s, d))),
     "q_pagerank" -> ((s, d) => Graph.pageRank(Tables(s, d),
-      prebuiltPairs = Some(s.read.parquet(tradePairsDir(s, d))))),
+      prebuiltPairs = Some(Tables.scan(s, tradePairsDir(s, d))))),
     "q_ppr" -> ((s, d) => Graph.personalizedPageRank(Tables(s, d),
-      prebuiltPairs = Some(s.read.parquet(tradePairsDir(s, d))))),
+      prebuiltPairs = Some(Tables.scan(s, tradePairsDir(s, d))))),
     "q_kcore" -> ((s, d) => Graph.kCore(Tables(s, d),
-      prebuiltPairs = Some(s.read.parquet(tradePairsDir(s, d))))),
+      prebuiltPairs = Some(Tables.scan(s, tradePairsDir(s, d))))),
     // label_prop + triangles share the identical co-purchase edge list:
     // derived ONCE per dataset and persisted (r13 verdict item 5 — the
     // edge build was the bulk of both queries' cost, paid twice); each
@@ -640,17 +632,17 @@ object SparkEntry {
     // same edges from lineitem from scratch, so hashes are unchanged
     "q_label_prop" -> ((s, d) =>
       Graph.labelPropagation(Tables(s, d),
-        prebuiltEdges = Some(s.read.parquet(coPurchaseEdgesDir(s, d))))),
+        prebuiltEdges = Some(Tables.scan(s, coPurchaseEdgesDir(s, d))))),
     "q_hits" -> ((s, d) => Graph.hits(Tables(s, d),
-      prebuiltPairs = Some(s.read.parquet(tradePairsDir(s, d))))),
+      prebuiltPairs = Some(Tables.scan(s, tradePairsDir(s, d))))),
     "q_adamic_adar" -> ((s, d) =>
       Graph.adamicAdar(Tables(s, d),
-        prebuiltEdges = Some(s.read.parquet(coPurchaseEdgesDir(s, d))))),
+        prebuiltEdges = Some(Tables.scan(s, coPurchaseEdgesDir(s, d))))),
     "q_clustering_coeff" -> ((s, d) =>
       Graph.clusteringCoeffTop(Tables(s, d),
-        prebuiltEdges = Some(s.read.parquet(coPurchaseEdgesDir(s, d))))),
+        prebuiltEdges = Some(Tables.scan(s, coPurchaseEdgesDir(s, d))))),
     "q_bfs_hops" -> ((s, d) => Graph.bfsHops(Tables(s, d),
-      prebuiltEdges = Some(s.read.parquet(backboneEdgesDir(s, d))))),
+      prebuiltEdges = Some(Tables.scan(s, backboneEdgesDir(s, d))))),
     "q_item_cf" -> ((s, d) => Analytics.itemItemCf(Tables(s, d))),
     "q_readability" -> ((s, d) => TextAnalysis.readability(Tables(s, d))),
     "q_js_divergence" -> ((s, d) => TextAnalysis.jsDivergence(Tables(s, d))),
@@ -673,10 +665,10 @@ object SparkEntry {
     "q_gumbel" -> ((s, d) => Analytics.gumbelTail(Tables(s, d))),
     "q_mde" -> ((s, d) => Analytics.mdeReport(Tables(s, d))),
     "q_modularity" -> ((s, d) => Graph.modularity(Tables(s, d),
-      prebuiltEdges = Some(s.read.parquet(backboneEdgesDir(s, d))))),
+      prebuiltEdges = Some(Tables.scan(s, backboneEdgesDir(s, d))))),
     "q_triangles" -> ((s, d) =>
       Graph.triangleCounts(Tables(s, d),
-        prebuiltEdges = Some(s.read.parquet(coPurchaseEdgesDir(s, d))))),
+        prebuiltEdges = Some(Tables.scan(s, coPurchaseEdgesDir(s, d))))),
     "q_argmax_doc" -> ((s, d) => TextAnalysis.longestDocPerSource(Tables(s, d))),
     "q_zipf_slope" -> ((s, d) => TextAnalysis.zipfSlope(Tables(s, d))),
     "q_length_band" -> ((s, d) => TextAnalysis.lengthBandFilter(Tables(s, d))),
@@ -728,7 +720,7 @@ object SparkEntry {
       // reference's tables.
       val t = Tables(s, d)
       // metadata.txt is the write's LAST step, so it doubles as the marker
-      val dir = roundtripDir("graft_csv", d, "metadata.txt") { out =>
+      val dir = roundtripDir(s, "graft_csv", d, "metadata.txt") { out =>
         CsvMetadataSource.writeTables(out, Seq(
           "ref_orders" -> t.orders.select(
             col("o_orderkey").cast("int"), col("o_custkey").cast("int")),
@@ -748,7 +740,7 @@ object SparkEntry {
       val t = Tables(s, d)
       // _SUCCESS is the committer's completion marker — a bare dir-exists
       // check would trust a crash-interrupted partial write forever
-      val dir = roundtripDir("graft_jsonl", d, "_SUCCESS") { out =>
+      val dir = roundtripDir(s, "graft_jsonl", d, "_SUCCESS") { out =>
         t.documents.write.mode("overwrite").json(out)
       }
       val docs = JsonlCorpus.clean(
@@ -761,7 +753,7 @@ object SparkEntry {
       // the original parquet — equality proves the ORC path is lossless,
       // including the string payloads the hash covers.
       val t = Tables(s, d)
-      val dir = roundtripDir("graft_orc", d, "_SUCCESS") { out =>
+      val dir = roundtripDir(s, "graft_orc", d, "_SUCCESS") { out =>
         t.documents.write.mode("overwrite").orc(out)
       }
       s.read.orc(dir)
@@ -782,7 +774,7 @@ object SparkEntry {
       // logical-type round trip and the double payloads the sum covers.
       import graft.sources.AvroTables
       val t = Tables(s, d)
-      val dir = roundtripDir("graft_avro", d, "_SUCCESS") { out =>
+      val dir = roundtripDir(s, "graft_avro", d, "_SUCCESS") { out =>
         AvroTables.write(t.orders, out)
       }
       AvroTables.read(s, dir)
@@ -804,7 +796,7 @@ object SparkEntry {
       // CONTENT fingerprint (path + per-file size/mtime — same triple as
       // roundtripDir): a dataset regenerated at the same path gets fresh
       // bucketed tables instead of the catalog serving stale data
-      val fp = datasetFingerprint(d)
+      val fp = datasetFingerprint(s, d)
       val (liT, orT) = (s"li_bkt_$fp", s"or_bkt_$fp")
       val base = System.getProperty("java.io.tmpdir") + s"/graft_bktj_$fp"
       if (!s.catalog.tableExists(liT))
@@ -830,7 +822,7 @@ object SparkEntry {
       // the original parquet — the hash match proves the connector reads
       // the format losslessly
       val t = Tables(s, d)
-      val dir = roundtripDir("graft_refcsv", d, "t1.csv") { out =>
+      val dir = roundtripDir(s, "graft_refcsv", d, "t1.csv") { out =>
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
         java.nio.file.Files.write(java.nio.file.Paths.get(out, "metadata.txt"),
           "<begin_table>\nt1\na\nb\n<end_table>\n".getBytes("UTF-8"))
@@ -855,7 +847,7 @@ object SparkEntry {
       // re-derives it from the original table, proving the merged read
       // loses nothing and nulls exactly the absent columns.
       val t = Tables(s, d)
-      val dir = roundtripDir("graft_evo", d, "b2/_SUCCESS") { out =>
+      val dir = roundtripDir(s, "graft_evo", d, "b2/_SUCCESS") { out =>
         t.documents.filter(col("doc_id") % 2 === 0)
           .select("doc_id", "lang", "n_chars")
           .write.mode("overwrite").parquet(out + "/b1")
@@ -903,13 +895,13 @@ object SparkEntry {
       // (r13 verdict item 4 — the cut call re-ran the full finder every
       // invocation); the cut attaches and splices. The oracle re-derives
       // spans from scratch, so the hash is unchanged.
-      val spansDir = roundtripDir("graft_dupspans", d, "_SUCCESS") { out =>
+      val spansDir = roundtripDir(s, "graft_dupspans", d, "_SUCCESS") { out =>
         graft.operators.SuffixDedup.duplicateSubstrings(Tables(s, d).documents)
           .repartition(4).write.mode("overwrite").parquet(out)
       }
       graft.operators.SuffixDedup.cutDuplicateSpans(
         Tables(s, d).documents,
-        prebuiltSpans = Some(s.read.parquet(spansDir)))
+        prebuiltSpans = Some(Tables.scan(s, spansDir)))
     }),
     "q_sample_stratified" -> ((s, d) => {
       import graft.operators.Sampling

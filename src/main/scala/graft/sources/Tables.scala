@@ -1,8 +1,12 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.functions.{expr, timestamp_micros}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Parquet-backed table catalog.
   *
@@ -12,6 +16,12 @@ import org.apache.spark.sql.types.LongType
   * The Spark-native equivalent is a columnar parquet scan per table: Catalyst
   * gets predicate pushdown, column pruning and partition pruning for free,
   * which is the scan behavior we want at 100 TB.
+  *
+  * Each table's schema is resolved once per file stamp, the way a metastore
+  * serves it: every read goes through [[Tables.scan]], so after the first
+  * read of a table (e.g. in [[graft.Engine.register]]) building a query
+  * runs no schema-inference job. See [[Tables.scan]] for what is keyed,
+  * when a schema is inferred again, and what is never cached.
   */
 final case class Tables(spark: SparkSession, dir: String,
                         overrides: Map[String, DataFrame] = Map.empty) {
@@ -19,7 +29,7 @@ final case class Tables(spark: SparkSession, dir: String,
     * Overrides let callers (and tests) substitute any source that yields the
     * same schema — the operators only see DataFrames. */
   def table(name: String): DataFrame =
-    overrides.getOrElse(name, spark.read.parquet(s"$dir/$name.parquet"))
+    overrides.getOrElse(name, Tables.scan(spark, s"$dir/$name.parquet"))
 
   /** A copy of this catalog with one table substituted. */
   def withTable(name: String, df: DataFrame): Tables =
@@ -71,4 +81,66 @@ final case class Tables(spark: SparkSession, dir: String,
 object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** The quick-check stamp of a path: its qualified form plus the
+    * (path, length, mtime) triple of every file under it — rsync's
+    * quick-check. Regenerated data at the same path changes the stamp. */
+  final case class Stamp(root: String, files: Seq[(String, Long, Long)])
+
+  /** List `path` (a file or a directory tree) with the Hadoop FileSystem
+    * API, so any scheme works; None when it cannot be listed (e.g. it does
+    * not exist). */
+  def stamp(spark: SparkSession, path: String): Option[Stamp] =
+    try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val it = fs.listFiles(p, true)
+      val files = Vector.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(Stamp(fs.makeQualified(p).toString, files.result().sortBy(_._1)))
+    } catch { case _: java.io.IOException => None }
+
+  /** Every SQLConf parquet schema inference reads: the schema converter's
+    * settings plus which footers are merged. */
+  private val schemaConfs: Seq[String] = Seq(
+    SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+    SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+    SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, SQLConf.PARQUET_FIELD_ID_READ_ENABLED,
+    SQLConf.PARQUET_IGNORE_VARIANT_ANNOTATION,
+    SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION,
+    SQLConf.VARIANT_ALLOW_READING_SHREDDED, SQLConf.PARQUET_SCHEMA_MERGING_ENABLED,
+    SQLConf.PARQUET_SCHEMA_RESPECT_SUMMARIES).map(_.key)
+
+  private val schemas = new ConcurrentHashMap[(String, Seq[String]), (Stamp, StructType)]()
+
+  /** An option-less parquet read of one path, with its schema resolved once
+    * per file stamp.
+    *
+    * Keyed on the qualified path plus every SQLConf the inference reads
+    * (so `events` under `nanosAsLong` on and off are two entries); the
+    * value is the [[Stamp]] and the inferred schema. A hit reads with
+    * `.schema(cached)`, so Spark skips inference and no job runs. A miss,
+    * or a stamp that differs (the table was rewritten), infers again and
+    * replaces the entry: one entry per path and conf set, so rewriting a
+    * table in place does not grow the map in a long-lived JVM. Only the `StructType` is held — never a
+    * DataFrame or file index (a shared relation would share exprIds
+    * between self-joins and serve stale listings). A path that cannot be
+    * listed falls through to the plain read, which raises Spark's own
+    * `AnalysisException` for a missing path. */
+  def scan(spark: SparkSession, path: String): DataFrame =
+    stamp(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(st) =>
+        val key = (st.root, schemaConfs.map(k => spark.conf.getOption(k).orNull))
+        Option(schemas.get(key)).filter(_._1 == st) match {
+          case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            schemas.put(key, (st, df.schema))
+            df
+        }
+    }
 }
