@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Differential-test runner: executes generated reference-grammar SQL
   * (tools/gen_fuzz_sql.py) through [[Engine.sql]] and dumps each result for
   * the DuckDB comparison (tools/check_fuzz.py). Exercises the SQL surface
@@ -15,14 +13,7 @@ import org.apache.spark.sql.SparkSession
 object FuzzRunner {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, queriesJson, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.diagnostic()
     val engine = Engine(spark, sfDir)
     new java.io.File(outDir).mkdirs()
 

@@ -23,6 +23,18 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .withExtensions(new GraftExtensions)
 
+  /** The session of the diagnostic mains: [[builder]] on
+    * `local[SPARK_GRAFT_CPUS]` (default: every core) with the UI off and
+    * WARN logging. */
+  def diagnostic(): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(
+      Runtime.getRuntime.availableProcessors())(_.toInt)
+    val spark = builder(s"local[$cpus]", cpus)
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Build the session and open a data directory as an [[Engine]].
     *
     * Note: registering the `events` table sets the session-level

@@ -1,16 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named queries to files — the plan
   * evidence the optimization rounds commit under `plans/r<N>/`.
   *
   * Usage: sbt "runMain graft.PlanDump <outDir> <suffix> q_a,q_b,..."
-  * writes `<outDir>/<query>_<suffix>.txt`. Same session shape as the bench
-  * (local[$SPARK_GRAFT_CPUS], shuffle partitions = cpus, AQE on) so the
-  * initial plans match what the bench executes. Note: eager operators
-  * (localCheckpoint/persist-based) execute while building, so the dumped
-  * plan is the final composed plan the noop sink runs.
+  * writes `<outDir>/<query>_<suffix>.txt`, on [[GraftSession.diagnostic]].
+  * Note: eager operators (localCheckpoint/persist-based) execute while
+  * building, so the dumped plan is the final composed plan the noop sink
+  * runs.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -18,15 +15,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.diagnostic()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

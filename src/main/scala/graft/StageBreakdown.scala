@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.concurrent.TrieMap
 /** Per-stage breakdown of ONE query under the bench protocol (warmup,
   * cache/RDD drop, timed noop write): stage id, task count, summed task
@@ -13,12 +12,7 @@ object StageBreakdown {
   def main(args: Array[String]): Unit = {
     val qname = args.headOption.getOrElse("q_hits")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.diagnostic()
     // warmup
     SparkEntry.queries(qname)(spark, sfDir).write.format("noop").mode("overwrite").save()
     spark.catalog.clearCache()

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage/per-task evidence harness behind PLANS.md's "scheduling
   * floor" claims (r13 verdict item 2: q_hits/q_pagerank got a
@@ -66,15 +65,7 @@ object StageEvidence {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.diagnostic()
     val defaults = Seq("q_ann_graph", "q_dedup_cut", "q_dup_substrings",
       "q_label_prop", "q_kcore", "q_rbo", "q_hybrid_search", "q_percentiles",
       "q_multi_distinct", "q_bm25_search", "q_triangles", "q_hits", "q_pagerank")
@@ -100,7 +91,7 @@ object StageEvidence {
       spark.sparkContext.removeSparkListener(c)
       val taskS = c.stageTaskMs.values.sum / 1e3
       val maxStageS = (c.stageTaskMs.values ++ Seq(0L)).max / 1e3
-      val util = taskS / (wall * cpus.toInt)
+      val util = taskS / (wall * spark.sparkContext.defaultParallelism)
       val idle = c.idleMs(w0, w1).toDouble / math.max(1L, w1 - w0)
       println(f"| $name | $wall%.2f | ${c.jobs.get()} | ${c.stageTaskMs.size} | ${c.tasks} | $taskS%.2f | $maxStageS%.2f | $util%.3f | $idle%.2f |")
       dropLingeringRdds()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.SuffixDedup
 
@@ -28,15 +27,7 @@ object SuffixCrossover {
     val scales = args.headOption.map(_.split(",").toSeq.map(_.toInt))
       .getOrElse(Seq(1, 3, 10))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.diagnostic()
     val base = graft.sources.Tables(spark, sfDir).documents
       .select("doc_id", "text")
     def dropRdds(): Unit =

@@ -1,15 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.Arms
 
 /** DataFrame-only connected components via alternating large-star /
   * small-star (Kiveris et al., "Connected Components in MapReduce and
   * Beyond", SoCC'14 — public algorithm, implemented from the paper).
   *
-  * Exists as the de-risked twin of the GraphX path in
-  * [[Dedup.nearDupGroups]]: GraphX is in maintenance mode upstream, and
-  * this formulation needs nothing but joins + aggregations, so it runs on
+  * The component engine of [[Dedup.nearDupGroups]] (GraphX, in
+  * maintenance mode upstream, is its test-scope reference): this
+  * formulation needs nothing but joins + aggregations, so it runs on
   * any Spark and benefits from Catalyst/AQE (skew-join splitting on hot
   * hubs). Converges in O(log n) rounds — not O(diameter) like naive label
   * propagation — because each large-star round halves tall trees.
@@ -22,18 +23,6 @@ import org.apache.spark.sql.functions._
   * edge set.
   */
 object ConnectedComponents {
-
-  /** Max collected edge count for the driver union-find arm (r19): below
-    * it, components are solved in one collect + one parallelize instead of
-    * O(log n) distributed rounds. The distributed loop costs ~8 scheduler
-    * stages PLUS two driver actions PER ROUND, which on the near-dup edge
-    * sets (thousands of rows at sf0.1) is pure stage floor — measured 2-3 s
-    * of wall per caller against milliseconds of actual work. 2M edges is
-    * ~200 MB of transient driver Rows, the same bounded-state license as
-    * the senSlope/centroid collects; past it the alternating-star loop is
-    * unchanged (the 100 TB arm). Conf-gated so specs can force either arm. */
-  private def driverMaxEdges(edges: DataFrame): Long =
-    edges.sparkSession.conf.get("spark.graft.cc.driverMaxEdges", "2000000").toLong
 
   /** Star-contract the edge list to (node, component-min) pairs.
     *
@@ -53,8 +42,17 @@ object ConnectedComponents {
     val ecp = edges
       .select(col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))
       .localCheckpoint()
-    val nEdges = ecp.count()
-    if (nEdges <= driverMaxEdges(edges)) return runOnDriver(ecp)
+    // driver union-find arm (r19): up to [[Arms.CcDriverMaxEdges]] edges
+    // (~200 MB of transient driver Rows — the same bounded-state license
+    // as the senSlope/centroid collects), components are solved in one
+    // bounded collect + one local relation instead of O(log n)
+    // distributed rounds. The distributed loop costs ~8 scheduler stages
+    // PLUS two driver actions PER ROUND, which on the near-dup edge sets
+    // (thousands of rows at sf0.1) is pure stage floor — measured 2-3 s of
+    // wall per caller against milliseconds of actual work. Past the cap
+    // the alternating-star loop below is unchanged (the 100 TB arm).
+    val collected = Arms.collectBounded("cc.driver", ecp, Arms.CcDriverMaxEdges)
+    if (collected.isDefined) return runOnDriver(ecp, collected.get)
     // every node mentioned by ANY edge — including nodes whose only edges
     // are self-loops, which the contraction below never sees (they'd
     // otherwise be silently dropped from the output, breaking the
@@ -132,9 +130,8 @@ object ConnectedComponents {
     * arms are bit-equal (spec-pinned, including the GraphX differential).
     * `ecp` is already checkpointed, so the collect never re-runs the
     * caller's candidate/verify pipeline. */
-  private def runOnDriver(ecp: DataFrame): DataFrame = {
+  private def runOnDriver(ecp: DataFrame, rows: Array[Row]): DataFrame = {
     val spark = ecp.sparkSession
-    val rows = ecp.collect()
     val idx = new java.util.HashMap[Long, Integer](rows.length * 2)
     val ids = new scala.collection.mutable.ArrayBuffer[Long]()
     def nodeOf(x: Long): Int = {

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Arms
 import graft.functions.HashFunctions
 import graft.sources.Tables
 
@@ -281,16 +282,15 @@ object Dedup {
     * per 128 KB of plan-stats bytes — these kernels are CPU-heavy per byte,
     * far finer than a 128 MB scan split — capped at the core count; an
     * explicit numbered repartition, so AQE never re-coalesces it). Above
-    * 64 MB of stats the frame is left alone: the scan is already wide and
-    * re-shuffling corpus text costs more than it saves. Results are
-    * unchanged — partitioning never feeds any downstream semantics. */
-  private[graft] def kernelSpread(docs: DataFrame): DataFrame = {
-    val bytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes > BigInt(64L << 20)) docs
+    * [[Arms.KernelSpreadMaxBytes]] of stats the frame is left alone: the
+    * scan is already wide and re-shuffling corpus text costs more than it
+    * saves. Results are unchanged — partitioning never feeds any
+    * downstream semantics. */
+  private[graft] def kernelSpread(docs: DataFrame): DataFrame =
+    if (!Arms.small("dedup.kernelSpread", docs, Arms.KernelSpreadMaxBytes)) docs
     else docs.repartition(math.max(1L, math.min(
       docs.sparkSession.sparkContext.defaultParallelism.toLong,
-      (bytes >> 17).toLong)).toInt, col("doc_id"))
-  }
+      Arms.statsBytes(docs) >> 17)).toInt, col("doc_id"))
 
   def jaccardPairs(docs: DataFrame, minJaccard: Double,
                    maxDf: Option[Long] = None): DataFrame =
@@ -548,32 +548,17 @@ object Dedup {
     * `doc_id === group_id` afterwards yields the canonical survivor set.
     * Edge count is bounded by the LSH candidate volume, not n².
     *
-    * Two interchangeable component engines (spec-asserted equal):
-    *  - [[ConnectedComponents]] alternating large-star/small-star on plain
-    *    DataFrames — the DEFAULT since r20: it carries the r19 driver
-    *    union-find arm (one collect instead of a Pregel stage chain on
-    *    edge sets under the 2M gate — the GraphX path paid ~12 Pregel/
-    *    VertexRDD stages per call in every caller's breakdown), is AQE-
-    *    aware at scale, and GraphX is in maintenance mode upstream;
-    *  - GraphX Pregel (`useGraphx = true`) — kept as the differential
-    *    witness the spec compares against. */
+    * Components come from [[ConnectedComponents]] (alternating
+    * large-star/small-star on plain DataFrames, with the bounded driver
+    * union-find arm on small edge sets — the GraphX Pregel engine it
+    * replaced paid ~12 Pregel/VertexRDD stages per call; GraphX stays the
+    * spec's reference). */
   def nearDupGroups(t: Tables, w: Int = 2, minEstJaccard: Double = 0.5,
-                    useGraphx: Boolean = false,
                     maxBucketSize: Option[Long] = None): DataFrame = {
-    val spark = t.spark
-    import spark.implicits._
     val pairs = minhashCandidatesCore(t, w = w, minEstJaccard = minEstJaccard,
       maxBucketSize = maxBucketSize)
-    val components =
-      if (useGraphx) {
-        import org.apache.spark.graphx.Graph
-        val edges = pairs.select("doc_a", "doc_b").as[(Long, Long)].rdd
-        Graph.fromEdgeTuples(edges, defaultValue = 1)
-          .connectedComponents().vertices // (doc_id, min doc_id in component)
-          .toDF("doc_id", "group_id")
-      } else
-        ConnectedComponents.run(pairs.select("doc_a", "doc_b"))
-          .toDF("doc_id", "group_id")
+    val components = ConnectedComponents.run(pairs.select("doc_a", "doc_b"))
+      .toDF("doc_id", "group_id")
     t.documents.select("doc_id")
       .join(components, Seq("doc_id"), "left")
       .select(col("doc_id"),

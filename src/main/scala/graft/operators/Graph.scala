@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Arms
 import graft.sources.Tables
 
 /** Graph analytics over relationships mined from the relational tables.
@@ -38,15 +39,15 @@ object Graph {
     * term, rank mass is conserved by construction. */
   def pageRank(t: Tables, iters: Int = 3, d: Double = 0.85,
                prebuiltPairs: Option[DataFrame] = None): DataFrame = {
-    // conf-gated driver arm (r20, the CC/PPR pattern): below the
-    // plan-stats gate the unrolled 3-round join/agg chain collapses to one
-    // pair collect + a driver power iteration; above it the distributed
-    // plan below is byte-for-byte the 100 TB arm. Spec-pinned equal
-    // (GraphSpec), same tolerance discipline as the small/large layout
-    // spec — the arms sum per-node contributions in different orders.
-    val pairsForGate = prebuiltPairs.getOrElse(tradePairs(t))
-    if (graphDriverSmall(pairsForGate))
-      return pageRankOnDriver(pairsForGate, iters, d)
+    // driver arm ([[driverPairs]], the CC/PPR pattern): the unrolled
+    // 3-round join/agg chain collapses to one bounded pair collect + a
+    // driver power iteration; otherwise the distributed plan below is
+    // byte-for-byte the 100 TB arm. Spec-pinned equal (GraphSpec), same
+    // tolerance discipline as the small/large layout spec — the arms sum
+    // per-node contributions in different orders.
+    val collected = driverPairs("graph.pageRank", prebuiltPairs.getOrElse(tradePairs(t)))
+    if (collected.isDefined)
+      return pageRankOnDriver(t.spark, collected.get, iters, d)
     val (ranks, release) = pageRankPlan(t, iters, d, prebuiltPairs)
     // eager: materializes the node-cardinality result, after which the
     // returned plan reads the checkpoint and holds no reference to the
@@ -163,7 +164,7 @@ object Graph {
         struct(s2.as("src"), c2.as("dst")),
         struct(c2.as("src"), s2.as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    if (tradeGraphSmall(pairs)) {
+    if (Arms.small("graph.tradeEdgesLayout", pairs, Arms.GraphCacheMinBytes)) {
       // COST-BASED layout switch — the r16 HITS recipe applied to the
       // undirected family (q_pagerank / q_ppr / q_kcore; r16 verdict item
       // 2). Below the plan-stats threshold the edge table stays a LAZY
@@ -189,12 +190,15 @@ object Graph {
     }
   }
 
-  private def formatRanks(ranks: DataFrame): DataFrame = ranks
-    .select(
-      concat(when(col("node") % 2 === 0, "s").otherwise("c"),
-        shiftright(col("node"), 1).cast("string")).as("node"),
-      round(col("rank"), 6).as("rank_x_n"))
+  /** Output rows keyed by node display name, shared by the driver and
+    * distributed arms: `score` over a packed `node` id column. */
+  private def formatNodes(df: DataFrame, score: Column): DataFrame = df
+    .select(concat(when(col("node") % 2 === 0, "s").otherwise("c"),
+      shiftright(col("node"), 1).cast("string")).as("node"), score)
     .orderBy("node")
+
+  private def formatRanks(ranks: DataFrame): DataFrame =
+    formatNodes(ranks, round(col("rank"), 6).as("rank_x_n"))
 
   private[graft] def pageRankPlan(
       t: Tables, iters: Int, d: Double,
@@ -282,16 +286,6 @@ object Graph {
       df.sparkSession.sparkContext.defaultParallelism.toLong,
       df.queryExecution.optimizedPlan.stats.sizeInBytes.toLong / (1L << 20))).toInt
 
-  private[graft] def tradeGraphSmall(pairs: DataFrame): Boolean = {
-    // session-conf override first (specs pin the LARGE-graph plan shape by
-    // setting it to 0 in-JVM — sys.env is immutable per process), env next
-    val minBytes = pairs.sparkSession.conf
-      .getOption("spark.graft.graphCacheMinBytes")
-      .orElse(sys.env.get("SPARK_GRAFT_GRAPH_CACHE_MIN_BYTES"))
-      .getOrElse((256L * 1024 * 1024).toString).toLong
-    pairs.queryExecution.optimizedPlan.stats.sizeInBytes <= minBytes
-  }
-
   private def directedTradeEdges(t: Tables,
       prebuiltPairs: Option[DataFrame] = None): (DataFrame, DataFrame, () => Unit) = {
     // a prebuilt [[tradePairs]] artifact is already distinct — only the
@@ -310,7 +304,7 @@ object Graph {
     // per round is the dominant cost — the round-8 verdict defect) the
     // edge list caches TWICE, on src for the authority step and on dst
     // for the hub step, and the per-round joins plan exchange-free.
-    if (tradeGraphSmall(rawPairs)) {
+    if (Arms.small("graph.directedLayout", rawPairs, Arms.GraphCacheMinBytes)) {
       (rawPairs, rawPairs, () => ())
     } else {
       val edgesS = rawPairs.repartition(col("src")).persist()
@@ -330,15 +324,15 @@ object Graph {
     // the loop seeds the authority table on its first round; iters < 1
     // would leave it null and NPE deep in the output union
     require(iters >= 1, s"hits: iters must be >= 1, got $iters")
-    // conf-gated driver arm (r20, the CC/PPR pattern): the raw recurrence
+    // driver arm ([[driverPairs]], the CC/PPR pattern): the raw recurrence
     // is exact integer arithmetic, so the driver computes the identical
     // scores in Long and the float-sensitive normalization runs through
     // the UNCHANGED formatHits expressions over a local frame — bit-equal
     // (spec-pinned). Overflow past 2^53 falls back to the distributed arm
     // so the l2NormCol exactness guard fires exactly as before.
-    val pairsForGate = prebuiltPairs.getOrElse(tradePairs(t))
-    if (graphDriverSmall(pairsForGate)) {
-      val arm = hitsOnDriver(pairsForGate, iters)
+    val collected = driverPairs("graph.hits", prebuiltPairs.getOrElse(tradePairs(t)))
+    if (collected.isDefined) {
+      val arm = hitsOnDriver(t.spark, collected.get, iters)
       if (arm.isDefined) return arm.get
     }
     val (edgesS, edgesD, release) = directedTradeEdges(t, prebuiltPairs)
@@ -365,9 +359,8 @@ object Graph {
     * operator's own deferred-normalization contract). Returns None on
     * any overflow past 2^53 so the caller's distributed arm — and its
     * loud l2NormCol guard — take over unchanged. */
-  private def hitsOnDriver(pairs: DataFrame, iters: Int): Option[DataFrame] = {
-    val spark = pairs.sparkSession
-    val pr = pairs.select(col("s"), col("c")).collect()
+  private def hitsOnDriver(spark: SparkSession, pr: Array[Row],
+                           iters: Int): Option[DataFrame] = {
     val m = pr.length
     val src = new Array[Long](m); val dst = new Array[Long](m)
     var j = 0
@@ -584,7 +577,7 @@ object Graph {
     val deg = edges.select(col("pa").as("n")).unionAll(
         edges.select(col("pb").as("n")))
       .groupBy("n").agg(count(lit(1)).as("deg"))
-    val small = tradeGraphSmall(edges)
+    val small = Arms.small("graph.triangleJoins", edges, Arms.GraphCacheMinBytes)
     // small graph: the degree table is node-cardinality — broadcast it so
     // BOTH orientation joins run map-side at the edge checkpoint's width.
     // The shuffle form AQE-coalesced the tiny-byte orientation stage to 2
@@ -683,7 +676,7 @@ object Graph {
     * partial count maps instead of a (src, label)-keyed count shuffle
     * plus a second src-keyed reduction. Round 1 never joins at all:
     * labels START as node ids, so the first plurality is `mode(dst)`
-    * directly. Below the plan-stats gate ([[tradeGraphSmall]]) the edge
+    * directly. Below [[Arms.GraphCacheMinBytes]] of plan-stats the edge
     * table stays a lazy scan (AQE broadcasts the node-cardinality label
     * table; identical scan subtrees dedupe); above it (100 TB: labels
     * too big to broadcast) the edge list lays out checkpointed on `dst`
@@ -694,24 +687,26 @@ object Graph {
                        prebuiltEdges: Option[DataFrame] = None): DataFrame = {
     require(iters >= 1, s"labelPropagation: iters must be >= 1, got $iters")
     val e = prebuiltEdges.getOrElse(coPurchaseEdges(t))
-    // conf-gated driver arm (r20, the CC/PPR pattern; r18/r19 verdicts'
+    // driver arm ([[driverPairs]], the CC/PPR pattern; r18/r19 verdicts'
     // standing q_label_prop item). The plurality fixpoint is exact integer
     // arithmetic with the LongMode tie-break, so the arms are bit-equal
-    // (spec-pinned); above the gate the distributed loop is unchanged.
-    if (graphDriverSmall(e)) return labelPropOnDriver(e, iters)
+    // (spec-pinned); otherwise the distributed loop is unchanged.
+    val collected = driverPairs("graph.labelPropagation", e)
+    if (collected.isDefined) return labelPropOnDriver(t.spark, collected.get, iters)
+    val small = Arms.small("graph.labelPropLayout", e, Arms.GraphCacheMinBytes)
     // mirror in ONE scan: unionAll of two projections re-reads the edge
     // source twice (16 fixed-cost tasks on the 8-file artifact for 5 MB);
     // the explode emits both directions per input row in a single pass.
     // A small edge table also narrows the scan to its byte-derived width
     // BEFORE the explode (8 file-splits of a 5 MB artifact are ~7 tasks
     // of setup for one task of reading); a large one keeps its splits.
-    val eScan = if (tradeGraphSmall(e)) e.coalesce(smallSpread(e)) else e
+    val eScan = if (small) e.coalesce(smallSpread(e)) else e
     val ebRaw = eScan.select(explode(array(
         struct(col("pa").as("src"), col("pb").as("dst")),
         struct(col("pb").as("src"), col("pa").as("dst")))).as("_e"))
       .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
     val (eb, releaseEb) =
-      if (tradeGraphSmall(e)) {
+      if (small) {
         // small mode lays the edge CACHE out on src — the AGGREGATION
         // key — at the byte-derived width ([[smallSpread]]): the label
         // table broadcasts (node-cardinality), a broadcast join preserves
@@ -738,7 +733,6 @@ object Graph {
     var labels = eb.groupBy(col("src").as("node"))
       .agg(min(col("dst")).as("label"))
       .localCheckpoint()
-    val small = tradeGraphSmall(e)
     for (_ <- 2 to iters) {
       // small mode HINTS the broadcast: a checkpointed label table
       // reports unknown size, so the planner would otherwise place a
@@ -769,9 +763,8 @@ object Graph {
     * its neighbors with ties to the LOWEST label (exactly
     * [[graft.functions.LongModeAgg]]'s pick). Integer arithmetic
     * throughout — bit-equal to the distributed loop. */
-  private def labelPropOnDriver(e: DataFrame, iters: Int): DataFrame = {
-    val spark = e.sparkSession
-    val rows = e.select(col("pa"), col("pb")).collect()
+  private def labelPropOnDriver(spark: SparkSession, rows: Array[Row],
+                                iters: Int): DataFrame = {
     val m = rows.length
     // dense-index the nodes and lay the mirrored adjacency out as CSR —
     // the co-purchase graph is node-small but edge-heavy (1.2M pairs at
@@ -863,16 +856,16 @@ object Graph {
                            teleport: Double = 0.15,
                            damp: Double = 0.85,
                            prebuiltPairs: Option[DataFrame] = None): DataFrame = {
-    // conf-gated driver arm (r20 — the ConnectedComponents r19 pattern
-    // applied to the other iterative fixpoint the verdict named): below
-    // the plan-stats gate the 3-round join/agg/union chain — ~20
-    // scheduler stages on a few-MB pair list — collapses to one pair
-    // collect + a driver power iteration + one local result relation.
-    // Above the gate NOTHING changes: the distributed loop below is the
-    // 100 TB arm. Arms are output-equal (spec-pinned, GraphSpec).
-    val pairsForGate = prebuiltPairs.getOrElse(tradePairs(t))
-    if (graphDriverSmall(pairsForGate))
-      return pprOnDriver(t, pairsForGate, nSeeds, iters, teleport, damp)
+    // driver arm ([[driverPairs]] — the ConnectedComponents r19 pattern
+    // applied to the other iterative fixpoint the verdict named): the
+    // 3-round join/agg/union chain — ~20 scheduler stages on a few-MB
+    // pair list — collapses to one bounded pair collect + a driver power
+    // iteration + one local result relation. Otherwise NOTHING changes:
+    // the distributed loop below is the 100 TB arm. Arms are output-equal
+    // (spec-pinned, GraphSpec).
+    val collected = driverPairs("graph.ppr", prebuiltPairs.getOrElse(tradePairs(t)))
+    if (collected.isDefined)
+      return pprOnDriver(t, collected.get, nSeeds, iters, teleport, damp)
     val (edgesDeg, release) = tradeEdgesDeg(t, prebuiltPairs)
     val seeds = t.lineitem.select(col("l_suppkey").cast("long").as("k"))
       .distinct().orderBy("k").limit(nSeeds)
@@ -893,30 +886,20 @@ object Graph {
         .unionByName(seeds.select(col("node"), lit(teleport).as("v")))
         .groupBy("node").agg(sum("v").as("rank"))
     }
-    val out = ranks.select(
-        concat(when(col("node") % 2 === 0, "s").otherwise("c"),
-          shiftright(col("node"), 1).cast("string")).as("node"),
-        round(col("rank"), 6).as("ppr"))
-      .orderBy("node")
-      .localCheckpoint()
+    val out = formatNodes(ranks, round(col("rank"), 6).as("ppr")).localCheckpoint()
     seeds.unpersist(blocking = false)
     release()
     out
   }
 
-  /** Driver-arm gate for the iterative trade-graph operators: true when
-    * the distinct pair list's PLAN-STATS size (free to read — no job) sits
-    * under `spark.graft.graph.driverMaxBytes` (default 64 MB ≈ a few
-    * million pairs — the same bounded-driver-state license as the CC
-    * union-find arm and the senSlope/centroid collects). Session-conf
-    * override first so specs can pin the large-graph arm in-JVM. */
-  private[graft] def graphDriverSmall(pairs: DataFrame): Boolean = {
-    val maxBytes = pairs.sparkSession.conf
-      .getOption("spark.graft.graph.driverMaxBytes")
-      .orElse(sys.env.get("SPARK_GRAFT_GRAPH_DRIVER_MAX_BYTES"))
-      .getOrElse((64L * 1024 * 1024).toString).toLong
-    pairs.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBytes
-  }
+  /** A pair list's first two (long) columns collected for an iterative
+    * graph operator's driver arm, or None for its distributed arm: the
+    * bounded collect of [[Arms.collectBounded]] under the graph budget
+    * (64 MB of plan-stats, 4M pairs at run time — the same
+    * bounded-driver-state license as the CC union-find arm). */
+  private def driverPairs(site: String, pairs: DataFrame): Option[Array[Row]] =
+    Arms.collectBounded(site, pairs.select(pairs.columns.take(2).map(col): _*),
+      Arms.GraphDriverMaxRows, Arms.GraphDriverMaxBytes)
 
   /** Driver power-iteration arm of [[personalizedPageRank]] — identical
     * recurrence over the collected pair list: pₖ(dst) gets
@@ -927,11 +910,11 @@ object Graph {
     * pair list). Output is minted through the identical packed-id
     * formatting expressions, so the two arms produce the same rows
     * (spec-pinned, including the rounded scores). */
-  /** Collected packed-id directed edge arrays (both directions per pair)
-    * plus per-src out-degrees — the shared input of the driver arms. */
-  private def collectPackedEdges(pairs: DataFrame)
+  /** Packed-id directed edge arrays (both directions per collected
+    * (s, c) pair) plus per-src out-degrees — the shared input of the
+    * driver arms. */
+  private def packedEdges(pr: Array[Row])
       : (Array[Long], Array[Long], scala.collection.mutable.HashMap[Long, Long]) = {
-    val pr = pairs.select(col("s"), col("c")).collect()
     val nE = pr.length * 2
     val src = new Array[Long](nE); val dst = new Array[Long](nE)
     var j = 0
@@ -950,10 +933,9 @@ object Graph {
     * recurrence (rankN' = (1−d) + d·Σ rankN/deg, rankN₀ ≡ 1 folded into
     * round 1 exactly as [[pageRankPlan]] does), minted through the same
     * [[formatRanks]] projection. */
-  private def pageRankOnDriver(pairs: DataFrame, iters: Int,
+  private def pageRankOnDriver(spark: SparkSession, pairs: Array[Row], iters: Int,
                                d: Double): DataFrame = {
-    val spark = pairs.sparkSession
-    val (src, dst, deg) = collectPackedEdges(pairs)
+    val (src, dst, deg) = packedEdges(pairs)
     val nE = src.length
     var p = scala.collection.mutable.HashMap.empty[Long, Double]
     for (round <- 1 to iters) {
@@ -979,14 +961,14 @@ object Graph {
     formatRanks(p.toSeq.toDF("node", "rank"))
   }
 
-  private def pprOnDriver(t: Tables, pairs: DataFrame, nSeeds: Int,
+  private def pprOnDriver(t: Tables, pairs: Array[Row], nSeeds: Int,
                           iters: Int, teleport: Double,
                           damp: Double): DataFrame = {
-    val spark = pairs.sparkSession
+    val spark = t.spark
     val seedArr = t.lineitem.select(col("l_suppkey").cast("long").as("k"))
       .distinct().orderBy("k").limit(nSeeds)
       .collect().map(_.getLong(0) * 2)
-    val (src, dst, deg) = collectPackedEdges(pairs)
+    val (src, dst, deg) = packedEdges(pairs)
     val nE = src.length
     var p = scala.collection.mutable.HashMap.empty[Long, Double]
     seedArr.foreach(s => p.update(s, 1.0))
@@ -1011,12 +993,7 @@ object Graph {
       p = next
     }
     import spark.implicits._
-    p.toSeq.toDF("node", "rank")
-      .select(
-        concat(when(col("node") % 2 === 0, "s").otherwise("c"),
-          shiftright(col("node"), 1).cast("string")).as("node"),
-        round(col("rank"), 6).as("ppr"))
-      .orderBy("node")
+    formatNodes(p.toSeq.toDF("node", "rank"), round(col("rank"), 6).as("ppr"))
   }
 
   /** ADAMIC–ADAR LINK PREDICTION (Adamic & Adar 2003; evaluated for
@@ -1054,7 +1031,9 @@ object Graph {
     // below the plan-stats gate, coalesce the lazy scans to the
     // byte-derived width — the degree/expansion stages otherwise pay the
     // fixed per-task aggregate setup at one task per parquet split
-    val und = if (tradeGraphSmall(e)) undRaw.coalesce(smallSpread(e)) else undRaw
+    val und =
+      if (!Arms.small("graph.adamicAdarSpread", e, Arms.GraphCacheMinBytes)) undRaw
+      else undRaw.coalesce(smallSpread(e))
     val q = und.select(col("u").as("qn")).distinct()
       .orderBy("qn").limit(nQueries)
     val qz = und.join(broadcast(q), col("u") === col("qn"))
@@ -1109,13 +1088,13 @@ object Graph {
   def kCore(t: Tables, k: Int = 8, maxRounds: Int = 1000,
             prebuiltPairs: Option[DataFrame] = None): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
-    // conf-gated driver arm (r20, the CC/PPR pattern). The peel fixpoint
+    // driver arm ([[driverPairs]], the CC/PPR pattern). The peel fixpoint
     // is EXACT integer arithmetic, so the arms are bit-equal by
-    // construction (spec-pinned); above the gate the distributed loop
-    // below is unchanged.
-    val pairsForGate = prebuiltPairs.getOrElse(tradePairs(t))
-    if (graphDriverSmall(pairsForGate))
-      return kCoreOnDriver(pairsForGate, k, maxRounds)
+    // construction (spec-pinned); otherwise the distributed loop below is
+    // unchanged.
+    val collected = driverPairs("graph.kCore", prebuiltPairs.getOrElse(tradePairs(t)))
+    if (collected.isDefined)
+      return kCoreOnDriver(t.spark, collected.get, k, maxRounds)
     val (edgesDeg, release) = tradeEdgesDeg(t, prebuiltPairs)
     // one row per node: its full-graph degree (the window is per-src over
     // the src-laid-out cache, so the distinct collapses partition-locally)
@@ -1144,13 +1123,7 @@ object Graph {
         survivors = next
       }
     }
-    val out = survivors
-      .select(
-        concat(when(col("node") % 2 === 0, "s").otherwise("c"),
-          shiftright(col("node"), 1).cast("string")).as("node"),
-        col("deg").as("core_deg"))
-      .orderBy("node")
-      .localCheckpoint()
+    val out = formatNodes(survivors, col("deg").as("core_deg")).localCheckpoint()
     survivors.unpersist(blocking = false)
     release()
     out
@@ -1162,9 +1135,9 @@ object Graph {
     * Like the distributed loop, a kept node whose kept-neighbor count
     * drops to zero leaves the survivor set (degrees come from the
     * surviving edge list). Integer arithmetic throughout — bit-equal. */
-  private def kCoreOnDriver(pairs: DataFrame, k: Int, maxRounds: Int): DataFrame = {
-    val spark = pairs.sparkSession
-    val (src, dst, deg0) = collectPackedEdges(pairs)
+  private def kCoreOnDriver(spark: SparkSession, pairs: Array[Row], k: Int,
+                            maxRounds: Int): DataFrame = {
+    val (src, dst, deg0) = packedEdges(pairs)
     val nE = src.length
     var deg = deg0
     var rounds = 0
@@ -1188,12 +1161,7 @@ object Graph {
       }
     }
     import spark.implicits._
-    deg.toSeq.toDF("node", "deg")
-      .select(
-        concat(when(col("node") % 2 === 0, "s").otherwise("c"),
-          shiftright(col("node"), 1).cast("string")).as("node"),
-        col("deg").as("core_deg"))
-      .orderBy("node")
+    formatNodes(deg.toSeq.toDF("node", "deg"), col("deg").as("core_deg"))
   }
 
   /** Co-purchase edges kept only at a minimum pair support (number of

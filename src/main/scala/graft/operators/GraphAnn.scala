@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Arms
 import graft.functions.HashFunctions
 
 /** GRAPH-BASED ANN — the recall/latency frontier production vector
@@ -63,13 +64,6 @@ import graft.functions.HashFunctions
   * the appendable family member. SINGLE WRITER by contract; concurrent
   * readers are safe (meta commit is atomic). */
 object GraphAnn {
-
-  /** Max distinct frontier ids rendered as a literal `isin` predicate on
-    * the adjacency scan; larger frontiers rely on the broadcast
-    * frontier-assignment join alone (see the hop loop). Env-overridable
-    * so the spec can force both forms on one fixture. */
-  private[graft] def IsinFrontierMax: Int =
-    sys.env.getOrElse("SPARK_GRAFT_GANN_ISIN_MAX", "1024").toInt
 
   final case class Index(prefix: String, dir: String, entry: Long,
                          degree: Int, nNodes: Long) {
@@ -518,7 +512,7 @@ object GraphAnn {
   private[graft] def beamSearchWithCandidateCount(
       spark: SparkSession, idx: Index, queries: DataFrame,
       k: Int = 5, beam: Int = 16, maxHops: Int = 6,
-      isinMax: Int = IsinFrontierMax): (DataFrame, Long) = {
+      isinMax: Int = Arms.IsinFrontierMax): (DataFrame, Long) = {
     import spark.implicits._
     require(k <= beam, s"k=$k must be <= beam=$beam (the beam carries the result set)")
     val qv = queries.select(col("query_id"), col("q_emb")).cache()
@@ -557,22 +551,24 @@ object GraphAnn {
     }
     nScored += seed.length
     mergeBest(seed)
-    // conf-gated driver scoring arm (r20, the CC/graph driver-arm
-    // pattern): the hop LOOP is already driver-side — only the per-hop
-    // expand+score ran as a Spark job, so a 12-hop search paid ~12 job
-    // round-trips (~40-60 ms of scheduling each) to score a few thousand
-    // candidates. Below the adjacency table's plan-stats gate the whole
-    // adjacency collects ONCE and hops score on the driver through the
-    // SAME HashImpl.cosineF kernel the codegen'd expression calls —
-    // bit-identical floats, so beam decisions and the output pair set
-    // are unchanged (spec-pinned). Above the gate (the 100 TB regime)
+    // driver scoring arm (r20, the CC/graph driver-arm pattern): the hop
+    // LOOP is already driver-side — only the per-hop expand+score ran as
+    // a Spark job, so a 12-hop search paid ~12 job round-trips (~40-60 ms
+    // of scheduling each) to score a few thousand candidates. When the
+    // adjacency passes the bounded collect (graph plan-stats budget, row
+    // cap at run time) it collects ONCE and hops score on the driver
+    // through the SAME HashImpl.cosineF kernel the codegen'd expression
+    // calls — bit-identical floats, so beam decisions and the output pair
+    // set are unchanged (spec-pinned). Otherwise (the 100 TB regime)
     // every hop stays a bucket-pruned distributed probe, byte-for-byte.
-    val scoreOnDriver = Graph.graphDriverSmall(adj)
+    val adjRows = withBucketPruning(spark) {
+      Arms.collectBounded("graphAnn.driverScore",
+        adj.select(col("node_id"), col("neighbor_id"), col("n_emb")),
+        Arms.GraphAnnDriverMaxRows, Arms.GraphDriverMaxBytes)
+    }
+    val scoreOnDriver = adjRows.isDefined
     val adjMap: Map[Long, Array[(Long, org.apache.spark.sql.catalyst.util.ArrayData)]] =
-      if (!scoreOnDriver) Map.empty
-      else withBucketPruning(spark) {
-        adj.select(col("node_id"), col("neighbor_id"), col("n_emb")).collect()
-      }.groupBy(_.getLong(0)).map { case (n, rs) =>
+      adjRows.getOrElse(Array.empty).groupBy(_.getLong(0)).map { case (n, rs) =>
         n -> rs.map(r => (r.getLong(1),
           new org.apache.spark.sql.catalyst.util.GenericArrayData(
             r.getSeq[Float](2).toArray[Float]))).toArray
@@ -604,9 +600,6 @@ object GraphAnn {
       // identical by construction (fAssign's node_id set IS fIds; the
       // spec pins equality across the threshold), trading scan pruning
       // for a plan that stays flat in the batch size.
-      val adjFront =
-        if (fIds.length <= isinMax) adj.filter(col("node_id").isin(fIds: _*))
-        else adj
       val rawScored: Iterator[(Long, Long, Double)] =
         if (scoreOnDriver)
           frontier.iterator.flatMap { case (q, ns) =>
@@ -617,6 +610,10 @@ object GraphAnn {
                 .map { case (nb, e) => (q, nb, graft.functions.HashImpl.cosineF(qe, e)) })
           }
         else withBucketPruning(spark) {
+          val adjFront =
+            if (Arms.small(spark, "graphAnn.isin", fIds.length, isinMax, "rows"))
+              adj.filter(col("node_id").isin(fIds: _*))
+            else adj
           adjFront
             .join(broadcast(fAssign), "node_id")
             .join(broadcast(qv), Seq("query_id"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Arms
 import graft.functions.HashFunctions
 import graft.sources.Tables
 
@@ -974,24 +975,23 @@ object Similarity {
       .withColumn("rel", HashFunctions.cosineSim(col("q_emb"), col("embedding")))
     val wRel = Window.partitionBy(col("query_id"))
       .orderBy(col("rel").desc, col("neighbor_id").asc)
+    val shortlist = scored
+      .withColumn("_rn", row_number().over(wRel))
+      .filter(col("_rn") <= m)
+      .select(col("query_id"), col("neighbor_id"), col("rel"), col("embedding"))
     // Driver greedy arm (r20): everything below the shortlist window is
     // PARAMETER-bounded — m·nQueries rows by construction, independent of
     // corpus size (the scale story above: at real scale only the shortlist
     // generator changes). The distributed greedy loop paid ~7 checkpointed
-    // rounds of windows/joins on those ~200 rows; below the parameter gate
-    // the shortlist collects once and the identical greedy recurrence runs
-    // on the driver through the same HashImpl.cosineF kernel — identical
-    // floats, identical picks (spec-pinned vs the distributed loop).
-    val mmrDriverMaxRows = emb.sparkSession.conf
-      .getOption("spark.graft.mmr.driverMaxRows").map(_.toLong)
-      .getOrElse(100000L)
-    if (nQueries.toLong * m <= mmrDriverMaxRows) {
-      val rows = scored
-        .withColumn("_rn", row_number().over(wRel))
-        .filter(col("_rn") <= m)
-        .select(col("query_id"), col("neighbor_id"), col("rel"), col("embedding"))
-        .collect()
-      val picked = rows.groupBy(_.getLong(0)).toSeq.flatMap { case (qid, rs) =>
+    // rounds of windows/joins on those ~200 rows; when the shortlist fits
+    // the bounded collect it collects once and the identical greedy
+    // recurrence runs on the driver through the same HashImpl.cosineF
+    // kernel — identical floats, identical picks (spec-pinned vs the
+    // distributed loop).
+    val collected = Arms.collectBounded("mmr.driver", shortlist,
+      Arms.MmrDriverMaxRows)
+    if (collected.isDefined) {
+      val picked = collected.get.groupBy(_.getLong(0)).toSeq.flatMap { case (qid, rs) =>
         val cands = rs.map { r =>
           (r.getLong(1), r.getDouble(2),
             new org.apache.spark.sql.catalyst.util.GenericArrayData(
@@ -1030,11 +1030,7 @@ object Similarity {
           round(col("_score"), 6).as("mmr"))
         .orderBy("query_id", "rank")
     }
-    val cand = scored
-      .withColumn("_rn", row_number().over(wRel))
-      .filter(col("_rn") <= m)
-      .select(col("query_id"), col("neighbor_id"), col("rel"), col("embedding"))
-      .localCheckpoint() // sims + every greedy step read it
+    val cand = shortlist.localCheckpoint() // sims + every greedy step read it
     val sims = cand.select(col("query_id"), col("neighbor_id").as("ca"),
         col("embedding").as("_ea"))
       .join(cand.select(col("query_id"), col("neighbor_id").as("cb"),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Arms
 
 /** Sub-shingle EXACT duplicate-substring detection — the suffix-array
   * lineage of corpus dedup (Lee et al. 2021, "Deduplicating Training Data
@@ -75,14 +76,12 @@ object SuffixDedup {
     // its single corpus×L-byte exchange stops fitting a box — the r14
     // crossover table (PLANS.md) measured the widening form 23× the
     // direct cost at sf0.1 and still behind at ×30 corpus scale, with
-    // parity extrapolating to ~1 GB of text. Below the threshold
-    // (plan-stats estimate, free to read; env-overridable) run the
-    // direct derivation — row-identical by the spec's standing pin;
-    // above it, the widening build whose per-round state is fixed-width
-    // rank tuples and whose sharded mode is the 100 TB operating shape.
-    val directMax = sys.env.getOrElse(
-      "SPARK_GRAFT_SUFFIX_DIRECT_MAX_BYTES", (768L * 1024 * 1024).toString).toLong
-    if (docs.queryExecution.optimizedPlan.stats.sizeInBytes <= directMax)
+    // parity extrapolating to ~1 GB of text. Up to the threshold
+    // (plan-stats estimate, free to read) run the direct derivation —
+    // row-identical by the spec's standing pin; above it, the widening
+    // build whose per-round state is fixed-width rank tuples and whose
+    // sharded mode is the 100 TB operating shape.
+    if (Arms.small("suffixDedup.direct", docs, Arms.SuffixDirectMaxBytes))
       duplicateSubstringsDirect(docs, minLen, minDocs)
     else
       duplicateSubstringsWidening(docs, minLen, minDocs)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Arms
 
 /** Persisted INVERTED TEXT INDEX — the retrieval counterpart of
   * [[DedupIndex]] (fingerprints) and [[AnnIndex]] (embeddings): tf, df,
@@ -359,19 +360,16 @@ object TextIndex {
     * the semi-join doesn't). Above it (the 100 TB shape), the bucketed
     * catalog scans keep directory-level pruning — nTerms/nBuckets of the
     * index bytes touched — driven by the literal In over the collected
-    * query vocabulary (bounded by construction). Threshold ≈ the point
-    * where a per-bucket task has real work (~8 MB/bucket at the default
-    * 32-bucket spec); session conf first (specs pin the large shape),
-    * env next. */
+    * query vocabulary (bounded by construction). Threshold
+    * ([[Arms.TextIndexBucketedMinBytes]]) ≈ the point where a per-bucket
+    * task has real work (~8 MB/bucket at the default 32-bucket spec). */
   private def prunedPostings(spark: SparkSession, dir: String,
                              tables: Seq[String], schema: String,
                              qTerms: DataFrame): DataFrame = {
-    val minBucketed = spark.conf.getOption("spark.graft.textIndexBucketedMinBytes")
-      .orElse(sys.env.get("SPARK_GRAFT_TEXT_INDEX_BUCKETED_MIN_BYTES"))
-      .getOrElse((256L * 1024 * 1024).toString).toLong
     val bytes = tables.map(t =>
       IndexFiles.dirBytes(spark, new HPath(dir, t))).sum
-    if (bytes <= minBucketed) {
+    if (Arms.small(spark, "textIndex.flatProbe", bytes,
+        Arms.TextIndexBucketedMinBytes, "bytes")) {
       val scanW = math.max(1L, math.min(
         spark.sparkContext.defaultParallelism.toLong,
         bytes / (8L << 20) + 1)).toInt

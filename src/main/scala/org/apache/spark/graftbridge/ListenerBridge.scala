@@ -1,6 +1,7 @@
 package org.apache.spark.graftbridge
 
 import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.SparkListenerEvent
 
 /** Bridge to `SparkContext.listenerBus` (`private[spark]` in Spark 4.x).
   *
@@ -8,10 +9,14 @@ import org.apache.spark.SparkContext
   * `SparkListener.onTaskEnd` writes; listener events are delivered on an
   * async bus, so the reader must drain the bus before sampling or the last
   * tasks of a query get charged to the next one. This is the one sanctioned
-  * way to block on that drain.
+  * way to block on that drain, and to post an engine event such as
+  * [[graft.ArmDecision]] to every attached listener.
   */
 object ListenerBridge {
   def waitUntilListenerBusEmpty(sc: SparkContext, timeoutMillis: Long = 30000L): Unit =
     try sc.listenerBus.waitUntilEmpty(timeoutMillis)
     catch { case _: Throwable => () } // a timed-out drain degrades accounting, never the bench
+
+  def post(sc: SparkContext, event: SparkListenerEvent): Unit =
+    sc.listenerBus.post(event)
 }

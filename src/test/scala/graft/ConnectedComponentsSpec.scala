@@ -59,12 +59,9 @@ class ConnectedComponentsSpec extends SparkSpec {
     val edges = Seq.fill(300) {
       (rnd.nextInt(120).toLong, rnd.nextInt(120).toLong)
     } ++ Seq((500L, 500L), (600L, 601L)) // self-loop-only node + isolated pair
-    val viaDriver = ccMap(edges) // default threshold: driver arm
-    val viaDistributed =
-      try {
-        spark.conf.set("spark.graft.cc.driverMaxEdges", "0")
-        ccMap(edges)
-      } finally spark.conf.unset("spark.graft.cc.driverMaxEdges")
+    val (viaDriver, arms) = armDecisions(ccMap(edges)) // default threshold: driver arm
+    assert(arms.map(_.arm) == Seq("driver"), s"$arms")
+    val viaDistributed = withArms("distributed")(ccMap(edges))
     assert(viaDriver == viaDistributed)
     assert(viaDriver == graphxMap(edges) + (500L -> 500L))
   }
@@ -78,9 +75,14 @@ class ConnectedComponentsSpec extends SparkSpec {
     val c = base.withColumn("doc_id", lit(5000001L))
       .withColumn("text", concat($"text", lit(" x y")))
     val t = tables.withTable("documents", docs.union(b).union(c))
-    val viaGraphx = Dedup.nearDupGroups(t, minEstJaccard = 0.4, useGraphx = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaDF = Dedup.nearDupGroups(t, minEstJaccard = 0.4, useGraphx = false)
+    // GraphX reference on the same candidate pairs; documents with no
+    // candidate edge are their own group
+    val pairs = Dedup.minhashCandidatesCore(t, minEstJaccard = 0.4)
+      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSeq
+    val components = graphxMap(pairs)
+    val viaGraphx = t.documents.select("doc_id").as[Long].collect()
+      .map(d => d -> components.getOrElse(d, d)).toMap
+    val viaDF = Dedup.nearDupGroups(t, minEstJaccard = 0.4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaGraphx == viaDF)
     assert(viaDF(5000001L) == 0L) // the transitive group actually formed

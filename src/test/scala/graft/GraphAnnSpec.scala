@@ -75,12 +75,11 @@ class GraphAnnSpec extends SparkSpec {
     // equal to the distributed per-hop probe form
     val dir = Files.createTempDirectory("gann_drv").toString
     val idx = GraphAnn.buildIndex(spark, tables.embeddings, "gann_drv", dir)
-    val (outDrv, nDrv) = GraphAnn.beamSearchWithCandidateCount(
-      spark, idx, queries())
-    spark.conf.set("spark.graft.graph.driverMaxBytes", "0")
-    val (outDist, nDist) = try GraphAnn.beamSearchWithCandidateCount(
-      spark, idx, queries())
-    finally spark.conf.unset("spark.graft.graph.driverMaxBytes")
+    val ((outDrv, nDrv), arms) = armDecisions(GraphAnn.beamSearchWithCandidateCount(
+      spark, idx, queries()))
+    assert(arms.exists(d => d.site == "graphAnn.driverScore" && d.arm == "driver"), s"$arms")
+    val (outDist, nDist) = withArms("distributed")(
+      GraphAnn.beamSearchWithCandidateCount(spark, idx, queries()))
     assert(outDrv.collect().toSeq == outDist.collect().toSeq)
     assert(nDrv == nDist, s"candidate counts diverge: $nDrv vs $nDist")
   }

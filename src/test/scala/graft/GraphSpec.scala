@@ -5,6 +5,18 @@ import org.apache.spark.sql.functions.col
 
 class GraphSpec extends SparkSpec {
 
+  /** `df` collected into a local relation: its plan-stats are its true
+    * size, as for the parquet pair artifacts the queries read. A fixture
+    * pair list derived by join keeps Catalyst's join-product estimate
+    * (~160 MB here), above the driver arms' plan-stats budget. */
+  private def local(df: org.apache.spark.sql.DataFrame) =
+    Some(spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema))
+
+  private def assertArm(arms: Seq[ArmDecision], arm: String, sites: String*): Unit =
+    sites.foreach { site =>
+      assert(arms.exists(d => d.site == site && d.arm == arm), s"$site did not run $arm: $arms")
+    }
+
   test("pageRank conserves rank mass over the undirected trade graph") {
     val rows = Graph.pageRank(tables).collect()
       .map(r => (r.getString(0), r.getDouble(1)))
@@ -63,8 +75,7 @@ class GraphSpec extends SparkSpec {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     // force the LARGE-graph layout (the 100 TB path): the cost-based
     // switch would otherwise pick the lazy-scan shape at fixture scale
-    spark.conf.set("spark.graft.graphCacheMinBytes", "0")
-    val (ranks, release) = Graph.pageRankPlan(tables, 3, 0.85)
+    val (ranks, release) = withArms("distributed")(Graph.pageRankPlan(tables, 3, 0.85))
     try {
       def throughNarrow(p: SparkPlan): SparkPlan = p match {
         case w: WholeStageCodegenExec => throughNarrow(w.child)
@@ -86,16 +97,17 @@ class GraphSpec extends SparkSpec {
     } finally {
       release()
       spark.conf.unset("spark.sql.adaptive.enabled")
-      spark.conf.unset("spark.graft.graphCacheMinBytes")
     }
   }
 
   test("pageRank small-graph mode: no persisted layout, same result as the cached path") {
     // the cost-based switch (r17): below the plan-stats gate the edge
     // table must stay a lazy scan — no InMemoryTableScan anywhere — and
-    // the scores must be bit-identical to the forced large-graph layout
+    // the scores must match the forced large-graph layout, both run by
+    // the distributed loop (the events pin which path each side took)
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    val (ranks, release) = Graph.pageRankPlan(tables, 3, 0.85)
+    val ((ranks, release), smallArms) = armDecisions(Graph.pageRankPlan(tables, 3, 0.85))
+    assertArm(smallArms, "small", "graph.tradeEdgesLayout")
     val small = try {
       val scans = ranks.queryExecution.executedPlan.collect {
         case s: InMemoryTableScanExec => s
@@ -103,67 +115,74 @@ class GraphSpec extends SparkSpec {
       assert(scans.isEmpty, "small-graph mode still built the edge cache")
       ranks.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     } finally release()
-    spark.conf.set("spark.graft.graphCacheMinBytes", "0")
-    try {
-      val large = Graph.pageRank(tables).collect()
-        .map(r => r.getString(0) -> r.getDouble(1)).toMap
-      // tolerance, not bit-equality: the two physical plans sum doubles in
-      // different orders, so a rank landing on a 1e-6 rounding half-
-      // boundary can flip the last rounded digit between layouts
-      assert(small.keySet == large.keySet,
-        "small- and large-graph layouts disagree on the node set")
-      small.foreach { case (k, v) =>
-        assert(math.abs(v - large(k)) <= 1e-6,
-          s"small- and large-graph layouts disagree at $k: $v vs ${large(k)}")
-      }
-    } finally spark.conf.unset("spark.graft.graphCacheMinBytes")
+    val (large, largeArms) = armDecisions(withArms("distributed") {
+      Graph.pageRank(tables).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    })
+    assertArm(largeArms, "distributed", "graph.pageRank", "graph.tradeEdgesLayout")
+    // tolerance, not bit-equality: the two physical plans sum doubles in
+    // different orders, so a rank landing on a 1e-6 rounding half-
+    // boundary can flip the last rounded digit between layouts
+    assert(small.keySet == large.keySet,
+      "small- and large-graph layouts disagree on the node set")
+    small.foreach { case (k, v) =>
+      assert(math.abs(v - large(k)) <= 1e-6,
+        s"small- and large-graph layouts disagree at $k: $v vs ${large(k)}")
+    }
   }
 
   test("pageRank / kCore / labelPropagation: driver arms match the distributed loops") {
-    // fixture sits under the driver-arm gate → first calls run on the
-    // driver; forcing the gate to 0 runs the unchanged distributed loops
-    val prD = Graph.pageRank(tables).collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val kcD = Graph.kCore(tables, k = 2).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    val lpD = Graph.labelPropagation(tables).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.graft.graph.driverMaxBytes", "0")
-    try {
-      val prX = Graph.pageRank(tables).collect()
+    // local pair lists sit under the driver-arm budget → first calls run
+    // on the driver; forcing the distributed arms runs the unchanged loops
+    val pairs = local(Graph.tradePairs(tables))
+    val edges = local(Graph.coPurchaseEdges(tables))
+    val ((prD, kcD, lpD), arms) = armDecisions((
+      Graph.pageRank(tables, prebuiltPairs = pairs).collect()
+        .map(r => r.getString(0) -> r.getDouble(1)).toMap,
+      Graph.kCore(tables, k = 2, prebuiltPairs = pairs).collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSet,
+      Graph.labelPropagation(tables, prebuiltEdges = edges).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet))
+    assertArm(arms, "driver", "graph.pageRank", "graph.kCore", "graph.labelPropagation")
+    val (_, distArms) = armDecisions(withArms("distributed") {
+      val prX = Graph.pageRank(tables, prebuiltPairs = pairs).collect()
         .map(r => r.getString(0) -> r.getDouble(1)).toMap
       assert(prD.keySet == prX.keySet)
       // float tolerance as in the layout spec: different summation orders
       prD.foreach { case (k, v) => assert(math.abs(v - prX(k)) <= 1e-6,
         s"pageRank arms disagree at $k: $v vs ${prX(k)}") }
       // integer fixpoints: bit-equal, no tolerance
-      val kcX = Graph.kCore(tables, k = 2).collect()
+      val kcX = Graph.kCore(tables, k = 2, prebuiltPairs = pairs).collect()
         .map(r => (r.getString(0), r.getLong(1))).toSet
       assert(kcD == kcX, "kCore arms diverge")
-      val lpX = Graph.labelPropagation(tables).collect()
+      val lpX = Graph.labelPropagation(tables, prebuiltEdges = edges).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(lpD == lpX, "labelPropagation arms diverge")
-    } finally spark.conf.unset("spark.graft.graph.driverMaxBytes")
+    })
+    assertArm(distArms, "distributed", "graph.pageRank", "graph.kCore", "graph.labelPropagation")
   }
 
   test("hits: driver arm equals the distributed chain bit-for-bit") {
     // exact integer recurrence + the shared formatHits normalization —
     // no tolerance: the arms must produce identical rows
-    val viaDriver = Graph.hits(tables).collect().map(_.toSeq).toSeq
-    spark.conf.set("spark.graft.graph.driverMaxBytes", "0")
-    val viaDist = try Graph.hits(tables).collect().map(_.toSeq).toSeq
-    finally spark.conf.unset("spark.graft.graph.driverMaxBytes")
+    val pairs = local(Graph.tradePairs(tables))
+    val (viaDriver, arms) = armDecisions(
+      Graph.hits(tables, prebuiltPairs = pairs).collect().map(_.toSeq).toSeq)
+    assertArm(arms, "driver", "graph.hits")
+    val viaDist = withArms("distributed")(
+      Graph.hits(tables, prebuiltPairs = pairs).collect().map(_.toSeq).toSeq)
     assert(viaDriver == viaDist, "HITS arms diverge")
   }
 
   test("personalizedPageRank: driver arm and distributed loop agree") {
-    // fixture sits under the driver-arm gate → first call runs on the
-    // driver; forcing the gate to 0 runs the unchanged distributed loop
-    val viaDriver = Graph.personalizedPageRank(tables).collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    spark.conf.set("spark.graft.graph.driverMaxBytes", "0")
-    try {
-      val viaDist = Graph.personalizedPageRank(tables).collect()
+    // a local pair list sits under the driver-arm budget → first call
+    // runs on the driver; forcing the distributed arm runs the unchanged loop
+    val pairs = local(Graph.tradePairs(tables))
+    val (viaDriver, arms) = armDecisions(
+      Graph.personalizedPageRank(tables, prebuiltPairs = pairs).collect()
+        .map(r => r.getString(0) -> r.getDouble(1)).toMap)
+    assertArm(arms, "driver", "graph.ppr")
+    withArms("distributed") {
+      val viaDist = Graph.personalizedPageRank(tables, prebuiltPairs = pairs).collect()
         .map(r => r.getString(0) -> r.getDouble(1)).toMap
       assert(viaDriver.keySet == viaDist.keySet,
         "driver and distributed PPR arms disagree on the reachable set")
@@ -174,7 +193,7 @@ class GraphSpec extends SparkSpec {
         assert(math.abs(v - viaDist(k)) <= 1e-6,
           s"PPR arms disagree at $k: $v vs ${viaDist(k)}")
       }
-    } finally spark.conf.unset("spark.graft.graph.driverMaxBytes")
+    }
   }
 
   test("hits matches a driver-side recompute and emits L2-normalized scores") {

@@ -117,8 +117,7 @@ class PipelineSpec extends SparkSpec {
     // be a PARTITION filter (pruned at directory listing) over a strict
     // subset of cells, and — with the bucketed arm forced the way the
     // 100 TB store reads — the lexical arm must show bucket pruning
-    spark.conf.set("spark.graft.textIndexBucketedMinBytes", "0")
-    try {
+    withArms("distributed") {
       // two query vectors so nProbe·nQueries stays a strict cell subset
       // (a larger batch legitimately probes almost every cell at this
       // corpus size); IN prints as INSET past the conversion threshold
@@ -132,7 +131,7 @@ class PipelineSpec extends SparkSpec {
         s"probed ${probed.size} cells — not a strict subset of ${aIdx.nList}")
       assert(plan.contains("SelectedBucketsCount"),
         s"no bucket pruning on the postings probe:\n$plan")
-    } finally spark.conf.unset("spark.graft.textIndexBucketedMinBytes")
+    }
     // at nProbe = nList the IVF arm scans every cell and equals brute
     // force, the postings probe always equals bm25Search — so the fused
     // result must match the from-scratch hybrid row-for-row

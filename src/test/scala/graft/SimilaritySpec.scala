@@ -241,10 +241,10 @@ class SimilaritySpec extends SparkSpec {
     // both arms run the same greedy recurrence over the same shortlist
     // through the same cosine kernel — picks, ranks, and rounded scores
     // must pin EXACTLY equal
-    val viaDriver = Similarity.mmrTopK(tables).collect().map(_.toSeq).toSeq
-    spark.conf.set("spark.graft.mmr.driverMaxRows", "0")
-    val viaDist = try Similarity.mmrTopK(tables).collect().map(_.toSeq).toSeq
-    finally spark.conf.unset("spark.graft.mmr.driverMaxRows")
+    val (viaDriver, arms) = armDecisions(Similarity.mmrTopK(tables).collect().map(_.toSeq).toSeq)
+    assert(arms.map(_.arm) == Seq("driver"), s"$arms")
+    val viaDist = withArms("distributed")(
+      Similarity.mmrTopK(tables).collect().map(_.toSeq).toSeq)
     assert(viaDriver == viaDist,
       s"MMR arms diverge: only-driver=${(viaDriver.toSet -- viaDist.toSet).take(2)} " +
         s"only-dist=${(viaDist.toSet -- viaDriver.toSet).take(2)}")

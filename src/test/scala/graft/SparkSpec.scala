@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Tables
@@ -14,6 +20,30 @@ trait SparkSpec extends AnyFunSuite {
   /** Formatted physical plan of a DataFrame (for plan-shape assertions). */
   def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString()
+
+  /** Run `f` with `spark.graft.arms` set to `mode` (see [[Arms]]). */
+  def withArms[T](mode: String)(f: => T): T = {
+    spark.conf.set(Arms.Key, mode)
+    try f finally spark.conf.unset(Arms.Key)
+  }
+
+  /** `f`'s result and the [[ArmDecision]]s posted while it ran. */
+  def armDecisions[T](f: => T): (T, Seq[ArmDecision]) = {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[ArmDecision]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case d: ArmDecision => seen.add(d)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = f
+      ListenerBridge.waitUntilListenerBusEmpty(sc)
+      (r, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

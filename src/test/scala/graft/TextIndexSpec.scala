@@ -292,8 +292,9 @@ class TextIndexSpec extends SparkSpec {
 
   test("segmented probe: byte-derived flat scan equals the forced bucketed plan") {
     // small segments take the file-packed parquet read (no per-bucket
-    // task fan-out); pinning conf to 0 forces the 100 TB bucketed arm —
-    // results must be identical, and only the forced arm reads buckets
+    // task fan-out); forcing the distributed arms selects the 100 TB
+    // bucketed arm — results must be identical, and only the forced arm
+    // reads buckets
     val dir = Files.createTempDirectory("gtidx_small").toString
     val half = tables.documents.count() / 2
     TextIndex.appendSegment(spark, tables.documents.filter($"doc_id" < half),
@@ -305,8 +306,7 @@ class TextIndexSpec extends SparkSpec {
     assert(!planOf(smallDf).contains("SelectedBucketsCount"),
       s"small probe still reads through the bucket spec:\n${planOf(smallDf)}")
     val small = smallDf.collect().map(_.toSeq).toSet
-    spark.conf.set("spark.graft.textIndexBucketedMinBytes", "0")
-    try {
+    withArms("distributed") {
       val bigDf = TextIndex.bm25ProbeSegmented(spark, seg, q)
       val bigPlan = planOf(bigDf)
       assert(bigPlan.contains("SelectedBucketsCount") ||
@@ -314,7 +314,7 @@ class TextIndexSpec extends SparkSpec {
         s"forced arm must read the bucketed tables:\n$bigPlan")
       assert(small.nonEmpty && bigDf.collect().map(_.toSeq).toSet == small,
         "flat-scan and bucketed probes disagree")
-    } finally spark.conf.unset("spark.graft.textIndexBucketedMinBytes")
+    }
   }
 
   test("appendSegment bounds the segment file count for a wide small batch") {
@@ -343,19 +343,18 @@ class TextIndexSpec extends SparkSpec {
     val q = Seq((900000L, term)).toDF("doc_id", "text")
     // pin the 100 TB arm: below the byte threshold the probe reads flat
     // (r18), so force the bucketed plan to assert its pruning behavior
-    spark.conf.set("spark.graft.textIndexBucketedMinBytes", "0")
-    try {
+    val df = withArms("distributed") {
       val df = TextIndex.bm25Probe(spark, idx, q)
       val plan = planOf(df)
       assert(plan.contains("SelectedBucketsCount: 1 out of 8"),
         s"bucket pruning missing:\n$plan")
       assert(df.count() > 0)
-      // and the default (small-store) arm returns the same rows
-      spark.conf.unset("spark.graft.textIndexBucketedMinBytes")
-      val flat = TextIndex.bm25Probe(spark, idx, q)
-      assert(!planOf(flat).contains("SelectedBucketsCount"))
-      assert(flat.collect().map(_.toSeq).toSet ===
-        df.collect().map(_.toSeq).toSet)
-    } finally spark.conf.unset("spark.graft.textIndexBucketedMinBytes")
+      df
+    }
+    // and the default (small-store) arm returns the same rows
+    val flat = TextIndex.bm25Probe(spark, idx, q)
+    assert(!planOf(flat).contains("SelectedBucketsCount"))
+    assert(flat.collect().map(_.toSeq).toSet ===
+      df.collect().map(_.toSeq).toSet)
   }
 }
