@@ -39,7 +39,7 @@ object Arms {
   /** GraphAnn hops add a literal `isin` for up to this many frontier ids. */
   val IsinFrontierMax: Int = 1024
 
-  private def forcedDistributed(spark: SparkSession): Boolean =
+  private[graft] def forcedDistributed(spark: SparkSession): Boolean =
     spark.conf.getOption(Key).getOrElse("auto") match {
       case "auto" => false
       case "distributed" => true

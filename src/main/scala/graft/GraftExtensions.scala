@@ -6,7 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions._
 
 /** Session extensions exposing the engine's custom Catalyst expressions to
-  * SQL users (`spark.sql("SELECT simhash64(...) ...")`).
+  * SQL users (`spark.sql("SELECT simhash64(...) ...")`), plus the TopK
+  * planner strategy, the Levenshtein rewrite and the one-split physical
+  * rule ([[plans.OneSplitPlans]]).
   *
   * Two registration paths:
   *  - cluster-level: `spark.sql.extensions=graft.GraftExtensions` (or
@@ -24,6 +26,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     e.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
     e.injectOptimizerRule(_ => graft.plans.LevenshteinBandedRewrite)
+    e.injectQueryPostPlannerStrategyRule(graft.plans.OneSplitPlans(_))
   }
 }
 

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Opinionated session factory: the configuration this engine is designed
-  * and benchmarked against, with the extensions (custom SQL functions + the
-  * TopKPerGroup planner strategy) pre-installed.
+  * and benchmarked against, with the extensions (custom SQL functions, the
+  * TopKPerGroup planner strategy and the [[plans.OneSplitPlans]] physical
+  * rule) pre-installed.
   */
 object GraftSession {
 

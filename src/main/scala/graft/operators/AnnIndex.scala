@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.HashFunctions
+import graft.sources.Tables
 
 /** PERSISTED IVF-ANN index — the similarity-search counterpart of
   * [[DedupIndex]]: the coarse quantizer (centroids) and the cell-assigned
@@ -50,7 +51,7 @@ object AnnIndex {
     Similarity.unitOf(v).toArray
 
   private def loadCentroids(spark: SparkSession, idx: Index): Array[Array[Double]] =
-    spark.read.parquet(idx.centroidsPath)
+    Tables.scan(spark, idx.centroidsPath)
       .orderBy("cell").collect()
       .map(r => r.getSeq[Double](1).toArray)
 
@@ -130,7 +131,7 @@ object AnnIndex {
     * and promotion would be discarded with the old generation. */
   def compactIndex(spark: SparkSession, idx: Index): Unit = {
     val stage = s"${idx.vectorsPath}_stage"
-    spark.read.parquet(idx.vectorsPath)
+    Tables.scan(spark, idx.vectorsPath)
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(stage)
     // atomic commit point: staged temp + rename, never a partial marker
@@ -213,7 +214,7 @@ object AnnIndex {
     val cells = probedRows.map(_._3).distinct.sorted
     val wRank = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    spark.read.parquet(idx.vectorsPath)
+    Tables.scan(spark, idx.vectorsPath)
       // static values → partition pruning at the file listing, not a join
       .filter(col("cell").isin(cells.map(Integer.valueOf).toSeq: _*))
       .select(col("vec_id").as("neighbor_id"), col("embedding"), col("cell"))

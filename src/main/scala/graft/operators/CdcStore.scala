@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** STREAMING CDC / MERGE APPLY — the continuous form of
   * [[Relational.upsertMerge]]'s SCD type-1 semantics (r11 roadmap item
@@ -110,7 +111,7 @@ object CdcStore {
       val table = s"${prefix}_cdc$id"
       if (!spark.catalog.tableExists(table)) {
         val loc = new HPath(dir, table).toString
-        val ddl = spark.read.parquet(loc).schema.toDDL
+        val ddl = Tables.scan(spark, loc).schema.toDDL
         spark.sql(
           s"""CREATE TABLE $table ($ddl) USING PARQUET
              |CLUSTERED BY (k) SORTED BY (k) INTO $b BUCKETS

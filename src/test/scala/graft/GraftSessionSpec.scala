@@ -16,6 +16,9 @@ class GraftSessionSpec extends SparkSpec {
       assert(s2.conf.get("spark.sql.shuffle.partitions") == "2")
       // extensions are live: custom function resolves in SQL
       assert(s2.sql("SELECT rolling_hash('x') AS h").head().getLong(0) != 0L)
+      // the one-split physical rule runs after the planner strategies
+      assert(s2.sessionState.adaptiveRulesHolder.queryPostPlannerStrategyRules
+        .exists(_.isInstanceOf[graft.plans.OneSplitPlans]))
     } finally {
       SparkSession.setActiveSession(prev)
       SparkSession.setDefaultSession(prev)
