@@ -108,70 +108,31 @@ object AnnIndex {
       .getOrElse(throw new IllegalStateException(
         s"AnnIndex.attachIndex: unreadable marker at ${markerPath(dir)}: '${marker.get}'"))
     val idx = Index(dir, n)
-    recoverCompaction(spark, idx)
+    if (!IndexFiles.rollForward(spark, compactMarker(idx), vectorsDir(idx)))
+      IndexFiles.discardStages(spark, vectorsDir(idx))
     idx
   }
 
   private def compactMarker(idx: Index) =
     new org.apache.hadoop.fs.Path(idx.dir, "compact.commit")
 
+  private def vectorsDir(idx: Index) = Seq(new org.apache.hadoop.fs.Path(idx.vectorsPath))
+
   /** Compact the vector store: rewrite every cell partition to ONE file.
     * Streaming appends leave a file per (batch, cell) — after a month of
     * micro-batches a probe opens thousands of tiny files per cell; this
-    * is the maintenance pass that restores build-time read cost.
-    *
-    * Crash-safe two-phase protocol (the [[DedupIndex.compactIndex]]
-    * pattern): phase 1 stages the full rewrite beside the canonical dir —
-    * a crash before the commit marker rolls BACK (stage discarded on next
-    * attach); the marker is the commit point — after it the promotion
-    * rolls FORWARD (old dir renamed aside, stage renamed in, aside
-    * deleted), and every intermediate crash state resumes correctly
-    * because each table generation is complete-on-disk at all times.
-    * Exclusive with appends by contract: rows appended between staging
-    * and promotion would be discarded with the old generation. */
+    * is the maintenance pass that restores build-time read cost. The
+    * rewrite stages beside `vectors/` and commits through
+    * [[IndexFiles.swapGenerations]]; [[attachIndex]] rolls a committed
+    * swap forward and discards an uncommitted stage. Exclusive with
+    * appends by contract: rows appended between staging and promotion
+    * would be discarded with the old generation. */
   def compactIndex(spark: SparkSession, idx: Index): Unit = {
-    val stage = s"${idx.vectorsPath}_stage"
     Tables.scan(spark, idx.vectorsPath)
       .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(stage)
-    // atomic commit point: staged temp + rename, never a partial marker
-    IndexFiles.writeString(spark, compactMarker(idx), "compact")
-    promoteStage(spark, idx)
-  }
-
-  /** Post-commit promotion, shared with crash recovery. Idempotent: the
-    * surviving combination of {stage, canonical, aside} dirs encodes the
-    * progress and every state resumes. */
-  private def promoteStage(spark: SparkSession, idx: Index): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val canonical = new org.apache.hadoop.fs.Path(idx.vectorsPath)
-    val stage = new org.apache.hadoop.fs.Path(s"${idx.vectorsPath}_stage")
-    val aside = new org.apache.hadoop.fs.Path(s"${idx.vectorsPath}_old")
-    val fs = canonical.getFileSystem(conf)
-    if (fs.exists(stage)) {
-      // old generation goes ASIDE, not deleted: any failure from here
-      // leaves a complete generation on disk, never neither
-      if (fs.exists(canonical) && !fs.exists(aside))
-        if (!fs.rename(canonical, aside))
-          throw new java.io.IOException(s"rename $canonical -> $aside failed")
-      if (!fs.rename(stage, canonical))
-        throw new java.io.IOException(s"rename $stage -> $canonical failed")
-    }
-    if (fs.exists(aside)) fs.delete(aside, true)
-    fs.delete(compactMarker(idx), false)
-  }
-
-  /** Roll an interrupted compaction forward (marker present) or a never-
-    * committed stage back (marker absent). Cheap existence checks only. */
-  private def recoverCompaction(spark: SparkSession, idx: Index): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val mp = compactMarker(idx)
-    val fs = mp.getFileSystem(conf)
-    if (fs.exists(mp)) promoteStage(spark, idx)
-    else {
-      val stage = new org.apache.hadoop.fs.Path(s"${idx.vectorsPath}_stage")
-      if (fs.exists(stage)) fs.delete(stage, true) // uncommitted → roll back
-    }
+      .write.mode("overwrite").partitionBy("cell")
+      .parquet(IndexFiles.stageOf(vectorsDir(idx).head).toString)
+    IndexFiles.swapGenerations(spark, compactMarker(idx), vectorsDir(idx))
   }
 
   /** Append a new vector batch THROUGH the frozen quantizer: assign cells

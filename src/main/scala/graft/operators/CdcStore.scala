@@ -4,29 +4,24 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{Bucketing, Tables}
 
 /** STREAMING CDC / MERGE APPLY — the continuous form of
-  * [[Relational.upsertMerge]]'s SCD type-1 semantics (r11 roadmap item
-  * 6): change batches `(k, op ∈ insert|update|delete, …payload)` apply
-  * to a persisted keyed store with EXACTLY-ONCE replay safety, and the
-  * resolved current state is available at any point.
+  * [[Relational.upsertMerge]]'s SCD type-1 semantics: change batches
+  * `(k, op ∈ insert|update|delete, …payload)` apply to a persisted keyed
+  * store with exactly-once replay safety, and the resolved current state
+  * is available at any point.
   *
-  * Log-structured (the Hudi/Delta merge-on-read shape, built on this
-  * repo's segment architecture): each batch lands as its own immutable
-  * bucketed-by-key DELTA segment — existing data is never rewritten on
-  * ingest — and the segment list commits LAST via [[IndexFiles]]' atomic
-  * rename, with the batch tag riding the list entry (the [[TextIndex]]
-  * exactly-once contract: a replayed micro-batch whose tag is listed
-  * returns without writing; a crash before the list write leaves an
-  * unreferenced orphan table and the old list intact — never a torn
-  * store). [[currentState]] resolves per key by LAST-WRITER-WINS over
+  * Log-structured (the Hudi/Delta merge-on-read shape): each batch lands
+  * as its own immutable bucketed-by-key DELTA segment — existing data is
+  * never rewritten on ingest — committed through the tagged
+  * [[IndexFiles.SegmentLog]] `cdc_segments.list` (bucket count in
+  * `cdc_store.buckets`), which gives the exactly-once and crash
+  * contracts. [[currentState]] resolves per key by LAST-WRITER-WINS over
   * the segment order (one key-partitioned window over the unioned
   * segment scans; deletes drop out), and [[compactStore]] folds the
   * resolved state into ONE base segment — the maintenance pass that
-  * bounds read cost, with the list swap as its commit point and the
-  * live tags carried forward (bounded by `maxTags`, newest kept) so
-  * compaction never reopens the exactly-once window.
+  * bounds read cost.
   *
   * Schema-generic: the payload columns are whatever the first batch
   * carries (parquet records them; attach re-derives the DDL from the
@@ -41,84 +36,61 @@ import graft.sources.Tables
   * 100 TB shape: ingest cost is the batch itself (bucketed write, no
   * read-modify-write of the base — the LSM trade); resolution shuffles
   * the live segments once on the key (the window's clustering);
-  * compaction restores O(base) reads. SINGLE WRITER by contract
-  * (appends and compaction read-modify-write the list); readers are
-  * safe at any point — the list rename is their only commit point. */
+  * compaction restores O(base) reads. */
 object CdcStore {
 
   final case class Store(prefix: String, dir: String, ids: Seq[Int]) {
     def tableOf(id: Int): String = s"${prefix}_cdc$id"
   }
 
-  private def listPath(dir: String) = new HPath(dir, "cdc_segments.list")
-  private def bucketsPath(dir: String) = new HPath(dir, "cdc_store.buckets")
-
-  private def storedBuckets(spark: SparkSession, dir: String, fallback: Int) =
-    IndexFiles.readString(spark, bucketsPath(dir))
-      .map(_.trim.toInt).getOrElse(fallback)
+  private def segLog(dir: String) = IndexFiles.SegmentLog(
+    new HPath(dir, "cdc_segments.list"), new HPath(dir, "cdc_store.buckets"))
 
   /** Apply one change batch as a new delta segment. Exactly-once via
-    * `batchTag` (validated before any write); empty batches are no-ops.
-    * Single writer by contract (see the object scaladoc). */
+    * `batchTag` (validated before any write); empty batches are no-ops. */
   def appendChanges(spark: SparkSession, changes: DataFrame, prefix: String,
                     dir: String, buckets: Int = 16,
                     batchTag: Option[String] = None): Store = {
-    batchTag.foreach(IndexFiles.requireValidTag)
-    IndexFiles.mkdirs(spark, new HPath(dir))
-    val prev = attachStore(spark, prefix, dir, buckets)
-    val entries = IndexFiles.readSegEntries(spark, listPath(dir))
-    if (batchTag.exists(entries.flatMap(_._2).contains)) return prev
+    val st = segLog(dir).begin(spark, batchTag, buckets)
+    val prev = register(spark, prefix, dir, st)
+    if (st.listed(batchTag)) return prev
     // plan-stats BEFORE the checkpoint below hides them behind the
     // unknown sentinel — they size the segment's file count
     val statBytes = changes.queryExecution.optimizedPlan.stats.sizeInBytes
     // ONE evaluation of the change plan serves both the emptiness probe
-    // and the segment write (r13 advice: a bare `changes.isEmpty` ran the
-    // wide batch plan once for the probe and AGAIN for the write —
-    // doubling per-batch latency on wide CDC extractors)
+    // and the segment write (a bare `changes.isEmpty` would run the wide
+    // batch plan once for the probe and again for the write)
     val batch = changes.localCheckpoint()
     try {
       if (batch.isEmpty) return prev
-      // stored count wins over the parameter (the TextIndex meta-wins rule)
-      val b = storedBuckets(spark, dir, buckets)
-      val id = prev.ids.lastOption.getOrElse(-1) + 1
-      val table = s"${prefix}_cdc$id"
-      // file count bounded by the batch's BYTES, not the caller's width
-      // (r17: a store built under a 32-partition session read back at 14
-      // task-s vs 2 for the same bytes in fewer files) — in the store, so
-      // the streaming loop and every other caller is covered too
-      IndexFiles.boundBucketedWrite(batch, "k", b, statBytes)
-        .write.mode(SaveMode.Overwrite)
-        .bucketBy(b, "k").sortBy("k")
-        .option("path", new HPath(dir, table).toString)
-        .saveAsTable(table)
-      if (!IndexFiles.exists(spark, bucketsPath(dir)))
-        IndexFiles.writeString(spark, bucketsPath(dir), b.toString)
-      IndexFiles.writeSegEntries(spark, listPath(dir),
-        entries :+ ((id, batchTag.toSeq)))
-      Store(prefix, dir, prev.ids :+ id)
+      val table = prev.tableOf(st.nextId)
+      // file count bounded by the batch's BYTES, not the caller's width —
+      // in the store, so the streaming loop and every caller is covered
+      Bucketing.saveBucketed(
+        IndexFiles.boundBucketedWrite(batch, "k", st.buckets, statBytes),
+        table, Seq("k"), st.buckets, Some(new HPath(dir, table).toString),
+        SaveMode.Overwrite)
+      segLog(dir).commit(spark, st, batchTag)
+      Store(prefix, dir, prev.ids :+ st.nextId)
     } finally batch.unpersist(blocking = false)
   }
 
   /** Attach the store: re-registers any segment table a fresh session's
     * catalog lacks, deriving each table's DDL from its stored parquet
-    * files (the store is schema-generic). An empty/missing list is a
-    * valid empty store. */
+    * files (the store is schema-generic). */
   def attachStore(spark: SparkSession, prefix: String, dir: String,
-                  buckets: Int = 16): Store = {
-    val b = storedBuckets(spark, dir, buckets)
-    val ids = IndexFiles.readSegEntries(spark, listPath(dir)).map(_._1)
-    ids.foreach { id =>
-      val table = s"${prefix}_cdc$id"
-      if (!spark.catalog.tableExists(table)) {
-        val loc = new HPath(dir, table).toString
-        val ddl = Tables.scan(spark, loc).schema.toDDL
-        spark.sql(
-          s"""CREATE TABLE $table ($ddl) USING PARQUET
-             |CLUSTERED BY (k) SORTED BY (k) INTO $b BUCKETS
-             |LOCATION '$loc'""".stripMargin)
-      }
+                  buckets: Int = 16): Store =
+    register(spark, prefix, dir, segLog(dir).read(spark, buckets))
+
+  private def register(spark: SparkSession, prefix: String, dir: String,
+                       st: IndexFiles.LogState): Store = {
+    val store = Store(prefix, dir, st.ids)
+    st.ids.map(store.tableOf).foreach { table =>
+      val loc = new HPath(dir, table).toString
+      Bucketing.registerBucketed(spark, table,
+        Tables.scan(spark, loc).schema.toDDL, Seq("k"), st.buckets, loc)
     }
-    Store(prefix, dir, ids)
+    store
   }
 
   /** The resolved current state: per key, the LAST segment's row wins
@@ -136,32 +108,27 @@ object CdcStore {
       .drop("_rn", "_seg")
   }
 
-  /** Fold the resolved state into ONE base segment (list swap = commit;
-    * crash leaves the old list serving the old segments, at worst an
-    * orphan table). Tags carry forward bounded by `maxTags`, newest
-    * kept — the [[TextIndex.compactSegments]] retention contract. Old
-    * segment tables are left for the caller to garbage-collect. */
+  /** Fold the resolved state into ONE base segment, committed by
+    * [[IndexFiles.SegmentLog.commitCompaction]] (live tags carried
+    * forward, newest `maxTags` kept; a crash leaves the old list serving
+    * the old segments, at worst an orphan table). Old segment tables are
+    * left for the caller to garbage-collect. */
   def compactStore(spark: SparkSession, store: Store, buckets: Int = 16,
                    maxTags: Int = 1024): Store = {
     require(store.ids.nonEmpty, "compactStore: empty store")
-    val b = storedBuckets(spark, store.dir, buckets)
-    val entries = IndexFiles.readSegEntries(spark, listPath(store.dir))
+    val b = segLog(store.dir).buckets(spark, buckets)
     val id = store.ids.last + 1
     val table = store.tableOf(id)
     // the compacted base's file count derives from the live segments'
     // TRUE on-disk bytes (the resolved state is never larger)
     val liveBytes = store.ids.map(i =>
       IndexFiles.dirBytes(spark, new HPath(store.dir, store.tableOf(i)))).sum
-    IndexFiles.boundBucketedWrite(currentState(spark, store), "k", b,
-        BigInt(liveBytes))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(b, "k").sortBy("k")
-      .option("path", new HPath(store.dir, table).toString)
-      .saveAsTable(table)
-    val liveTags = entries.filter(e => store.ids.contains(e._1))
-      .flatMap(_._2).distinct.takeRight(maxTags)
-    IndexFiles.writeSegEntries(spark, listPath(store.dir),
-      Seq((id, liveTags)))
+    Bucketing.saveBucketed(
+      IndexFiles.boundBucketedWrite(currentState(spark, store), "k", b,
+        BigInt(liveBytes)),
+      table, Seq("k"), b, Some(new HPath(store.dir, table).toString),
+      SaveMode.Overwrite)
+    segLog(store.dir).commitCompaction(spark, store.ids, id, maxTags)
     Store(store.prefix, store.dir, Seq(id))
   }
 }

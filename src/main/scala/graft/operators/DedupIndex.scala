@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Bucketing
 
 /** Persisted dedup index — the shape a daily 100 TB ingest actually runs:
   * the corpus' exact fingerprints and MinHash band keys are computed ONCE,
@@ -49,21 +50,13 @@ object DedupIndex {
   private def markerPath(dir: String) =
     new org.apache.hadoop.fs.Path(dir, "compact.commit")
 
-  /** Write `target` all-or-nothing via the shared [[IndexFiles]] commit
-    * (staged temp + ATOMIC rename — the earlier delete-then-rename here
-    * had a missing-file window between the two calls). */
-  private def atomicWrite(spark: SparkSession, target: org.apache.hadoop.fs.Path)(
-      write: java.io.OutputStream => Unit): Unit =
-    IndexFiles.atomicWrite(spark, target)(write)
-
   /** Persist the index's structural meta (today: the bucket count) so
     * maintenance ops derive the layout from the store instead of trusting
     * a caller-passed value — a compaction invoked with the wrong count
     * would silently rewrite the layout and break the "probe plans
     * unchanged by construction" contract (r8 ADVICE). */
   private def writeIndexMeta(spark: SparkSession, dir: String, buckets: Int): Unit =
-    atomicWrite(spark, indexMetaPath(dir))(
-      _.write(s"buckets=$buckets".getBytes("UTF-8")))
+    IndexFiles.writeString(spark, indexMetaPath(dir), s"buckets=$buckets")
 
   /** Bucket count from the stored meta; None for a pre-meta index (the
     * caller falls back to its parameter and writes the meta forward). */
@@ -84,16 +77,15 @@ object DedupIndex {
   /** Write the sidecar plus its sizing meta (expectedItems + fpp — the
     * parameters a later append must reuse to build a merge-compatible
     * batch filter; the serialized sketch alone doesn't expose them).
-    * Written via [[atomicWrite]] (temp + rename): `appendToIndex`'s crash
+    * Written via [[IndexFiles.atomicWrite]] (temp + rename): `appendToIndex`'s crash
     * analysis ("a crash between bloom and table writes only adds false
     * positives") holds only if the bloom write itself is all-or-nothing.
     * Readers that still catch a torn file (non-atomic object stores)
     * degrade to the plain anti-join via [[loadBloom]]'s parse guard. */
   private def writeBloom(spark: SparkSession, bf: org.apache.spark.util.sketch.BloomFilter,
                          dir: String, expectedItems: Long): Unit = {
-    atomicWrite(spark, bloomPath(dir))(bf.writeTo)
-    atomicWrite(spark, bloomMetaPath(dir))(
-      _.write(s"$expectedItems $BloomFpp".getBytes("UTF-8")))
+    IndexFiles.atomicWrite(spark, bloomPath(dir))(bf.writeTo)
+    IndexFiles.writeString(spark, bloomMetaPath(dir), s"$expectedItems $BloomFpp")
   }
 
   private def loadBloomMeta(spark: SparkSession, dir: String): Option[(Long, Double)] =
@@ -156,18 +148,13 @@ object DedupIndex {
         Dedup.fingerprint(col("text")).as("fp"),
         graft.functions.HashFunctions.minhashSigText(col("text"), w, k).as("sig"))
       .localCheckpoint()
-    def write(df: DataFrame, table: String, keys: Seq[String], path: String): Unit =
-      df.repartition(buckets, keys.map(df.col): _*)
-        .write.mode(SaveMode.Overwrite)
-        .option("path", path)
-        .bucketBy(buckets, keys.head, keys.tail: _*)
-        .sortBy(keys.head, keys.tail: _*)
-        .saveAsTable(table)
+    val rows = Seq(base.select("fp", "doc_id"), base.select("doc_id", "sig"),
+      Dedup.minhashBandRows(base, bands).select("band", "band_key", "doc_id"))
     try {
-      write(base.select("fp", "doc_id"), t.fp, Seq("fp"), s"$dir/fp")
-      write(base.select("doc_id", "sig"), t.sig, Seq("doc_id"), s"$dir/sig")
-      write(Dedup.minhashBandRows(base, bands).select("band", "band_key", "doc_id"),
-        t.band, Seq("band", "band_key"), s"$dir/band")
+      tableSpecs.zip(rows).foreach { case ((name, _, keys, sub), df) =>
+        Bucketing.saveBucketed(df.repartition(buckets, keys.map(df.col): _*),
+          name(t), keys, buckets, Some(s"$dir/$sub"), SaveMode.Overwrite)
+      }
       // Bloom sidecar, sized 4× the build-time corpus so daily appends
       // have headroom before the false-positive rate degrades (a stale-ish
       // fpp only costs extra anti-join traffic, never correctness; rebuild
@@ -183,28 +170,34 @@ object DedupIndex {
     t
   }
 
+  /** The three tables' (catalog name, schema DDL, bucket keys, data
+    * subdir) — one source of truth for build, attach and compaction. */
+  private val tableSpecs: Seq[(IndexTables => String, String, Seq[String], String)] = Seq(
+    ((t: IndexTables) => t.fp, "fp STRING, doc_id BIGINT", Seq("fp"), "fp"),
+    ((t: IndexTables) => t.sig, "doc_id BIGINT, sig ARRAY<BIGINT>", Seq("doc_id"), "sig"),
+    ((t: IndexTables) => t.band, "band INT, band_key BIGINT, doc_id BIGINT",
+      Seq("band", "band_key"), "band"))
+
+  private def tableDirs(idx: IndexTables) =
+    tableSpecs.map(s => new org.apache.hadoop.fs.Path(s"${idx.dir}/${s._4}"))
+
+  /** Register any of the three tables this session's catalog lacks, at
+    * the stored bucket count (pre-meta indexes: `buckets`). */
+  private def register(spark: SparkSession, idx: IndexTables, buckets: Int): Unit = {
+    // stored meta wins over the parameter: an attach with the wrong count
+    // would register a bucket spec the files don't satisfy, and every
+    // probe would silently read mis-bucketed data
+    val b = loadIndexBuckets(spark, idx.dir).getOrElse(buckets)
+    tableSpecs.foreach { case (name, ddl, keys, sub) =>
+      Bucketing.registerBucketed(spark, name(idx), ddl, keys, b, s"${idx.dir}/$sub")
+    }
+  }
+
   /** Attach an ALREADY-WRITTEN index (a previous session's [[buildIndex]]
     * output at `dir`) to this session's catalog as external bucketed
     * tables — the "new day, same index" path: no data is read or written,
     * only bucket metadata is registered. No-op for tables already in the
     * catalog. */
-  /** The three tables' (schema DDL, bucket keys, data subdir) — one source
-    * of truth shared by [[attachIndex]] (register) and [[compactIndex]]
-    * (re-register after rewrite). */
-  private val tableSpecs: Seq[(IndexTables => String, String, String, String)] = Seq(
-    ((t: IndexTables) => t.fp, "fp STRING, doc_id BIGINT", "fp", "fp"),
-    ((t: IndexTables) => t.sig, "doc_id BIGINT, sig ARRAY<BIGINT>", "doc_id", "sig"),
-    ((t: IndexTables) => t.band, "band INT, band_key BIGINT, doc_id BIGINT",
-      "band, band_key", "band"))
-
-  private def registerDdl(spark: SparkSession, table: String, schema: String,
-                          keys: String, path: String, buckets: Int): Unit =
-    if (!spark.catalog.tableExists(table))
-      spark.sql(
-        s"""CREATE TABLE $table ($schema) USING PARQUET
-           |CLUSTERED BY ($keys) SORTED BY ($keys) INTO $buckets BUCKETS
-           |LOCATION '$path'""".stripMargin)
-
   def attachIndex(spark: SparkSession, prefix: String, dir: String,
                   buckets: Int = 8): IndexTables = {
     val t = tablesFor(prefix, dir)
@@ -212,13 +205,7 @@ object DedupIndex {
     // rolled forward before anything registers or reads — the attach point
     // is the recovery point, mirroring a table format's log replay
     recoverCompaction(spark, t)
-    // stored meta wins over the parameter: an attach with the wrong count
-    // would register a bucket spec the files don't satisfy, and every
-    // probe would silently read mis-bucketed data
-    val b = loadIndexBuckets(spark, dir).getOrElse(buckets)
-    tableSpecs.foreach { case (name, schema, keys, sub) =>
-      registerDdl(spark, name(t), schema, keys, s"$dir/$sub", b)
-    }
+    register(spark, t, buckets)
     t
   }
 
@@ -242,18 +229,12 @@ object DedupIndex {
     * streams one bucket's many small files into one file — no shuffle at
     * any corpus size.
     *
-    * CRASH-ATOMIC across the three tables via a two-phase swap (the
-    * marker-file commit protocol the ingest batchId markers already use):
-    * phase 1 stages ALL tables into `<sub>_stage` subdirs (canonical
-    * layout untouched — a crash here loses only stage garbage the next
-    * compaction overwrites); then ONE `compact.commit` marker is written —
-    * the commit point; phase 2 promotes each table with recoverable
-    * renames (canonical → `<sub>_old` aside, stage → canonical, delete
-    * aside — never a delete before the new data is in place, r8 ADVICE)
-    * and removes the marker. A crash mid-promotion is rolled FORWARD by
-    * [[recoverCompaction]] (from [[attachIndex]] or the next probe): every
-    * intermediate state is distinguishable by which of stage/old/canonical
-    * exist, so recovery is idempotent. Compaction never changes CONTENT,
+    * CRASH-ATOMIC across the three tables: all three stage, then
+    * [[IndexFiles.swapGenerations]] commits them with ONE
+    * `compact.commit` marker. Stage garbage from a crash before the
+    * marker is left for the next compaction to overwrite; a crash after
+    * it is rolled FORWARD by [[recoverCompaction]] (from [[attachIndex]]
+    * or the next probe). Compaction never changes CONTENT,
     * so the stale Bloom sidecar stays correct through any crash — only its
     * FPP-headroom refresh is lost, which the next compaction restores.
     * Bucket count derives from the stored index meta, never a parameter
@@ -264,34 +245,20 @@ object DedupIndex {
     * Probe plans are unchanged by construction — same bucket count, same
     * keys (spec-asserted one-Exchange + result-equality). */
   def compactIndex(spark: SparkSession, idx: IndexTables): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
     // pre-meta indexes (built before the meta existed) were all written
     // with the historical default of 8; write the meta forward
     val buckets = loadIndexBuckets(spark, idx.dir).getOrElse(8)
     val autoScanKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val autoScanOld = spark.conf.get(autoScanKey)
     spark.conf.set(autoScanKey, "false")
-    // phase 1: stage every table; canonical data and catalog untouched
-    try tableSpecs.foreach { case (name, _, keys, sub) =>
-      val table = name(idx)
-      val keyCols = keys.split(",").map(_.trim)
-      val stagePath = new org.apache.hadoop.fs.Path(s"${idx.dir}/${sub}_stage")
-      val stageTable = s"${table}_stage"
-      val src = spark.table(table)
-      src.repartition(buckets, keyCols.map(src.col): _*)
-        .write.mode(SaveMode.Overwrite)
-        .option("path", stagePath.toString)
-        .bucketBy(buckets, keyCols.head, keyCols.tail: _*)
-        .sortBy(keyCols.head, keyCols.tail: _*)
-        .saveAsTable(stageTable)
-      spark.sql(s"DROP TABLE $stageTable") // external: data stays staged
+    // stage every table; canonical data and catalog untouched
+    try tableSpecs.zip(tableDirs(idx)).foreach { case ((name, _, keys, _), d) =>
+      val src = spark.table(name(idx))
+      IndexFiles.stageBucketed(src.repartition(buckets, keys.map(src.col): _*),
+        name(idx), d, keys, buckets)
     } finally spark.conf.set(autoScanKey, autoScanOld)
-    // commit point: after this single atomic create, the compaction WILL
-    // complete (roll-forward); before it, it never happened (roll-back)
-    atomicWrite(spark, markerPath(idx.dir))(
-      _.write("compact".getBytes("UTF-8")))
-    // phase 2: promote + clear the marker (shared with crash recovery)
-    promoteStaged(spark, idx)
+    IndexFiles.swapGenerations(spark, markerPath(idx.dir), tableDirs(idx))
+    refresh(spark, idx)
     writeIndexMeta(spark, idx.dir, buckets)
     // fresh sidecar over the real row count — restores the build-time FPP
     // headroom policy (4× expected items) regardless of append history
@@ -300,49 +267,20 @@ object DedupIndex {
     writeBloom(spark, buildBloom(fps, expected, BloomFpp), idx.dir, expected)
   }
 
-  /** Promote staged compaction output into the canonical layout — the
-    * post-commit half of [[compactIndex]], also the crash-recovery path.
-    * Idempotent: each table's progress is encoded in which of
-    * {stage, canonical, old-aside} exist, and every state resumes
-    * correctly. Ends by deleting the commit marker and refreshing this
-    * session's file-listing caches. */
-  private def promoteStaged(spark: SparkSession, idx: IndexTables): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    tableSpecs.foreach { case (name, schema, keys, sub) =>
-      val canonical = new org.apache.hadoop.fs.Path(s"${idx.dir}/$sub")
-      val stage = new org.apache.hadoop.fs.Path(s"${idx.dir}/${sub}_stage")
-      val aside = new org.apache.hadoop.fs.Path(s"${idx.dir}/${sub}_old")
-      val fs = canonical.getFileSystem(conf)
-      if (fs.exists(stage)) {
-        // rename the old dir ASIDE instead of deleting it: any failure
-        // from here leaves either the old or the new generation complete
-        // on disk, never neither (r8 ADVICE)
-        if (fs.exists(canonical) && !fs.exists(aside))
-          if (!fs.rename(canonical, aside))
-            throw new java.io.IOException(s"rename $canonical -> $aside failed")
-        if (!fs.rename(stage, canonical))
-          throw new java.io.IOException(s"rename $stage -> $canonical failed")
-      }
-      if (fs.exists(aside)) fs.delete(aside, true)
-      // catalog entry is external at a FIXED path, so registration is
-      // needed only when this session never had it; always drop cached
-      // file listings so probes see the new generation
-      registerDdl(spark, name(idx), schema, keys, canonical.toString,
-        loadIndexBuckets(spark, idx.dir).getOrElse(8))
-      spark.catalog.refreshTable(name(idx))
-    }
-    val mp = markerPath(idx.dir)
-    mp.getFileSystem(conf).delete(mp, false)
+  /** After a promotion: the catalog entries are external at FIXED paths,
+    * so registration is needed only where this session never had them;
+    * cached file listings always drop, so probes see the new generation. */
+  private def refresh(spark: SparkSession, idx: IndexTables): Unit = {
+    register(spark, idx, 8)
+    tableSpecs.foreach(s => spark.catalog.refreshTable(s._1(idx)))
   }
 
-  /** Roll an interrupted-but-committed compaction forward: no-op unless
+  /** Roll an interrupted-but-committed compaction forward; a no-op unless
     * the `compact.commit` marker exists (one cheap existence check — safe
-    * to call from every probe). */
-  private[graft] def recoverCompaction(spark: SparkSession, idx: IndexTables): Unit = {
-    val mp = markerPath(idx.dir)
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(mp)) promoteStaged(spark, idx)
-  }
+    * to call from every probe). An uncommitted stage is left in place. */
+  private[graft] def recoverCompaction(spark: SparkSession, idx: IndexTables): Unit =
+    if (IndexFiles.rollForward(spark, markerPath(idx.dir), tableDirs(idx)))
+      refresh(spark, idx)
 
   /** APPEND new documents to a stored index — the write-back that closes
     * the daily-ingest loop: dedup today's batch against the index

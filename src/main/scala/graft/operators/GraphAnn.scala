@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Arms
 import graft.functions.HashFunctions
+import graft.sources.Bucketing
 
 /** GRAPH-BASED ANN — the recall/latency frontier production vector
   * systems actually run (HNSW, Malkov & Yashunin 2016; NSG; DiskANN,
@@ -152,19 +153,15 @@ object GraphAnn {
     // denormalize the neighbor vector beside each edge (see the layout
     // scaladoc): one |E|-row equi-join at BUILD time buys one-job hops
     // at SEARCH time
-    sym.unionByName(bridges)
+    val adj = sym.unionByName(bridges)
       .groupBy("node_id", "neighbor_id").agg(max("cos").as("cos"))
       .join(vecOf.select(col("vec_id").as("neighbor_id"),
         col("embedding").as("n_emb")), "neighbor_id")
       .select("node_id", "neighbor_id", "cos", "n_emb")
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "node_id").sortBy("node_id")
-      .option("path", new HPath(dir, idx0.adjTable).toString)
-      .saveAsTable(idx0.adjTable)
-    vecOf.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "vec_id").sortBy("vec_id")
-      .option("path", new HPath(dir, idx0.nodesTable).toString)
-      .saveAsTable(idx0.nodesTable)
+    Bucketing.saveBucketed(adj, idx0.adjTable, Seq("node_id"), buckets,
+      Some(new HPath(dir, idx0.adjTable).toString), SaveMode.Overwrite)
+    Bucketing.saveBucketed(vecOf, idx0.nodesTable, Seq("vec_id"), buckets,
+      Some(new HPath(dir, idx0.nodesTable).toString), SaveMode.Overwrite)
     val n = embeddings.count()
     IndexFiles.mkdirs(spark, new HPath(dir))
     IndexFiles.writeString(spark, bucketsPath(dir), buckets.toString)
@@ -272,14 +269,10 @@ object GraphAnn {
         col("embedding").as("n_emb")), "neighbor_id")
       .select("node_id", "neighbor_id", "cos", "n_emb")
     val b = storedBuckets(spark, idx.dir)
-    fwd.unionByName(rev).unionByName(intra)
-      .write.mode(SaveMode.Append)
-      .bucketBy(b, "node_id").sortBy("node_id")
-      .saveAsTable(idx.adjTable)
-    newVectors.select(col("vec_id"), col("embedding"))
-      .write.mode(SaveMode.Append)
-      .bucketBy(b, "vec_id").sortBy("vec_id")
-      .saveAsTable(idx.nodesTable)
+    Bucketing.saveBucketed(fwd.unionByName(rev).unionByName(intra),
+      idx.adjTable, Seq("node_id"), b, None, SaveMode.Append)
+    Bucketing.saveBucketed(newVectors.select(col("vec_id"), col("embedding")),
+      idx.nodesTable, Seq("vec_id"), b, None, SaveMode.Append)
     IndexFiles.writeString(spark, metaPath(idx.dir),
       s"${idx.entry} ${idx.degree} ${idx.nNodes + nNew}")
     // tag LAST: it asserts the whole append completed
@@ -288,21 +281,19 @@ object GraphAnn {
     idx.copy(nNodes = idx.nNodes + nNew)
   }
 
-  private def stagePath(dir: String, table: String) =
-    new HPath(dir, s"${table}_stage")
-  private def asidePath(dir: String, table: String) =
-    new HPath(dir, s"${table}_old")
   private def compactMarker(dir: String) =
     new HPath(dir, "graph_compact.commit")
+  private def tableDirs(idx: Index) =
+    Seq(idx.adjTable, idx.nodesTable).map(new HPath(idx.dir, _))
 
   /** COMPACT after appends: dedup (node, neighbor) edges (max cos wins),
     * re-cap every node at 2·degree (keep best — restores the build-time
     * read bound the append path deliberately exceeded), dedup node rows,
-    * REFRESH the connectivity bridges, and recount the meta. Crash-safe
-    * two-phase ([[AnnIndex.compactIndex]]'s protocol): both tables stage
-    * beside the canonical dirs, the marker is the commit point, promotion
-    * rolls forward and every intermediate crash state resumes on
-    * [[attachIndex]]. Exclusive with appends by contract.
+    * REFRESH the connectivity bridges, and recount the meta. Both tables
+    * stage beside the canonical dirs and commit through
+    * [[IndexFiles.swapGenerations]]; [[attachIndex]] rolls a committed
+    * swap forward and discards an uncommitted stage. Exclusive with
+    * appends by contract.
     *
     * BRIDGE REFRESH (r14 — the r13 verdict's "fixed entry point, no
     * refresh as appends drift the corpus" critique): the build-time
@@ -359,23 +350,12 @@ object GraphAnn {
       .groupBy("node_id", "neighbor_id")
       .agg(max("cos").as("cos"), first("n_emb").as("n_emb"))
     val b = storedBuckets(spark, idx.dir)
-    // stage as BUCKETED files (temporary catalog names targeting the
-    // stage dirs — the bucket-id file naming survives the dir rename, so
-    // the canonical tables' declared spec stays true after promotion)
-    def stageAs(df: DataFrame, table: String, key: String): Unit = {
-      val tmp = s"${table}__stage"
-      if (spark.catalog.tableExists(tmp)) spark.sql(s"DROP TABLE $tmp")
-      df.write.mode(SaveMode.Overwrite)
-        .bucketBy(b, key).sortBy(key)
-        .option("path", stagePath(idx.dir, table).toString)
-        .saveAsTable(tmp)
-      spark.sql(s"DROP TABLE $tmp") // files stay; only the temp DDL goes
-    }
-    stageAs(compacted, idx.adjTable, "node_id")
-    stageAs(nodesDedup, idx.nodesTable, "vec_id")
+    val dirs = tableDirs(idx)
+    IndexFiles.stageBucketed(compacted, idx.adjTable, dirs(0), Seq("node_id"), b)
+    IndexFiles.stageBucketed(nodesDedup, idx.nodesTable, dirs(1), Seq("vec_id"), b)
     val n = nodesDedup.count()
-    IndexFiles.writeString(spark, compactMarker(idx.dir), "compact")
-    promoteCompaction(spark, idx)
+    IndexFiles.swapGenerations(spark, compactMarker(idx.dir), dirs)
+    refreshTables(spark, idx)
     // meta recount AFTER promotion (a crash in between leaves a stale —
     // strictly over-counting — nNodes; informational only)
     IndexFiles.writeString(spark, metaPath(idx.dir),
@@ -384,61 +364,15 @@ object GraphAnn {
     idx.copy(nNodes = n)
   }
 
-  /** Post-marker promotion, shared with crash recovery; idempotent. */
-  private def promoteCompaction(spark: SparkSession, idx: Index): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    Seq(idx.adjTable, idx.nodesTable).foreach { t =>
-      val canonical = new HPath(idx.dir, t)
-      val stage = stagePath(idx.dir, t)
-      val aside = asidePath(idx.dir, t)
-      val fs = canonical.getFileSystem(conf)
-      if (fs.exists(stage)) {
-        if (fs.exists(canonical) && !fs.exists(aside))
-          if (!fs.rename(canonical, aside))
-            throw new java.io.IOException(s"rename $canonical -> $aside failed")
-        if (!fs.rename(stage, canonical))
-          throw new java.io.IOException(s"rename $stage -> $canonical failed")
-      }
-      if (fs.exists(aside)) fs.delete(aside, true)
-      // a fresh catalog (attach-time recovery) may not have the table yet
-      if (spark.catalog.tableExists(t)) spark.catalog.refreshTable(t)
-    }
-    IndexFiles.delete(spark, compactMarker(idx.dir))
-  }
-
-  private def recoverCompaction(spark: SparkSession, idx: Index): Unit =
-    if (IndexFiles.exists(spark, compactMarker(idx.dir)))
-      promoteCompaction(spark, idx)
-    else {
-      val conf = spark.sparkContext.hadoopConfiguration
-      Seq(idx.adjTable, idx.nodesTable).foreach { t =>
-        val stage = stagePath(idx.dir, t)
-        val fs = stage.getFileSystem(conf)
-        if (fs.exists(stage)) fs.delete(stage, true) // uncommitted: roll back
-      }
-    }
+  /** A fresh catalog (attach-time recovery) may not have the tables yet. */
+  private def refreshTables(spark: SparkSession, idx: Index): Unit =
+    Seq(idx.adjTable, idx.nodesTable).filter(spark.catalog.tableExists)
+      .foreach(spark.catalog.refreshTable)
 
   private def storedBuckets(spark: SparkSession, dir: String): Int =
-    IndexFiles.readString(spark, bucketsPath(dir))
+    IndexFiles.storedBuckets(spark, bucketsPath(dir))
       .getOrElse(throw new IllegalStateException(
         s"GraphAnn: missing bucket spec at ${bucketsPath(dir)}"))
-      .trim.toInt
-
-  private def registerTables(spark: SparkSession, prefix: String,
-                             dir: String, b: Int): Unit = {
-    if (!spark.catalog.tableExists(s"${prefix}_gadj"))
-      spark.sql(
-        s"""CREATE TABLE ${prefix}_gadj (node_id BIGINT, neighbor_id BIGINT,
-           |cos DOUBLE, n_emb ARRAY<FLOAT>) USING PARQUET
-           |CLUSTERED BY (node_id) SORTED BY (node_id) INTO $b BUCKETS
-           |LOCATION '${new HPath(dir, s"${prefix}_gadj")}'""".stripMargin)
-    if (!spark.catalog.tableExists(s"${prefix}_gnodes"))
-      spark.sql(
-        s"""CREATE TABLE ${prefix}_gnodes (vec_id BIGINT,
-           |embedding ARRAY<FLOAT>) USING PARQUET
-           |CLUSTERED BY (vec_id) SORTED BY (vec_id) INTO $b BUCKETS
-           |LOCATION '${new HPath(dir, s"${prefix}_gnodes")}'""".stripMargin)
-  }
 
   /** Attach a previously built graph index: rolls an interrupted
     * compaction forward (marker present) or an uncommitted stage back,
@@ -451,8 +385,15 @@ object GraphAnn {
       .trim.split(' ')
     val b = storedBuckets(spark, dir)
     val idx = Index(prefix, dir, meta(0).toLong, meta(1).toInt, meta(2).toLong)
-    recoverCompaction(spark, idx)
-    registerTables(spark, prefix, dir, b)
+    if (IndexFiles.rollForward(spark, compactMarker(dir), tableDirs(idx)))
+      refreshTables(spark, idx)
+    else IndexFiles.discardStages(spark, tableDirs(idx))
+    Bucketing.registerBucketed(spark, idx.adjTable,
+      "node_id BIGINT, neighbor_id BIGINT, cos DOUBLE, n_emb ARRAY<FLOAT>",
+      Seq("node_id"), b, tableDirs(idx)(0).toString)
+    Bucketing.registerBucketed(spark, idx.nodesTable,
+      "vec_id BIGINT, embedding ARRAY<FLOAT>", Seq("vec_id"), b,
+      tableDirs(idx)(1).toString)
     idx
   }
 

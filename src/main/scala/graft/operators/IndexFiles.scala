@@ -3,32 +3,39 @@ package graft.operators
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileContext, Options, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.sources.Bucketing
 
-/** Small-file state store shared by the three persisted index families
-  * ([[DedupIndex]] markers/meta, [[TextIndex]] segment list + metas,
-  * [[AnnIndex]] build marker). Two rules, applied uniformly:
+/** The commit layer of the five persisted stores ([[CdcStore]],
+  * [[TextIndex]], [[DedupIndex]], [[AnnIndex]], [[GraphAnn]]) and of the
+  * streaming batch markers ([[graft.streaming.CorpusStreams]]). Each
+  * store keeps its own payload; every commit decision is one function
+  * here:
   *
-  *  1. **Every commit-point write is all-or-nothing.** The content is
-  *     staged to a hidden temp file in the target's directory and then
-  *     RENAMED over the target. An in-place truncate-then-write
-  *     (`Files.writeString`) leaves a torn or empty file on a crash
-  *     mid-write — for a segment list that silently serves an EMPTY
-  *     index, which is worse than crashing. On the local filesystem the
-  *     rename is `java.nio` `ATOMIC_MOVE` (one `rename(2)` syscall —
-  *     Hadoop's own local overwrite-rename is delete-then-rename, which
-  *     reopens the missing-file window); on HDFS it is
-  *     `FileContext.rename(…, Rename.OVERWRITE)`, the namenode-atomic
-  *     form. Object stores without atomic rename (raw S3) keep the
-  *     staged-write discipline but inherit the store's weaker guarantee —
-  *     same caveat as every rename-committed table format.
+  *  - [[atomicWrite]] — every state file (list, meta, bucket count,
+  *    marker) is staged to a hidden temp file beside the target and
+  *    RENAMED over it, so a crash never leaves a torn or empty file — for
+  *    a segment list that would silently serve an EMPTY store. On the
+  *    local filesystem the rename is `java.nio` `ATOMIC_MOVE` (one
+  *    `rename(2)`; Hadoop's local overwrite-rename is delete-then-rename,
+  *    which reopens the missing-file window); on HDFS it is
+  *    `FileContext.rename(…, Rename.OVERWRITE)`. Object stores without
+  *    atomic rename (raw S3) keep the staged write but inherit the
+  *    store's weaker guarantee — the caveat of every rename-committed
+  *    table format.
+  *  - [[storedBuckets]] / [[writeBucketsOnce]] — a store's bucket count,
+  *    recorded on the first write; the stored count wins after.
+  *  - [[SegmentLog]] — the tagged segment list of an append-only store:
+  *    begin, commit, compaction entry.
+  *  - [[swapGenerations]] / [[rollForward]] / [[discardStages]] — the
+  *    marker-committed swap every compaction promotes through.
   *
-  *  2. **Index state lives with the index data.** All paths resolve
-  *     through the Hadoop `FileSystem` of the index directory itself, so
-  *     on a cluster filesystem the markers/meta land NEXT TO the parquet
-  *     they describe — a `java.nio` write would drop them on the driver's
-  *     local disk, and attach from any other host would see data with no
-  *     state (r11 ADVICE).
+  * All paths resolve through the Hadoop `FileSystem` of the store
+  * directory itself, so on a cluster filesystem the state lands NEXT TO
+  * the parquet it describes (a `java.nio` write would drop it on the
+  * driver's local disk, and attach from another host would see data with
+  * no state). Every store is SINGLE WRITER by contract; readers are safe
+  * at any point, since a rename is their only commit point.
   */
 private[graft] object IndexFiles {
 
@@ -95,32 +102,6 @@ private[graft] object IndexFiles {
       finally in.close()
     }
 
-  /** Segment-list entry grammar shared by [[TextIndex]] and [[CdcStore]]:
-    * space-separated entries, each `id` (untagged) or `id:tag1,tag2,…`
-    * (tags carry the exactly-once batch markers; multiple appear when a
-    * compaction folded several tagged segments into one). Writers
-    * validate tags against the separator set before ever calling these. */
-  def readSegEntries(spark: SparkSession, list: Path): Seq[(Int, Seq[String])] =
-    readString(spark, list).map(_.trim) match {
-      case None | Some("") => Seq.empty
-      case Some(s) =>
-        s.split(' ').toSeq.map { e =>
-          e.split(':') match {
-            case Array(i)      => (i.toInt, Seq.empty[String])
-            case Array(i, tgs) => (i.toInt, tgs.split(',').toSeq)
-          }
-        }
-    }
-
-  /** The single commit point for every list mutation: atomic rename — a
-    * reader sees the old list or the new one, never a prefix of either. */
-  def writeSegEntries(spark: SparkSession, list: Path,
-                      entries: Seq[(Int, Seq[String])]): Unit =
-    writeString(spark, list,
-      entries.map { case (i, tgs) =>
-        if (tgs.isEmpty) s"$i" else s"$i:${tgs.mkString(",")}"
-      }.mkString(" "))
-
   /** Reject a batch tag that would corrupt the segment-list grammar —
     * called BEFORE anything is written. */
   def requireValidTag(tag: String): Unit = require(
@@ -136,6 +117,163 @@ private[graft] object IndexFiles {
 
   def delete(spark: SparkSession, p: Path): Unit =
     p.getFileSystem(conf(spark)).delete(p, false)
+
+  /** The bucket count stored in `file`, or None before the first write. */
+  def storedBuckets(spark: SparkSession, file: Path): Option[Int] =
+    readString(spark, file).map(_.trim.toInt)
+
+  /** Record a store's bucket count on its first write. The stored count
+    * wins over every later parameter: files written with another count
+    * than the declared bucket spec would make pruning silently read the
+    * wrong buckets. */
+  def writeBucketsOnce(spark: SparkSession, file: Path, buckets: Int): Unit =
+    if (!exists(spark, file)) writeString(spark, file, buckets.toString)
+
+  /** What an append or attach reads of a [[SegmentLog]]: the list's
+    * entries (segment id, batch tags) in commit order, and the bucket
+    * count — stored, or the caller's before the first commit. */
+  final case class LogState(entries: Seq[(Int, Seq[String])], buckets: Int) {
+    def ids: Seq[Int] = entries.map(_._1)
+    def nextId: Int = ids.lastOption.getOrElse(-1) + 1
+    def listed(batchTag: Option[String]): Boolean =
+      batchTag.exists(entries.flatMap(_._2).contains)
+  }
+
+  /** A tagged segment log ([[TextIndex]] segments, [[CdcStore]]): `list`
+    * names the live segments in commit order, `bucketsFile` holds the
+    * store's bucket count. An append writes its immutable segment between
+    * [[begin]] and [[commit]]; the list rename is the only commit point,
+    * so a crash before it leaves an unreferenced orphan segment and the
+    * old list intact — never a torn store. The batch tag rides the list
+    * entry, i.e. the same single write that commits the segment, so a
+    * replayed micro-batch whose tag is listed is a no-op (exactly-once;
+    * a separate done-marker would leave a window between commit and
+    * marker where a retry double-ingests).
+    *
+    * List grammar: space-separated entries, each `id` (untagged) or
+    * `id:tag1,tag2,…` (several tags when a compaction folded several
+    * tagged segments into one). */
+  final case class SegmentLog(list: Path, bucketsFile: Path) {
+
+    def buckets(spark: SparkSession, fallback: Int): Int =
+      storedBuckets(spark, bucketsFile).getOrElse(fallback)
+
+    /** The list (read once) and the bucket count. An empty or missing
+      * list is a valid empty store. */
+    def read(spark: SparkSession, fallbackBuckets: Int): LogState =
+      LogState(entries(spark), buckets(spark, fallbackBuckets))
+
+    /** Start an append: validate the tag before anything is written, then
+      * read the log once. The caller returns early when
+      * `state.listed(batchTag)` (a replay), and otherwise writes segment
+      * `state.nextId` with `state.buckets` buckets. */
+    def begin(spark: SparkSession, batchTag: Option[String],
+              fallbackBuckets: Int): LogState = {
+      batchTag.foreach(requireValidTag)
+      mkdirs(spark, list.getParent)
+      read(spark, fallbackBuckets)
+    }
+
+    /** Commit the append begun as `st`: the bucket count once, then the
+      * list with the new segment's entry and tag. */
+    def commit(spark: SparkSession, st: LogState,
+               batchTag: Option[String]): Unit = {
+      writeBucketsOnce(spark, bucketsFile, st.buckets)
+      write(spark, st.entries :+ ((st.nextId, batchTag.toSeq)))
+    }
+
+    /** Commit a compaction of the `live` segments into segment `id`: the
+      * list then names only `id`, carrying the union of the live tags so
+      * a batch replayed after compaction stays a no-op. Retention keeps
+      * the newest `maxTags` — a replay can only re-deliver recent batches
+      * (a bounded checkpoint window), so the oldest go first. */
+    def commitCompaction(spark: SparkSession, live: Seq[Int], id: Int,
+                         maxTags: Int): Unit =
+      write(spark, Seq((id, entries(spark).filter(e => live.contains(e._1))
+        .flatMap(_._2).distinct.takeRight(maxTags))))
+
+    private def entries(spark: SparkSession): Seq[(Int, Seq[String])] =
+      readString(spark, list).map(_.trim) match {
+        case None | Some("") => Seq.empty
+        case Some(s) =>
+          s.split(' ').toSeq.map { e =>
+            e.split(':') match {
+              case Array(i)      => (i.toInt, Seq.empty[String])
+              case Array(i, tgs) => (i.toInt, tgs.split(',').toSeq)
+            }
+          }
+      }
+
+    private def write(spark: SparkSession,
+                      entries: Seq[(Int, Seq[String])]): Unit =
+      writeString(spark, list,
+        entries.map { case (i, tgs) =>
+          if (tgs.isEmpty) s"$i" else s"$i:${tgs.mkString(",")}"
+        }.mkString(" "))
+  }
+
+  /** `<d>_stage`: where a compaction writes the next generation of `d`. */
+  def stageOf(d: Path): Path = new Path(d.getParent, s"${d.getName}_stage")
+
+  private def asideOf(d: Path): Path = new Path(d.getParent, s"${d.getName}_old")
+
+  /** Write `df` as a bucketed table into [[stageOf]](`dir`), through a
+    * temporary catalog name that is dropped after (external: only the
+    * files stay). The bucket-id file names survive the promotion rename,
+    * so the canonical table's declared spec stays true. */
+  def stageBucketed(df: DataFrame, table: String, dir: Path,
+                    keys: Seq[String], buckets: Int): Unit = {
+    val tmp = s"${table}__stage"
+    df.sparkSession.sql(s"DROP TABLE IF EXISTS $tmp")
+    Bucketing.saveBucketed(df, tmp, keys, buckets,
+      Some(stageOf(dir).toString), SaveMode.Overwrite)
+    df.sparkSession.sql(s"DROP TABLE $tmp")
+  }
+
+  /** Promote every staged generation in `dirs` (all staged beforehand).
+    * Writing `marker` is the commit point: before it the compaction never
+    * happened (its stages are garbage), after it the promotion WILL
+    * complete — [[rollForward]] resumes it after a crash. Catalog refresh
+    * and registration stay with the caller. */
+  def swapGenerations(spark: SparkSession, marker: Path,
+                      dirs: Seq[Path]): Unit = {
+    writeString(spark, marker, "compact")
+    promote(spark, marker, dirs)
+  }
+
+  /** Finish a committed swap a crash interrupted: promotes only when
+    * `marker` is present (one existence check when clean, so it is cheap
+    * enough for every attach or probe). True if it promoted. */
+  def rollForward(spark: SparkSession, marker: Path, dirs: Seq[Path]): Boolean = {
+    val committed = exists(spark, marker)
+    if (committed) promote(spark, marker, dirs)
+    committed
+  }
+
+  /** Delete the stages of a swap that never committed. */
+  def discardStages(spark: SparkSession, dirs: Seq[Path]): Unit =
+    dirs.foreach(d => d.getFileSystem(conf(spark)).delete(stageOf(d), true))
+
+  /** Per dir: the old generation is renamed ASIDE (never deleted before
+    * the new one is in place, so any failure leaves a complete generation
+    * on disk), the stage renamed in, the aside deleted; then the marker.
+    * Idempotent: which of stage/canonical/aside exist encodes the
+    * progress, and every crash state resumes. */
+  private def promote(spark: SparkSession, marker: Path, dirs: Seq[Path]): Unit = {
+    dirs.foreach { d =>
+      val fs = d.getFileSystem(conf(spark))
+      val (stage, aside) = (stageOf(d), asideOf(d))
+      def rename(from: Path, to: Path): Unit =
+        if (!fs.rename(from, to))
+          throw new java.io.IOException(s"rename $from -> $to failed")
+      if (fs.exists(stage)) {
+        if (fs.exists(d) && !fs.exists(aside)) rename(d, aside)
+        rename(stage, d)
+      }
+      if (fs.exists(aside)) fs.delete(aside, true)
+    }
+    delete(spark, marker)
+  }
 
   /** Byte-derived width for a bucketed segment WRITE (r17 verdict item 2,
     * promoted from the q_cdc_apply fixture into the stores so EVERY

@@ -19,22 +19,6 @@ import graft.sources.Tables
   */
 object Similarity {
 
-  /** Unit-normalize a float-array column into `out` (double precision);
-    * zero vectors pass through unscaled instead of dividing by zero (NaN
-    * would poison downstream clustering). Two-step on purpose: the norm is
-    * materialized as a column first, so the per-element division reads a
-    * bound reference — inlining the aggregate into the transform lambda
-    * re-evaluates it per element (O(d²) per row, and this lineage is
-    * recomputed by every KMeans pass). */
-  private def withUnitNorm(df: DataFrame, in: String, out: String): DataFrame = {
-    val d = transform(col(in), x => x.cast("double"))
-    val tmp = s"_${out}_norm"
-    df.withColumn(tmp, sqrt(aggregate(d, lit(0.0), (acc, x) => acc + x * x)))
-      .withColumn(out,
-        transform(d, x => x / when(col(tmp) === 0.0, 1.0).otherwise(col(tmp))))
-      .drop(tmp)
-  }
-
   /** Exact brute-force cosine top-k for query vectors `vec_id < nQueries`.
     * The query side is tiny and broadcast; cosine runs in one codegen'd
     * kernel ([[graft.functions.CosineSimF]]); ranking is a per-query window

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Arms
+import graft.sources.Bucketing
 
 /** Persisted INVERTED TEXT INDEX — the retrieval counterpart of
   * [[DedupIndex]] (fingerprints) and [[AnnIndex]] (embeddings): tf, df,
@@ -45,17 +46,10 @@ import graft.Arms
   * the segment metas for N and avgdl. Segment-spec probes are
   * spec-pinned equal to the from-scratch path over the merged corpus.
   *
-  * All list/meta/bucket-spec files commit through [[IndexFiles]]: staged
-  * temp file + atomic rename, and resolved through the index directory's
-  * own Hadoop filesystem — a crash mid-write can never leave a torn
-  * `segments.list` (which [[attachSegments]] would read as a valid EMPTY
-  * index), and on a cluster fs the state lives beside the data.
-  *
-  * SINGLE WRITER by contract: [[appendSegment]] and [[compactSegments]]
-  * read-modify-write the segment list, so exactly one maintenance
-  * process may mutate an index directory at a time (the foreachBatch
-  * loops that own these stores serialize naturally). Concurrent READERS
-  * are safe at any point — the list rename is their only commit point. */
+  * Segments commit through the tagged [[IndexFiles.SegmentLog]]
+  * `segments.list` (exactly-once batch tags, crash contract); both
+  * families record their bucket count once in `text_index.buckets`, and
+  * every meta is an [[IndexFiles]] atomic write. */
 object TextIndex {
 
   final case class Index(postings: String, dir: String,
@@ -65,25 +59,11 @@ object TextIndex {
 
   private def metaPath(dir: String) = new HPath(dir, "text_index.meta")
   private def bucketsPath(dir: String) = new HPath(dir, "text_index.buckets")
+  private def segLog(dir: String) =
+    IndexFiles.SegmentLog(new HPath(dir, "segments.list"), bucketsPath(dir))
 
-  /** Record the bucket count on first write; STORED WINS everywhere after
-    * — a write or re-registration with a different count would produce a
-    * physical layout that diverges from the declared bucket spec, and
-    * term pruning would silently read the wrong buckets (the DedupIndex
-    * meta-wins rule). [[buildIndex]] overwrites (a monolithic build
-    * replaces the whole store); [[appendSegment]]/[[compactSegments]]
-    * resolve the stored count before writing a single row. */
-  private def writeBucketsOnce(spark: SparkSession, dir: String,
-                               buckets: Int): Unit = {
-    val p = bucketsPath(dir)
-    if (!IndexFiles.exists(spark, p))
-      IndexFiles.writeString(spark, p, buckets.toString)
-  }
-
-  private def storedBuckets(spark: SparkSession, dir: String,
-                            fallback: Int): Int =
-    IndexFiles.readString(spark, bucketsPath(dir))
-      .map(_.trim.toInt).getOrElse(fallback)
+  private val PostingsDdl = "w STRING, doc_id BIGINT, tf BIGINT, df BIGINT, len BIGINT"
+  private val SegmentDdl = "w STRING, doc_id BIGINT, tf BIGINT, len BIGINT"
 
   /** (doc_id, w, tf) of a corpus — the shared tokenize+count stage. */
   private def termFreqs(docs: DataFrame): DataFrame =
@@ -103,15 +83,13 @@ object TextIndex {
     val dfreq = tf.groupBy("w").agg(count(lit(1)).as("df"))
     val lens = tf.groupBy("doc_id").agg(sum("tf").as("len"))
     val table = s"${prefix}_postings"
-    IndexFiles.boundBucketedWrite(
+    Bucketing.saveBucketed(
+      IndexFiles.boundBucketedWrite(
         tf.join(dfreq, "w").join(lens, "doc_id")
           .select(col("w"), col("doc_id"), col("tf"), col("df"), col("len")),
-        "w", buckets, statBytes)
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "w")
-      .sortBy("w")
-      .option("path", new HPath(dir, table).toString)
-      .saveAsTable(table)
+        "w", buckets, statBytes),
+      table, Seq("w"), buckets, Some(new HPath(dir, table).toString),
+      SaveMode.Overwrite)
     // a build REPLACES the store, so its count overwrites (not write-once):
     // leaving a stale count from an earlier build at the same dir would
     // declare a bucket spec the fresh files don't satisfy
@@ -128,14 +106,10 @@ object TextIndex {
     * session's catalog dies with it; the files and meta are the truth). */
   def attachIndex(spark: SparkSession, prefix: String, dir: String,
                   buckets: Int = 32): Index = {
-    val b = storedBuckets(spark, dir, buckets)
+    val b = segLog(dir).buckets(spark, buckets)
     val table = s"${prefix}_postings"
-    if (!spark.catalog.tableExists(table))
-      spark.sql(
-        s"""CREATE TABLE $table (w STRING, doc_id BIGINT, tf BIGINT,
-           |df BIGINT, len BIGINT) USING PARQUET
-           |CLUSTERED BY (w) SORTED BY (w) INTO $b BUCKETS
-           |LOCATION '${new HPath(dir, table)}'""".stripMargin)
+    Bucketing.registerBucketed(spark, table, PostingsDdl, Seq("w"), b,
+      new HPath(dir, table).toString)
     val parts = IndexFiles.readString(spark, metaPath(dir))
       .getOrElse(throw new IllegalStateException(
         s"TextIndex.attachIndex: missing meta at ${metaPath(dir)}"))
@@ -148,41 +122,20 @@ object TextIndex {
   }
 
   private def segMetaPath(dir: String, id: Int) = new HPath(dir, s"seg$id.meta")
-  private def segListPath(dir: String) = new HPath(dir, "segments.list")
 
   /** Append one batch as a NEW segment: its own bucketed+sorted postings
     * table `(w, doc_id, tf, len)` — no df column; df is a query-time
-    * derivation — plus a per-segment (nDocs, sumLen) meta. Existing
-    * segments are immutable; the segment list commits LAST via an atomic
-    * rename, so a crash anywhere mid-append leaves an unreferenced
-    * orphan table and the OLD list intact — never a torn index.
-    *
-    * `batchTag` makes the append EXACTLY-ONCE for replayed streaming
-    * micro-batches: the tag rides the segment-list entry, i.e. the same
-    * single write that commits the segment — a retried foreachBatch
-    * whose tag is already listed returns without writing, and a crash
-    * BEFORE the list write leaves nothing committed, so the retry's
-    * append is the first one. (A separate done-marker file would leave
-    * a window between commit and marker where a retry double-ingests.)
-    * [[compactSegments]] carries every live tag forward onto the
-    * compacted entry, so the guarantee survives compaction. Tags must
-    * not contain `:`/`,`/whitespace (the list-entry separators) —
-    * VALIDATED here, before anything is written: one bad tag in the
-    * committed list would corrupt every future parse of it.
-    *
-    * Single writer by contract (see the object scaladoc): this
-    * read-modify-writes the segment list. */
+    * derivation — plus a per-segment (nDocs, sumLen) meta, committed by
+    * the [[IndexFiles.SegmentLog]] (`batchTag`: exactly-once replay,
+    * validated before anything is written). Existing segments are
+    * immutable. */
   def appendSegment(spark: SparkSession, docs: DataFrame, prefix: String,
                     dir: String, buckets: Int = 32,
                     batchTag: Option[String] = None): Segments = {
-    batchTag.foreach(IndexFiles.requireValidTag)
-    IndexFiles.mkdirs(spark, new HPath(dir))
-    val prev = attachSegments(spark, prefix, dir, buckets)
-    if (batchTag.exists(readTags(spark, dir).contains)) return prev
-    // stored count wins over the parameter: files written with a different
-    // count than the declared spec would silently break bucket pruning
-    val b = storedBuckets(spark, dir, buckets)
-    val id = prev.ids.lastOption.getOrElse(-1) + 1
+    val st = segLog(dir).begin(spark, batchTag, buckets)
+    val prev = register(spark, prefix, dir, st)
+    if (st.listed(batchTag)) return prev
+    val (b, id) = (st.buckets, st.nextId)
     // batch bytes read BEFORE the checkpoint hides them (file-count bound)
     val statBytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
     val tf = termFreqs(docs).localCheckpoint()
@@ -192,43 +145,25 @@ object TextIndex {
     // nothing) is a graceful no-op — a streaming micro-batch of
     // empty-text docs must not abort the ingest loop or leave an orphan
     // segment table
-    val st = lens.agg(count(lit(1)).as("n"), sum("len").as("s")).head()
-    if (st.getLong(0) == 0) return prev
+    val n = lens.agg(count(lit(1)).as("n"), sum("len").as("s")).head()
+    if (n.getLong(0) == 0) return prev
     val table = s"${prefix}_seg$id"
     // file count bounded by the batch's bytes, not the caller's width —
     // a streaming micro-batch written at full session width would fan
     // tasks×buckets tiny files into the segment, and every later probe
     // pays fixed task setup per file (the r17 CDC lesson, in the store)
-    IndexFiles.boundBucketedWrite(
+    Bucketing.saveBucketed(
+      IndexFiles.boundBucketedWrite(
         tf.join(lens, "doc_id")
           .select(col("w"), col("doc_id"), col("tf"), col("len")),
-        "w", b, statBytes)
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(b, "w")
-      .sortBy("w")
-      .option("path", new HPath(dir, table).toString)
-      .saveAsTable(table)
-    writeBucketsOnce(spark, dir, b)
+        "w", b, statBytes),
+      table, Seq("w"), b, Some(new HPath(dir, table).toString),
+      SaveMode.Overwrite)
     IndexFiles.writeString(spark, segMetaPath(dir, id),
-      s"${st.getLong(0)} ${st.getLong(1)}")
-    val ids = prev.ids :+ id
-    writeEntries(spark, dir,
-      readEntries(spark, dir) :+ ((id, batchTag.toSeq)))
-    Segments(prefix, dir, ids)
+      s"${n.getLong(0)} ${n.getLong(1)}")
+    segLog(dir).commit(spark, st, batchTag)
+    Segments(prefix, dir, prev.ids :+ id)
   }
-
-  /** (segment id, batch tags) entries — the [[IndexFiles.readSegEntries]]
-    * grammar, shared with [[CdcStore]]. */
-  private def readEntries(spark: SparkSession,
-                          dir: String): Seq[(Int, Seq[String])] =
-    IndexFiles.readSegEntries(spark, segListPath(dir))
-
-  private def writeEntries(spark: SparkSession, dir: String,
-                           entries: Seq[(Int, Seq[String])]): Unit =
-    IndexFiles.writeSegEntries(spark, segListPath(dir), entries)
-
-  private def readTags(spark: SparkSession, dir: String): Set[String] =
-    readEntries(spark, dir).flatMap(_._2).toSet
 
   /** (nDocs, sumLen) of one segment — loud on a missing meta (the
     * segment is listed, so its meta committed before the list did; its
@@ -245,19 +180,15 @@ object TextIndex {
     * session's catalog lacks. An empty/missing list is a valid empty
     * index. */
   def attachSegments(spark: SparkSession, prefix: String, dir: String,
-                     buckets: Int = 32): Segments = {
-    val b = storedBuckets(spark, dir, buckets)
-    val ids = readEntries(spark, dir).map(_._1)
-    ids.foreach { id =>
-      val table = s"${prefix}_seg$id"
-      if (!spark.catalog.tableExists(table))
-        spark.sql(
-          s"""CREATE TABLE $table (w STRING, doc_id BIGINT, tf BIGINT,
-             |len BIGINT) USING PARQUET
-             |CLUSTERED BY (w) SORTED BY (w) INTO $b BUCKETS
-             |LOCATION '${new HPath(dir, table)}'""".stripMargin)
-    }
-    Segments(prefix, dir, ids)
+                     buckets: Int = 32): Segments =
+    register(spark, prefix, dir, segLog(dir).read(spark, buckets))
+
+  private def register(spark: SparkSession, prefix: String, dir: String,
+                       st: IndexFiles.LogState): Segments = {
+    val seg = Segments(prefix, dir, st.ids)
+    st.ids.map(seg.tableOf).foreach(t => Bucketing.registerBucketed(spark, t,
+      SegmentDdl, Seq("w"), st.buckets, new HPath(dir, t).toString))
+    seg
   }
 
   /** COMPACT a grown segmented index: a daily append loop accretes one
@@ -266,32 +197,16 @@ object TextIndex {
     * new segment table (a fresh id — existing segments stay immutable)
     * with the summed meta, then atomically swaps the segment list to
     * reference only it. Crash semantics mirror [[appendSegment]]: the
-    * list rename is the commit point, so a crash mid-compaction leaves
-    * the old list serving the old segments and at worst an orphan
-    * compacted table. The compacted entry carries the UNION of the
-    * compacted segments' batch tags, so a streaming micro-batch replayed
-    * after compaction (restart from an older checkpoint) still finds its
-    * tag and stays a no-op — compaction must not reopen the
-    * exactly-once window. Because df is a QUERY-TIME derivation,
-    * compaction is a pure rewrite — no statistics to rebuild (the
-    * advantage of not denormalizing df into segments). Old segment
-    * tables/dirs are left for the caller to garbage-collect once no
-    * reader can hold the old list.
-    *
-    * Tag retention is BOUNDED by `maxTags` (newest kept, append order):
-    * replays can only come from a bounded checkpoint window, so carrying
-    * every historical tag forever would grow the one-line list without
-    * bound across the stream's lifetime. Size `maxTags` comfortably above
-    * the engine's replayable-batch window (a handful); the default is
-    * orders of magnitude above it.
-    *
-    * Single writer by contract (see the object scaladoc): this
-    * read-modify-writes the segment list. */
+    * list swap ([[IndexFiles.SegmentLog.commitCompaction]]: live tags
+    * carried forward, newest `maxTags` kept) is the commit point.
+    * Because df is a QUERY-TIME derivation, compaction is a pure rewrite
+    * — no statistics to rebuild (the advantage of not denormalizing df
+    * into segments). Old segment tables/dirs are left for the caller to
+    * garbage-collect once no reader can hold the old list. */
   def compactSegments(spark: SparkSession, seg: Segments,
                       buckets: Int = 32, maxTags: Int = 1024): Segments = {
     require(seg.ids.nonEmpty, "compactSegments: empty segment list")
-    val b = storedBuckets(spark, seg.dir, buckets)
-    val entries = readEntries(spark, seg.dir)
+    val b = segLog(seg.dir).buckets(spark, buckets)
     val id = seg.ids.last + 1
     val all = seg.ids.map(i => spark.table(seg.tableOf(i)))
       .reduce(_.unionByName(_))
@@ -299,20 +214,14 @@ object TextIndex {
     // compacted file count derives from the live segments' TRUE bytes
     val liveBytes = seg.ids.map(i =>
       IndexFiles.dirBytes(spark, new HPath(seg.dir, seg.tableOf(i)))).sum
-    IndexFiles.boundBucketedWrite(all, "w", b, BigInt(liveBytes))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(b, "w")
-      .sortBy("w")
-      .option("path", new HPath(seg.dir, table).toString)
-      .saveAsTable(table)
+    Bucketing.saveBucketed(
+      IndexFiles.boundBucketedWrite(all, "w", b, BigInt(liveBytes)),
+      table, Seq("w"), b, Some(new HPath(seg.dir, table).toString),
+      SaveMode.Overwrite)
     val stats = seg.ids.map(i => segStats(spark, seg.dir, i))
     IndexFiles.writeString(spark, segMetaPath(seg.dir, id),
       s"${stats.map(_._1).sum} ${stats.map(_._2).sum}")
-    // newest tags win the cap: a replay can only re-deliver RECENT batches
-    // (bounded checkpoint window), so dropping the oldest is safe first
-    val liveTags = entries.filter(e => seg.ids.contains(e._1)).flatMap(_._2)
-      .distinct.takeRight(maxTags)
-    writeEntries(spark, seg.dir, Seq((id, liveTags)))
+    segLog(seg.dir).commitCompaction(spark, seg.ids, id, maxTags)
     Segments(seg.prefix, seg.dir, Seq(id))
   }
 
@@ -396,7 +305,7 @@ object TextIndex {
     val qTerms = termFreqs(queryDocs)
       .select(col("doc_id").as("query_id"), col("w"))
     val posts = prunedPostings(spark, seg.dir, seg.ids.map(seg.tableOf),
-      "w STRING, doc_id BIGINT, tf BIGINT, len BIGINT", qTerms)
+      SegmentDdl, qTerms)
     // df at query time: distinct docs per term over the probed postings.
     // (w, doc_id) is unique within AND across segments — segments
     // partition the corpus — so a plain count per term is the df. An
@@ -420,7 +329,7 @@ object TextIndex {
       .select(col("doc_id").as("query_id"), col("w"))
     // the same [[prunedPostings]] gate as the segmented probe — one table
     val posts = prunedPostings(spark, idx.dir, Seq(idx.postings),
-      "w STRING, doc_id BIGINT, tf BIGINT, df BIGINT, len BIGINT", qTerms)
+      PostingsDdl, qTerms)
     bm25Rank(posts, qTerms, idx.nDocs, idx.avgdl, topK, k1, b)
   }
 }

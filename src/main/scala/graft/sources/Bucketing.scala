@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Bucketed-table layout: pre-shuffle a table ONCE into hash buckets on its
   * join key so every subsequent join/aggregation on that key runs with zero
@@ -9,6 +9,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   *
   * Bucket metadata lives in the session catalog (`saveAsTable`); both sides
   * of a join must agree on key and bucket count for the exchange-free plan.
+  * [[saveBucketed]] and [[registerBucketed]] are the one write and the one
+  * re-registration every persisted store goes through.
   */
 object Bucketing {
 
@@ -20,15 +22,34 @@ object Bucketing {
     * bucket is a single file. */
   def writeBucketed(df: DataFrame, table: String, path: String,
                     key: String, buckets: Int): Unit =
-    df.repartition(buckets, df.col(key))
-      .write
-      .mode(SaveMode.Overwrite)
-      .option("path", path)
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .saveAsTable(table)
+    saveBucketed(df.repartition(buckets, df.col(key)), table, Seq(key),
+      buckets, Some(path), SaveMode.Overwrite)
 
-  /** Read a bucketed table back (bucket metadata comes from the catalog). */
-  def readBucketed(spark: org.apache.spark.sql.SparkSession, table: String): DataFrame =
-    spark.table(table)
+  /** The bucketed table write: `df` as catalog table `table`, bucketed and
+    * sorted by `keys`, at `path` (None: the table's own location, for an
+    * append). The caller picks the partitioning, which sets the file
+    * count: one file per (write task, bucket) pair. */
+  private[graft] def saveBucketed(df: DataFrame, table: String,
+                                  keys: Seq[String], buckets: Int,
+                                  path: Option[String], mode: SaveMode): Unit = {
+    val w = df.write.mode(mode)
+      .bucketBy(buckets, keys.head, keys.tail: _*)
+      .sortBy(keys.head, keys.tail: _*)
+    path.fold(w)(w.option("path", _)).saveAsTable(table)
+  }
+
+  /** Register the bucketed parquet table `table` over files already at
+    * `location` — how a fresh session attaches a store whose catalog died
+    * with the session that wrote it. No-op when the catalog has the
+    * table; `ddl` (the column list) is evaluated only when it registers. */
+  private[graft] def registerBucketed(spark: SparkSession, table: String,
+                                      ddl: => String, keys: Seq[String],
+                                      buckets: Int, location: String): Unit =
+    if (!spark.catalog.tableExists(table)) {
+      val k = keys.mkString(", ")
+      spark.sql(
+        s"""CREATE TABLE $table ($ddl) USING PARQUET
+           |CLUSTERED BY ($k) SORTED BY ($k) INTO $buckets BUCKETS
+           |LOCATION '$location'""".stripMargin)
+    }
 }

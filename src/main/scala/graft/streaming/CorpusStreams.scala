@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, TextAnalysis}
+import graft.operators.{Dedup, IndexFiles, TextAnalysis}
 
 /** Streaming twins of the corpus-hygiene operators: continuously arriving
   * documents filtered against a FIXED benchmark set.
@@ -128,8 +128,7 @@ object CorpusStreams {
                          commitDir: Option[String] = None): Unit = {
     val marker = commitDir.map(cd =>
       new org.apache.hadoop.fs.Path(cd, f"batch-$batchId%020d.committed"))
-    val fs = marker.map(_.getFileSystem(spark.sparkContext.hadoopConfiguration))
-    if (marker.zip(fs).exists { case (m, f) => f.exists(m) }) return
+    if (marker.exists(IndexFiles.exists(spark, _))) return
     val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
     try {
       val kept = graft.operators.DedupIndex
@@ -140,7 +139,7 @@ object CorpusStreams {
       sink(survivors)
       graft.operators.DedupIndex.appendToIndex(spark, survivors, idx)
       // marker LAST: it asserts both side effects completed
-      marker.zip(fs).foreach { case (m, f) => f.create(m, true).close() }
+      marker.foreach(IndexFiles.writeString(spark, _, ""))
     } finally
       spark.sparkContext.getPersistentRDDs
         .filter { case (id, _) => !rddsBefore.contains(id) }
@@ -223,11 +222,10 @@ object CorpusStreams {
                             commitDir: Option[String] = None): Unit = {
     val marker = commitDir.map(cd =>
       new org.apache.hadoop.fs.Path(cd, f"annbatch-$batchId%020d.committed"))
-    val fs = marker.map(_.getFileSystem(spark.sparkContext.hadoopConfiguration))
-    if (marker.zip(fs).exists { case (m, f) => f.exists(m) }) return
+    if (marker.exists(IndexFiles.exists(spark, _))) return
     graft.operators.AnnIndex.appendToIndex(spark, batch, idx)
     // marker LAST: it asserts the append completed
-    marker.zip(fs).foreach { case (m, f) => f.create(m, true).close() }
+    marker.foreach(IndexFiles.writeString(spark, _, ""))
   }
 
   /** Streaming ingest into the SEGMENTED text index: each micro-batch of

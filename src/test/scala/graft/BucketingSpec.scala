@@ -10,8 +10,8 @@ class BucketingSpec extends SparkSpec {
       "target/test-bucketed/lineitem", "l_orderkey", 8)
     Bucketing.writeBucketed(tables.orders, "ord_bucketed",
       "target/test-bucketed/orders", "o_orderkey", 8)
-    val li = Bucketing.readBucketed(spark, "li_bucketed")
-    val ord = Bucketing.readBucketed(spark, "ord_bucketed")
+    val li = spark.table("li_bucketed")
+    val ord = spark.table("ord_bucketed")
     val joined = li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .select("l_orderkey", "l_linenumber", "o_totalprice")
     // disable broadcast so the join planner must pick sort-merge/shuffle-hash
@@ -32,7 +32,7 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("aggregation on the bucket key also avoids the exchange") {
-    val li = Bucketing.readBucketed(spark, "li_bucketed")
+    val li = spark.table("li_bucketed")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val agg = li.groupBy("l_orderkey").agg(sum("l_quantity").as("q"))

@@ -380,6 +380,9 @@ class StreamingSpec extends SparkSpec {
       b.limit(5), 0L, idx, Some(commitDir))
     assert(spark.read.parquet(idx.vectorsPath).count() == before,
       "replayed committed batch must not append")
+    // one marker per committed batch, and no checksum sidecar beside them
+    assert(new java.io.File(commitDir).list().toSeq.sorted ==
+      Seq(0L, 1L).map(i => f"annbatch-$i%020d.committed"))
     // and queries over the streamed index match the batch-built one
     val queries = tables.embeddings.filter(col("vec_id") < 10)
     assert(AnnIndex.queryIndex(spark, idx, queries).collect().toSeq ==
@@ -625,6 +628,9 @@ class StreamingSpec extends SparkSpec {
     assert(sinkCalls == 1, "replay must not re-deliver")
     assert(spark.table(idx.fp).count() == fpAfter, "replay must not re-append")
     assert(spark.read.parquet(outDir).count() == 2)
+    // the batch's marker, and no checksum sidecar beside it
+    assert(new java.io.File(commitDir).list().toSeq ==
+      Seq("batch-00000000000000000007.committed"))
   }
 
   test("streaming decontamination matches the batch operator exactly") {
