@@ -22,13 +22,14 @@ final class Engine(val spark: SparkSession, val tables: Tables) {
     * doesn't touch the missing tables — the reference engine likewise only
     * loads what its metadata file lists.
     *
-    * Registration resolves each table's schema once per file stamp
+    * Registration resolves each table's relation once per file stamp
     * ([[sources.Tables.scan]]): the first registration of a directory in a
-    * JVM pays one inference job per table, later reads of the same files
-    * under the same parquet confs run none. The cache key is the qualified
-    * path plus those confs; a table rewritten in place (any file's path,
-    * length or mtime changes) is inferred again. Only schemas are cached,
-    * never DataFrames, file listings or results.
+    * session pays one inference job and one listing per table, later reads
+    * of the same files under the same parquet confs run no job and list no
+    * file. The cache key is the qualified path plus those confs; a table
+    * rewritten in place (any file's path, length or mtime changes) is
+    * resolved again. Only relations (schema and file listing) are cached,
+    * never DataFrames, rows or results.
     *
     * Side effect note: resolving `events` sets the session-level
     * `spark.sql.legacy.parquet.nanosAsLong` conf (the scan re-reads it at

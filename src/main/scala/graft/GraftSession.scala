@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** Opinionated session factory: the configuration this engine is designed
   * and benchmarked against, with the extensions (custom SQL functions, the
@@ -8,6 +9,16 @@ import org.apache.spark.sql.SparkSession
   * rule) pre-installed.
   */
 object GraftSession {
+
+  /** Entries in Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). Every distinct
+    * whole-stage or expression class the engine's plans generate must fit,
+    * or a repeat query compiles again what an earlier plan evicted. One
+    * run of all [[SparkEntry.queries]] keys generates about 3,900 classes;
+    * this is the smallest power of two at which two runs in one JVM evict
+    * none. The cache holds only classes a run has compiled, so the size
+    * is a bound, not an allocation. */
+  private[graft] val CodegenCacheEntries: Int = 8192
 
   /** Recommended settings; `master` defaults to all local cores, and
     * `shufflePartitions` should track the cluster's total cores (NOT the
@@ -22,6 +33,7 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheEntries.toString)
       .withExtensions(new GraftExtensions)
 
   /** The session of the diagnostic mains: [[builder]] on
@@ -48,7 +60,11 @@ object GraftSession {
     * extensions and confs only apply when this call actually creates the
     * session. In a JVM that already has one (notebooks, shared test
     * runners), configure that session yourself; `Engine.register` still
-    * installs the SQL functions either way. */
+    * installs the SQL functions either way. The codegen cache size
+    * ([[CodegenCacheEntries]]) is stricter still: it is a static conf, and
+    * Spark builds the cache once per JVM, on the first code generation,
+    * so it only takes effect when this call creates the first session in
+    * the JVM. */
   def open(dir: String, master: String = "local[*]"): Engine = {
     val spark = builder(master).getOrCreate()
     Engine(spark, dir)

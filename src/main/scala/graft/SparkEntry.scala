@@ -21,7 +21,7 @@ object SparkEntry {
     Relational.groupByAgg(Tables(spark, "/root/testdata/sf0.001"))
 
   /** Content fingerprint of a dataset directory: the full path string plus
-    * its [[Tables.Stamp]] — the quick-check the schema cache uses, listed
+    * its [[Tables.Stamp]] — the quick-check the relation cache uses, listed
     * through the Hadoop FileSystem API, so it works for any scheme.
     * Regenerated data at the same path changes the fingerprint. */
   private def datasetFingerprint(s: SparkSession, dataset: String): String = {

@@ -248,15 +248,14 @@ object DedupIndex {
     // pre-meta indexes (built before the meta existed) were all written
     // with the historical default of 8; write the meta forward
     val buckets = loadIndexBuckets(spark, idx.dir).getOrElse(8)
-    val autoScanKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val autoScanOld = spark.conf.get(autoScanKey)
-    spark.conf.set(autoScanKey, "false")
     // stage every table; canonical data and catalog untouched
-    try tableSpecs.zip(tableDirs(idx)).foreach { case ((name, _, keys, _), d) =>
-      val src = spark.table(name(idx))
-      IndexFiles.stageBucketed(src.repartition(buckets, keys.map(src.col): _*),
-        name(idx), d, keys, buckets)
-    } finally spark.conf.set(autoScanKey, autoScanOld)
+    Bucketing.withBucketedScan(spark) {
+      tableSpecs.zip(tableDirs(idx)).foreach { case ((name, _, keys, _), d) =>
+        val src = spark.table(name(idx))
+        IndexFiles.stageBucketed(src.repartition(buckets, keys.map(src.col): _*),
+          name(idx), d, keys, buckets)
+      }
+    }
     IndexFiles.swapGenerations(spark, markerPath(idx.dir), tableDirs(idx))
     refresh(spark, idx)
     writeIndexMeta(spark, idx.dir, buckets)

@@ -435,18 +435,6 @@ object GraphAnn {
       .orderBy("query_id", "neighbor_id")
   }
 
-  /** Run `f` with bucketed scans FORCED on: the planner's
-    * DisableUnnecessaryBucketedScan rule turns bucketed reads off for
-    * plans with no downstream join/aggregation on the bucket key — which
-    * is exactly a hop's bare filter+collect probe — and with it goes the
-    * SelectedBucketsCount pruning this index's layout exists for. */
-  private[graft] def withBucketPruning[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try f finally spark.conf.set(key, prev)
-  }
-
   /** [[beamSearch]] plus the number of (query, candidate) scorings — the
     * candidate-fraction numerator the recall harness and PLANS.md report
     * (fraction = count / (queries × nNodes)). */
@@ -480,7 +468,7 @@ object GraphAnn {
     // seed: the entry point is every query's first candidate (unless it
     // IS the query) — the batch's single gnodes probe; every later hop
     // reads only gadj, whose rows carry the neighbor vectors
-    val seed = withBucketPruning(spark) {
+    val seed = Bucketing.withBucketedScan(spark) {
       nodes.filter(col("vec_id") === idx.entry)
         .crossJoin(broadcast(qv))
         .withColumn("cos",
@@ -502,7 +490,7 @@ object GraphAnn {
     // calls — bit-identical floats, so beam decisions and the output pair
     // set are unchanged (spec-pinned). Otherwise (the 100 TB regime)
     // every hop stays a bucket-pruned distributed probe, byte-for-byte.
-    val adjRows = withBucketPruning(spark) {
+    val adjRows = Bucketing.withBucketedScan(spark) {
       Arms.collectBounded("graphAnn.driverScore",
         adj.select(col("node_id"), col("neighbor_id"), col("n_emb")),
         Arms.GraphAnnDriverMaxRows, Arms.GraphDriverMaxBytes)
@@ -550,7 +538,7 @@ object GraphAnn {
                 org.apache.spark.sql.catalyst.util.ArrayData)]).iterator
                 .map { case (nb, e) => (q, nb, graft.functions.HashImpl.cosineF(qe, e)) })
           }
-        else withBucketPruning(spark) {
+        else Bucketing.withBucketedScan(spark) {
           val adjFront =
             if (Arms.small(spark, "graphAnn.isin", fIds.length, isinMax, "rows"))
               adj.filter(col("node_id").isin(fIds: _*))

@@ -52,4 +52,17 @@ object Bucketing {
            |CLUSTERED BY ($k) SORTED BY ($k) INTO $buckets BUCKETS
            |LOCATION '$location'""".stripMargin)
     }
+
+  /** Run `f` with bucketed scans forced on. The planner's
+    * `DisableUnnecessaryBucketedScan` rule turns a bucketed read off when
+    * no join or aggregation on the bucket key sits above it — which is a
+    * bare filter-and-collect probe, and a scan that only rewrites a
+    * table — and with it go bucket pruning and the one-file-per-bucket
+    * read a store's layout exists for. */
+  private[graft] def withBucketedScan[T](spark: SparkSession)(f: => T): T = {
+    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try f finally spark.conf.set(key, prev)
+  }
 }

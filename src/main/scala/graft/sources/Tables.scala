@@ -2,11 +2,14 @@ package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.{SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.execution.datasources.{DataSource, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{expr, timestamp_micros}
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.LongType
 
 /** Parquet-backed table catalog.
   *
@@ -17,11 +20,12 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * gets predicate pushdown, column pruning and partition pruning for free,
   * which is the scan behavior we want at 100 TB.
   *
-  * Each table's schema is resolved once per file stamp, the way a metastore
-  * serves it: every read goes through [[Tables.scan]], so after the first
-  * read of a table (e.g. in [[graft.Engine.register]]) building a query
-  * runs no schema-inference job. See [[Tables.scan]] for what is keyed,
-  * when a schema is inferred again, and what is never cached.
+  * Each table's relation (schema and file listing) is resolved once per
+  * file stamp, the way a metastore serves it: every read goes through
+  * [[Tables.scan]], so after the first read of a table (e.g. in
+  * [[graft.Engine.register]]) building a query runs no schema-inference
+  * job and lists no file. See [[Tables.scan]] for what is keyed, when a
+  * relation is resolved again, and what is never cached.
   */
 final case class Tables(spark: SparkSession, dir: String,
                         overrides: Map[String, DataFrame] = Map.empty) {
@@ -89,58 +93,68 @@ object Tables {
 
   /** List `path` (a file or a directory tree) with the Hadoop FileSystem
     * API, so any scheme works; None when it cannot be listed (e.g. it does
-    * not exist). */
+    * not exist). `listStatus`, not `listFiles`: a `LocatedFileStatus` copies
+    * each file's permissions, which the local file system without native
+    * IO reads by forking `ls -ld` once per file. */
   def stamp(spark: SparkSession, path: String): Option[Stamp] =
     try {
       val p = new Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val it = fs.listFiles(p, true)
       val files = Vector.newBuilder[(String, Long, Long)]
-      while (it.hasNext) {
-        val f = it.next()
-        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
+      def walk(f: FileStatus): Unit =
+        if (f.isDirectory) fs.listStatus(f.getPath).foreach(walk)
+        else files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      fs.listStatus(p).foreach(walk) // a file lists as itself
       Some(Stamp(fs.makeQualified(p).toString, files.result().sortBy(_._1)))
     } catch { case _: java.io.IOException => None }
 
-  /** Every SQLConf parquet schema inference reads: the schema converter's
-    * settings plus which footers are merged. */
-  private val schemaConfs: Seq[String] = Seq(
+  /** The SQLConfs that shape the resolved relation: the schema
+    * converter's settings, which footers are merged, and how partition
+    * directory values are typed. */
+  private val relationConfs: Seq[String] = Seq(
     SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
     SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
     SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, SQLConf.PARQUET_FIELD_ID_READ_ENABLED,
     SQLConf.PARQUET_IGNORE_VARIANT_ANNOTATION,
     SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION,
     SQLConf.VARIANT_ALLOW_READING_SHREDDED, SQLConf.PARQUET_SCHEMA_MERGING_ENABLED,
-    SQLConf.PARQUET_SCHEMA_RESPECT_SUMMARIES).map(_.key)
+    SQLConf.PARQUET_SCHEMA_RESPECT_SUMMARIES, SQLConf.PARTITION_COLUMN_TYPE_INFERENCE,
+    SQLConf.SESSION_LOCAL_TIMEZONE).map(_.key)
 
-  private val schemas = new ConcurrentHashMap[(String, Seq[String]), (Stamp, StructType)]()
+  private val relations =
+    new ConcurrentHashMap[(String, Seq[String]), (Stamp, HadoopFsRelation)]()
 
-  /** An option-less parquet read of one path, with its schema resolved once
-    * per file stamp.
+  /** An option-less parquet read of one path, with its relation resolved
+    * once per file stamp.
     *
-    * Keyed on the qualified path plus every SQLConf the inference reads
-    * (so `events` under `nanosAsLong` on and off are two entries); the
-    * value is the [[Stamp]] and the inferred schema. A hit reads with
-    * `.schema(cached)`, so Spark skips inference and no job runs. A miss,
-    * or a stamp that differs (the table was rewritten), infers again and
-    * replaces the entry: one entry per path and conf set, so rewriting a
-    * table in place does not grow the map in a long-lived JVM. Only the `StructType` is held — never a
-    * DataFrame or file index (a shared relation would share exprIds
-    * between self-joins and serve stale listings). A path that cannot be
-    * listed falls through to the plain read, which raises Spark's own
-    * `AnalysisException` for a missing path. */
+    * Keyed on the qualified path plus those SQLConfs (so `events` under
+    * `nanosAsLong` on and off are two entries); the value is the [[Stamp]]
+    * and the `HadoopFsRelation` that `spark.read.parquet` would resolve:
+    * its schema and file listing. A hit needs an equal stamp and a
+    * relation bound to `spark`; it wraps the relation in a fresh
+    * `LogicalRelation`, whose output attributes get new exprIds (so
+    * self-joins resolve), and runs no job and lists no file. Anything else
+    * resolves again and replaces the entry: one entry per path and conf
+    * set, so rewriting a table in place does not grow the map in a
+    * long-lived JVM, and at most one other session is kept alive per
+    * entry. Only metadata is held — never rows or a DataFrame. A path that
+    * cannot be listed falls through to the plain read, which raises
+    * Spark's own `AnalysisException` for a missing path. */
   def scan(spark: SparkSession, path: String): DataFrame =
     stamp(spark, path) match {
       case None => spark.read.parquet(path)
       case Some(st) =>
-        val key = (st.root, schemaConfs.map(k => spark.conf.getOption(k).orNull))
-        Option(schemas.get(key)).filter(_._1 == st) match {
-          case Some((_, schema)) => spark.read.schema(schema).parquet(path)
-          case None =>
-            val df = spark.read.parquet(path)
-            schemas.put(key, (st, df.schema))
-            df
-        }
+        val key = (st.root, relationConfs.map(k => spark.conf.getOption(k).orNull))
+        val relation = Option(relations.get(key))
+          .collect { case (s, r) if s == st && (r.sparkSession eq spark) => r }
+          .getOrElse {
+            // what `spark.read.parquet(path)` resolves for one path
+            val r = DataSource(spark.asInstanceOf[ClassicSparkSession], "parquet",
+              options = Map("path" -> path)).resolveRelation()
+              .asInstanceOf[HadoopFsRelation]
+            relations.put(key, (st, r))
+            r
+          }
+        DatasetBridge.ofRows(spark, LogicalRelation(relation))
     }
 }

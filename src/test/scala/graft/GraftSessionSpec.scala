@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.StaticSQLConf
 
 class GraftSessionSpec extends SparkSpec {
 
@@ -14,6 +15,8 @@ class GraftSessionSpec extends SparkSpec {
         .getOrCreate()
       assert(s2.conf.get("spark.sql.adaptive.enabled") == "true")
       assert(s2.conf.get("spark.sql.shuffle.partitions") == "2")
+      assert(s2.conf.get(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key) ==
+        GraftSession.CodegenCacheEntries.toString)
       // extensions are live: custom function resolves in SQL
       assert(s2.sql("SELECT rolling_hash('x') AS h").head().getLong(0) != 0L)
       // the one-split physical rule runs after the planner strategies

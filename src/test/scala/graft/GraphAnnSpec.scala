@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.operators.{GraphAnn, Similarity}
+import graft.sources.Bucketing
 
 class GraphAnnSpec extends SparkSpec {
   import spark.implicits._
@@ -220,7 +221,7 @@ class GraphAnnSpec extends SparkSpec {
     // frontier node ids -> bucket pruning on the stored layout (the
     // planner's auto-bucketed-scan heuristic would disable it for a bare
     // filter, so beamSearch forces it — same helper here)
-    val plan = GraphAnn.withBucketPruning(spark) {
+    val plan = Bucketing.withBucketedScan(spark) {
       planOf(spark.table(idx.adjTable)
         .filter(col("node_id").isin(idx.entry, idx.entry + 1)))
     }

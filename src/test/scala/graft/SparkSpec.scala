@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.graftbridge.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.StaticSQLConf
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Tables
 
@@ -54,6 +55,10 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the shipped codegen cache size (see GraftSession.builder): a static
+      // conf, so only the JVM's first session can set it
+      .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+        GraftSession.CodegenCacheEntries.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

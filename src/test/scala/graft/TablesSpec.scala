@@ -8,15 +8,18 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.metrics.source.HiveCatalogMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{LongType, StringType, TimestampNTZType, TimestampType}
 import graft.sources.Tables
 
-/** The catalog resolves each table's schema once per file stamp: a repeat
-  * read runs no inference job, a rewritten table is inferred again, the
-  * parquet confs are part of the key, and a missing table still fails the
-  * way [[Engine.register]] expects. */
+/** The catalog resolves each table's relation once per file stamp: a
+  * repeat read runs no inference job and lists no file, a rewritten table
+  * is resolved again, the parquet confs and the session are part of the
+  * key, self-joins of a cached relation resolve, and a missing table still
+  * fails the way [[Engine.register]] expects. */
 class TablesSpec extends SparkSpec {
 
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
@@ -145,5 +148,94 @@ class TablesSpec extends SparkSpec {
     intercept[AnalysisException](Tables(spark, dir.toString).lineitem)
     intercept[AnalysisException](Tables.scan(spark, dir.resolve("nope.parquet").toString))
     assert(Tables.stamp(spark, dir.resolve("nope.parquet").toString).isEmpty)
+  }
+
+  private def relationOf(df: DataFrame): HadoopFsRelation =
+    df.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation.asInstanceOf[HadoopFsRelation]
+    }.get
+
+  test("a self-join of one cached table resolves and equals the plain-read join") {
+    val dir = freshDir()
+    copyTable(dir, "lineitem")
+    val path = dir.resolve("lineitem.parquet").toString
+    val t = Tables(spark, dir.toString)
+    def join(a: DataFrame, b: DataFrame): DataFrame =
+      a.alias("a").join(b.alias("b"), "l_orderkey")
+        .selectExpr("l_orderkey", "a.l_linenumber AS la", "b.l_linenumber AS lb")
+    val cached = join(t.lineitem, t.lineitem)
+    assert(relationOf(t.lineitem) eq relationOf(t.lineitem), "both reads share the relation")
+    val plain = join(spark.read.parquet(path), spark.read.parquet(path))
+    assert(cached.count() > t.lineitem.count(), "the join pairs lines of one order")
+    assert(sameRows(cached, plain))
+  }
+
+  test("a repeat read lists no file and runs no job") {
+    val dir = freshDir()
+    copyTable(dir, "orders")
+    def filesListed[T](f: => T): (T, Long) = {
+      val before = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
+      val r = f
+      (r, HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount - before)
+    }
+    val (_, coldFiles) = filesListed(Tables(spark, dir.toString).orders)
+    assert(coldFiles >= 1, "the first read lists the table")
+    val ((warm, warmJobs), warmFiles) =
+      filesListed(jobsDuring(Tables(spark, dir.toString).orders))
+    assert(warmFiles == 0 && warmJobs == 0)
+    assert(warm.count() == spark.read.parquet(dir.resolve("orders.parquet").toString).count())
+  }
+
+  test("a read in another session gets a relation bound to that session") {
+    val dir = freshDir()
+    copyTable(dir, "nation")
+    val here = relationOf(Tables(spark, dir.toString).nation)
+    assert(here.sparkSession eq spark)
+    val other = spark.newSession()
+    val df = Tables(other, dir.toString).nation
+    assert(relationOf(df).sparkSession eq other)
+    assert(df.sparkSession eq other)
+    assert(df.count() == 25)
+    assert(relationOf(Tables(spark, dir.toString).nation).sparkSession eq spark)
+  }
+
+  test("a file added to a directory table changes the stamp and shows in the next read") {
+    import spark.implicits._
+    val dir = freshDir()
+    val path = dir.resolve("t.parquet")
+    Seq((1L, "a"), (2L, "b")).toDF("id", "tag").write.parquet(path.toString)
+    val t = Tables(spark, dir.toString)
+    val before = Tables.stamp(spark, path.toString).get
+    assert(t.table("t").count() == 2)
+    Seq((3L, "c")).toDF("id", "tag").write.mode("append").parquet(path.toString)
+    val after = Tables.stamp(spark, path.toString).get
+    assert(after != before && after.files.size > before.files.size)
+    assert(t.table("t").as[(Long, String)].collect().sorted.toSeq ==
+      Seq((1L, "a"), (2L, "b"), (3L, "c")))
+  }
+
+  test("the stamp of a nested directory is the recursive listFiles triple list") {
+    import spark.implicits._
+    val dir = freshDir()
+    val root = dir.resolve("p.parquet")
+    Seq((1L, "x"), (2L, "y"), (3L, "x")).toDF("id", "part")
+      .write.partitionBy("part").parquet(root.toString)
+    Files.createDirectories(root.resolve("part=z/deeper"))
+    Files.copy(Paths.get(s"$sfDir/region.parquet"), root.resolve("part=z/deeper/r.parquet"))
+    val p = new org.apache.hadoop.fs.Path(root.toString)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = fs.listFiles(p, true)
+    val expected = Vector.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      expected += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    val st = Tables.stamp(spark, root.toString).get
+    assert(st.root == fs.makeQualified(p).toString)
+    assert(st.files == expected.result().sortBy(_._1))
+    assert(st.files.exists(_._1.endsWith("part=z/deeper/r.parquet")))
+    val one = root.resolve("part=z/deeper/r.parquet").toString
+    assert(Tables.stamp(spark, one).get.files.map(_._1) ==
+      Seq(fs.makeQualified(new org.apache.hadoop.fs.Path(one)).toString))
   }
 }
