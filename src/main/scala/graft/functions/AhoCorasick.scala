@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Aho–Corasick multi-pattern matching (Aho & Corasick 1975 — the public
@@ -14,12 +10,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * banned-phrase / compliance lists, typically hundreds to thousands of
   * patterns) needs at corpus scale.
   *
-  * The automaton is built once per expression instance (driver side),
-  * ships with the serialized plan, and is shared read-only by every row
-  * of every partition — no per-row setup, no broadcast round-trip. Match
-  * semantics: every occurrence of every pattern (standard AC — output
-  * links surface patterns that are proper suffixes of others, e.g.
-  * "scan" inside "slow scan"), counted at its end position; overlapping
+  * The automaton is built once per `HashFunctions.multiPatternCount` call
+  * (driver side), ships with the serialized plan as a literal, and is
+  * shared read-only by every row of every partition — no per-row setup,
+  * no broadcast round-trip. Match semantics: every occurrence of every
+  * pattern (standard AC — output links surface patterns that are proper
+  * suffixes of others, e.g. "scan" inside "slow scan"), counted at its
+  * end position; overlapping
   * occurrences of DIFFERENT patterns all count. A pattern with no proper
   * border cannot overlap itself, so per-pattern counts equal the
   * left-to-right non-overlapping count a `replace`-based SQL oracle
@@ -122,25 +119,4 @@ object AhoCorasick {
     val (nHit, occ) = a.countMatches(text.toString)
     new GenericInternalRow(Array[Any](nHit, occ))
   }
-}
-
-/** MultiPatternCount(text, blocklist) →
-  * struct<n_patterns_hit: long, n_occurrences: long>. The automaton is a
-  * codegen reference object — one instance per plan, zero per-row cost. */
-case class MultiPatternCount(child: Expression, patterns: Seq[String])
-    extends UnaryExpression {
-  @transient private lazy val automaton = AhoCorasick.build(patterns)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_patterns_hit", LongType, nullable = false),
-    StructField("n_occurrences", LongType, nullable = false)))
-  override protected def nullSafeEval(input: Any): Any =
-    AhoCorasick.countMatchesRow(input.asInstanceOf[UTF8String], automaton)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val acRef = ctx.addReferenceObj("ac", automaton,
-      classOf[AhoCorasick.Automaton].getName)
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.AhoCorasick.countMatchesRow($c, $acRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): MultiPatternCount =
-    copy(child = newChild)
 }

@@ -1,8 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -425,6 +425,12 @@ object HashImpl {
     bucket
   }
 
+  /** [[srpBucket]] with a per-row seed (spread by the 64-bit golden-ratio
+    * multiplier), so one explode can fan a vector out to N independent
+    * LSH tables (recall amplification à la MinHash bands). */
+  def srpBucketSeeded(vec: ArrayData, nBits: Int, seed: Long): Int =
+    srpBucket(vec, nBits, seed * 0x9e3779b97f4a7c15L)
+
   /** Unicode NFC normalization (canonical decomposition + composition,
     * java.text.Normalizer — the JDK's reference implementation of UAX #15):
     * the text-hygiene pass that makes visually-identical strings
@@ -789,435 +795,146 @@ object HashImpl {
   }
 }
 
-/** SimHash64(array<string>) → long. Codegen calls the static kernel, so the
-  * projection stays inside whole-stage codegen. */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.simhash64(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpl.simhash64($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
+/** One engine kernel: the static method `method` of the kernel object
+  * `obj`, its Catalyst result type, and whether it may return null for
+  * non-null input (otherwise the result is null exactly when an input is).
+  * A call is Spark's own [[StaticInvoke]]: whole-stage codegen emits
+  * `obj.method(args)` in place, the interpreted path calls the method by
+  * reflection, and EXPLAIN shows `static_invoke(obj.method(...))`. */
+final case class Kernel(obj: AnyRef, method: String, dataType: DataType,
+                        returnNullable: Boolean = false) {
+
+  /** The call over `args`: a column or expression as it is, an `Int` or
+    * `Long` as a literal of that exact Java type, and any other object (a
+    * plan-embedded array or automaton) as an [[ObjectType]] literal, which
+    * codegen adds as a reference object. */
+  def expr(args: Any*): Expression =
+    StaticInvoke(obj.getClass, dataType, method, args.map(Kernel.arg).toSeq,
+      returnNullable = returnNullable)
+
+  def apply(args: Any*): Column = ColumnBridge.column(expr(args: _*))
 }
 
-/** MinHashSig(array<string>, k, seed) → array<long> (the signature). */
-case class MinHashSig(child: Expression, k: Int, seed: Long) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.minhash(input.asInstanceOf[ArrayData], k, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpl.minhash($c, $k, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
-/** MinHashSigText(text, w, k, seed) → array<long>: fused normalize +
-  * tokenize + shingle + minhash kernel (see [[HashImpl.minhashText]]). */
-case class MinHashSigText(child: Expression, w: Int, k: Int, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.minhashText(input.asInstanceOf[UTF8String], w, k, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpl.minhashText($c, $w, $k, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigText =
-    copy(child = newChild)
-}
-
-/** BandKeys(array<long>, bands) → array<long> LSH band keys. */
-case class BandKeys(child: Expression, bands: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.bandKeys(input.asInstanceOf[ArrayData], bands)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpl.bandKeys($c, $bands)")
-  override protected def withNewChildInternal(newChild: Expression): BandKeys =
-    copy(child = newChild)
-}
-
-/** CharNGrams(text, n) → array<string>: distinct n-grams of the normalized
-  * text (fused trim+lower+slice+dedup — see [[HashImpl.charNgrams]]). */
-case class CharNGrams(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.charNgrams(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpl.charNgrams($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): CharNGrams =
-    copy(child = newChild)
-}
-
-/** RollingHash64(string) → long document fingerprint. */
-case class Dup3Frac(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.dup3Frac(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpl.dup3Frac($c)")
-  override protected def withNewChildInternal(newChild: Expression): Dup3Frac =
-    copy(child = newChild)
-}
-
-case class RollingHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.rollingHash(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpl.rollingHash($c)")
-  override protected def withNewChildInternal(newChild: Expression): RollingHash64 =
-    copy(child = newChild)
-}
-
-/** WindowHashes(string, len) → array<long>: Karp–Rabin hash of every
-  * len-code-point window, position-aligned with substring(text, p, len)
-  * (see [[HashImpl.windowHashes]]). */
-case class WindowHashes(child: Expression, len: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.windowHashes(input.asInstanceOf[UTF8String], len)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpl.windowHashes($c, $len)")
-  override protected def withNewChildInternal(newChild: Expression): WindowHashes =
-    copy(child = newChild)
-}
-
-/** NfcNormalize(string) → string — see [[HashImpl.nfcNormalize]]. */
-/** TopBigram(array<string>) → struct(w1, w2, n_occ): the most frequent
-  * adjacent bigram, ties binary-ascending (see [[HashImpl.topBigram]]);
-  * null for arrays shorter than two tokens. */
-case class TopBigram(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("w1", StringType, nullable = false),
-    StructField("w2", StringType, nullable = false),
-    StructField("n_occ", LongType, nullable = false)))
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.topBigram(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    // the kernel returns null for sub-2-token arrays: propagate it into
-    // isNull (defineCodeGen would leave isNull=false on a null struct)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.HashImpl.topBigram($c);
-      ${ev.isNull} = ${ev.value} == null;""")
-  override protected def withNewChildInternal(newChild: Expression): TopBigram =
-    copy(child = newChild)
-}
-
-/** RunFingerprints(array<string>, w) → array<long>: positioned w-token
-  * run fingerprints, position-aligned with `transform(sequence(...))`
-  * shingling (see [[HashImpl.runFingerprints]]). */
-case class RunFingerprints(child: Expression, w: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.runFingerprints(input.asInstanceOf[ArrayData], w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpl.runFingerprints($c, $w)")
-  override protected def withNewChildInternal(newChild: Expression): RunFingerprints =
-    copy(child = newChild)
-}
-
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.nfcNormalize(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpl.nfcNormalize($c)")
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
-    copy(child = newChild)
-}
-
-/** ByteEntropy(binary) → double bits/byte (see [[HashImpl.byteEntropy]]). */
-case class ByteEntropy(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.byteEntropy(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpl.byteEntropy($c)")
-  override protected def withNewChildInternal(newChild: Expression): ByteEntropy =
-    copy(child = newChild)
-}
-
-/** MediaFormat(binary) → string magic-byte sniff (see [[HashImpl.mediaFormat]]). */
-case class MediaFormat(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.mediaFormat(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpl.mediaFormat($c)")
-  override protected def withNewChildInternal(newChild: Expression): MediaFormat =
-    copy(child = newChild)
-}
-
-/** SrpBucket(array<float>, nBits, seed) → int LSH bucket for cosine. */
-case class SrpBucket(child: Expression, nBits: Int, seed: Long) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.srpBucket(input.asInstanceOf[ArrayData], nBits, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpl.srpBucket($c, $nBits, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): SrpBucket =
-    copy(child = newChild)
-}
-
-/** SrpBucketSeeded(array<float>, seed) → int — like [[SrpBucket]] but the
-  * seed is a runtime column, so one explode can fan a vector out to N
-  * independent LSH tables (recall amplification à la MinHash bands). */
-case class SrpBucketSeeded(left: Expression, right: Expression, nBits: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(vec: Any, seed: Any): Any =
-    HashImpl.srpBucket(vec.asInstanceOf[ArrayData], nBits,
-      seed.asInstanceOf[Number].longValue() * 0x9e3779b97f4a7c15L)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (v, s) =>
-      s"graft.functions.HashImpl.srpBucket($v, $nBits, ((long)$s) * -7046029254386353131L)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SrpBucketSeeded =
-    copy(left = l, right = r)
-}
-
-/** NearestCell(array<double>) → int: euclidean-nearest centroid id against
-  * a plan-embedded flat centroid matrix (added to generated code as a
-  * reference object — centroids are quantizer-sized, a few KB). */
-case class NearestCell(child: Expression, cents: Array[Double], d: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.nearestCell(input.asInstanceOf[ArrayData], cents, d)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("cents", cents, "double[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpl.nearestCell($c, $centsRef, $d)")
+object Kernel {
+  private def arg(a: Any): Expression = a match {
+    case c: Column => ColumnBridge.expression(c)
+    case e: Expression => e
+    case i: Int => Literal(i)
+    case l: Long => Literal(l)
+    case o: AnyRef => Literal(o, ObjectType(o.getClass))
   }
-  override protected def withNewChildInternal(newChild: Expression): NearestCell =
-    copy(child = newChild)
 }
 
-/** DotRef(array<float>) → double: dot product against a plan-embedded
-  * constant vector (the power-iteration hot path). The compositional
-  * `aggregate(zip_with(...))` form runs interpreted lambda calls per
-  * element; this stays inside whole-stage codegen like [[NearestCell]],
-  * with the d-sized vector added as a generated-code reference object. */
-/** NearestCell over a raw float vector with inline unit-normalization —
-  * see [[HashImpl.nearestCellUnit]]. */
-case class NearestCellUnit(child: Expression, cents: Array[Double], d: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.nearestCellUnit(input.asInstanceOf[ArrayData], cents, d)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("cents", cents, "double[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpl.nearestCellUnit($c, $centsRef, $d)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): NearestCellUnit =
-    copy(child = newChild)
+/** Every engine kernel, defined once: the column API below and the SQL
+  * registry ([[graft.GraftExtensions.functions]]) both call these. */
+object Kernels {
+  private val longs = ArrayType(LongType, containsNull = false)
+  private def notNull(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
+
+  val simhash64 = Kernel(HashImpl, "simhash64", LongType)
+  val minhash = Kernel(HashImpl, "minhash", longs)
+  val minhashText = Kernel(HashImpl, "minhashText", longs)
+  val bandKeys = Kernel(HashImpl, "bandKeys", longs)
+  val charNgrams = Kernel(HashImpl, "charNgrams", ArrayType(StringType, containsNull = false))
+  val dup3Frac = Kernel(HashImpl, "dup3Frac", DoubleType)
+  val rollingHash = Kernel(HashImpl, "rollingHash", LongType)
+  val windowHashes = Kernel(HashImpl, "windowHashes", longs)
+  /** Null for arrays shorter than two tokens. */
+  val topBigram = Kernel(HashImpl, "topBigram",
+    notNull("w1" -> StringType, "w2" -> StringType, "n_occ" -> LongType),
+    returnNullable = true)
+  val runFingerprints = Kernel(HashImpl, "runFingerprints", longs)
+  val srpBucket = Kernel(HashImpl, "srpBucket", IntegerType)
+  val srpBucketSeeded = Kernel(HashImpl, "srpBucketSeeded", IntegerType)
+  val nfcNormalize = Kernel(HashImpl, "nfcNormalize", StringType)
+  val jaroWinkler = Kernel(HashImpl, "jaroWinkler", DoubleType)
+  val normF = Kernel(HashImpl, "normF", DoubleType)
+  val signPack64 = Kernel(HashImpl, "signPack64", LongType)
+  val srpProjNorm = Kernel(HashImpl, "srpProjNorm", DoubleType)
+  val maskJaccard = Kernel(HashImpl, "maskJaccard", DoubleType)
+  val sortedJaccard = Kernel(HashImpl, "sortedJaccard", DoubleType)
+  val nearestCell = Kernel(HashImpl, "nearestCell", IntegerType)
+  val nearestCellUnit = Kernel(HashImpl, "nearestCellUnit", IntegerType)
+  val minCellDistUnit = Kernel(HashImpl, "minCellDistUnit", DoubleType)
+  val pqCodes = Kernel(HashImpl, "pqCodes", ArrayType(IntegerType, containsNull = false))
+  val adcDist = Kernel(HashImpl, "adcDist", DoubleType)
+  val byteEntropy = Kernel(HashImpl, "byteEntropy", DoubleType)
+  val mediaFormat = Kernel(HashImpl, "mediaFormat", StringType)
+  val dotRef = Kernel(HashImpl, "dotRef", DoubleType)
+  val cosineF = Kernel(HashImpl, "cosineF", DoubleType)
+  val langBest = Kernel(TextImpl, "langBest",
+    notNull("lang_pred" -> StringType, "lang_score" -> DoubleType))
+  val countMatches = Kernel(AhoCorasick, "countMatchesRow",
+    notNull("n_patterns_hit" -> LongType, "n_occurrences" -> LongType))
 }
 
-/** NormF(array<float>) → double: sequential L2 norm. */
-case class NormF(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.normF(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpl.normF($c)")
-  override protected def withNewChildInternal(newChild: Expression): NormF =
-    copy(child = newChild)
-}
-
-/** SignPack64(array<float>) → long: packed 1-bit sign quantization code —
-  * see [[HashImpl.signPack64]]. */
-case class SignPack64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.signPack64(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpl.signPack64($c)")
-  override protected def withNewChildInternal(newChild: Expression): SignPack64 =
-    copy(child = newChild)
-}
-
-/** SrpProjNorm(array<float>) → double: JL-projection norm — see
-  * [[HashImpl.srpProjNorm]]. */
-case class SrpProjNorm(child: Expression, nBits: Int, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.srpProjNorm(input.asInstanceOf[ArrayData], nBits, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashImpl.srpProjNorm($c, $nBits, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): SrpProjNorm =
-    copy(child = newChild)
-}
-
-/** MinCellDistUnit over a raw float vector with inline unit-normalization —
-  * see [[HashImpl.minCellDistUnit]]. Same reference-object pattern as
-  * [[NearestCellUnit]]; returns the DISTANCE (the k-center coverage
-  * radius) where NearestCellUnit returns the index. */
-case class MinCellDistUnit(child: Expression, cents: Array[Double], d: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.minCellDistUnit(input.asInstanceOf[ArrayData], cents, d)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("cents", cents, "double[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpl.minCellDistUnit($c, $centsRef, $d)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): MinCellDistUnit =
-    copy(child = newChild)
-}
-
-/** PqCodes(array<float>) → array<int>: product-quantization codes against
-  * plan-embedded per-subspace codebooks (m·ksub·dsub doubles — a few KB,
-  * same reference-object pattern as [[NearestCell]]). */
-case class PqCodes(child: Expression, books: Array[Double], m: Int, ksub: Int,
-                   dsub: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.pqCodes(input.asInstanceOf[ArrayData], books, m, ksub, dsub)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val booksRef = ctx.addReferenceObj("books", books, "double[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashImpl.pqCodes($c, $booksRef, $m, $ksub, $dsub)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): PqCodes =
-    copy(child = newChild)
-}
-
-/** AdcDist(array<int>, array<double>) → double — fused PQ lookup-table sum
-  * (one kernel so Catalyst can't inline the Σ into both the rank and the
-  * projection — same reasoning as [[MaskJaccard]]). */
-case class AdcDist(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashImpl.adcDist(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashImpl.adcDist($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): AdcDist =
-    copy(left = l, right = r)
-}
-
-case class DotRef(child: Expression, v: Array[Double]) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(input: Any): Any =
-    HashImpl.dotRef(input.asInstanceOf[ArrayData], v)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vRef = ctx.addReferenceObj("vec", v, "double[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashImpl.dotRef($c, $vRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): DotRef =
-    copy(child = newChild)
-}
-
-/** MaskJaccard(array<long>, array<long>) → double — bitset-fingerprint
-  * Jaccard, the set-similarity verify hot path. A single fused kernel
-  * matters here: expressed compositionally (per-word element_at + bit_count
-  * + sum), Catalyst inlines the whole sum into the join condition AND the
-  * output projection, evaluating it up to 3× per candidate pair. */
-case class MaskJaccard(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashImpl.maskJaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashImpl.maskJaccard($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MaskJaccard =
-    copy(left = l, right = r)
-}
-
-/** SortedJaccard(array<int>, array<int>) → double — merge-intersection
-  * Jaccard over sorted id arrays (the large-dictionary verify kernel). */
-case class SortedJaccard(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashImpl.sortedJaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashImpl.sortedJaccard($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedJaccard =
-    copy(left = l, right = r)
-}
-
-/** CosineSimF(array<float>, array<float>) → double, the ANN hot-path kernel. */
-case class CosineSimF(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashImpl.cosineF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashImpl.cosineF($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSimF =
-    copy(left = l, right = r)
-}
-
-/** JaroWinklerF(string, string) → double — see [[HashImpl.jaroWinkler]]. */
-case class JaroWinklerF(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashImpl.jaroWinkler(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashImpl.jaroWinkler($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): JaroWinklerF =
-    copy(left = l, right = r)
-}
-
-/** Column-API wrappers for the custom expressions. */
+/** Column API over the engine kernels ([[Kernels]]). */
 object HashFunctions {
-  private def expr(c: Column): Expression = ColumnBridge.expression(c)
-  private def col(e: Expression): Column = ColumnBridge.column(e)
 
-  def simhash64(tokens: Column): Column = col(SimHash64(expr(tokens)))
+  /** `k` over `vec` and a plan-embedded flat centroid matrix
+    * (quantizer-sized, a few KB) of row width d. */
+  private def overCells(k: Kernel, vec: Column, centroids: Seq[Seq[Double]]): Column = {
+    val d = centroids.head.length
+    require(centroids.forall(_.length == d), "ragged centroid matrix")
+    k(vec, centroids.flatten.toArray, d)
+  }
+
+  def simhash64(tokens: Column): Column = Kernels.simhash64(tokens)
   def minhashSig(shingles: Column, k: Int = 64, seed: Long = 42L): Column =
-    col(MinHashSig(expr(shingles), k, seed))
+    Kernels.minhash(shingles, k, seed)
   def minhashSigText(text: Column, w: Int = 2, k: Int = 64, seed: Long = 42L): Column =
-    col(MinHashSigText(expr(text), w, k, seed))
-  def bandKeys(sig: Column, bands: Int = 16): Column =
-    col(BandKeys(expr(sig), bands))
-  def rollingHash64(text: Column): Column = col(RollingHash64(expr(text)))
-  def windowHashes(text: Column, len: Int): Column =
-    col(WindowHashes(expr(text), len))
-  def runFingerprints(tokens: Column, w: Int): Column =
-    col(RunFingerprints(expr(tokens), w))
-  def topBigram(tokens: Column): Column = col(TopBigram(expr(tokens)))
-  def nfcNormalize(text: Column): Column = col(NfcNormalize(expr(text)))
-  def jaroWinkler(a: Column, b: Column): Column =
-    col(JaroWinklerF(expr(a), expr(b)))
-  def dup3Frac(tokens: Column): Column = col(Dup3Frac(expr(tokens)))
-  def charNgrams(text: Column, n: Int): Column = col(CharNGrams(expr(text), n))
+    Kernels.minhashText(text, w, k, seed)
+  def bandKeys(sig: Column, bands: Int = 16): Column = Kernels.bandKeys(sig, bands)
+  def rollingHash64(text: Column): Column = Kernels.rollingHash(text)
+  def windowHashes(text: Column, len: Int): Column = Kernels.windowHashes(text, len)
+  def runFingerprints(tokens: Column, w: Int): Column = Kernels.runFingerprints(tokens, w)
+  def topBigram(tokens: Column): Column = Kernels.topBigram(tokens)
+  def nfcNormalize(text: Column): Column = Kernels.nfcNormalize(text)
+  def jaroWinkler(a: Column, b: Column): Column = Kernels.jaroWinkler(a, b)
+  def dup3Frac(tokens: Column): Column = Kernels.dup3Frac(tokens)
+  def charNgrams(text: Column, n: Int): Column = Kernels.charNgrams(text, n)
   def srpBucket(vec: Column, nBits: Int = 16, seed: Long = 7L): Column =
-    col(SrpBucket(expr(vec), nBits, seed))
+    Kernels.srpBucket(vec, nBits, seed)
+  /** [[srpBucket]] with the seed a runtime column (see [[HashImpl.srpBucketSeeded]]). */
   def srpBucketSeeded(vec: Column, nBits: Int, seed: Column): Column =
-    col(SrpBucketSeeded(expr(vec), expr(seed), nBits))
-  def cosineSim(a: Column, b: Column): Column = col(CosineSimF(expr(a), expr(b)))
-  def dotRef(a: Column, v: Array[Double]): Column = col(DotRef(expr(a), v))
-  def byteEntropy(payload: Column): Column = col(ByteEntropy(expr(payload)))
-  def mediaFormat(payload: Column): Column = col(MediaFormat(expr(payload)))
-  def maskJaccard(a: Column, b: Column): Column = col(MaskJaccard(expr(a), expr(b)))
-  def nearestCell(vec: Column, centroids: Seq[Seq[Double]]): Column = {
-    val d = centroids.head.length
-    require(centroids.forall(_.length == d), "ragged centroid matrix")
-    col(NearestCell(expr(vec), centroids.flatten.toArray, d))
-  }
-  def nearestCellUnit(vec: Column, centroids: Seq[Seq[Double]]): Column = {
-    val d = centroids.head.length
-    require(centroids.forall(_.length == d), "ragged centroid matrix")
-    col(NearestCellUnit(expr(vec), centroids.flatten.toArray, d))
-  }
-  def normF(vec: Column): Column = col(NormF(expr(vec)))
-  def signPack64(vec: Column): Column = col(SignPack64(expr(vec)))
+    Kernels.srpBucketSeeded(vec, nBits, seed.cast(LongType))
+  def cosineSim(a: Column, b: Column): Column = Kernels.cosineF(a, b)
+  /** Dot product against a plan-embedded constant vector (the
+    * power-iteration hot path; see [[HashImpl.dotRef]]). */
+  def dotRef(a: Column, v: Array[Double]): Column = Kernels.dotRef(a, v)
+  def byteEntropy(payload: Column): Column = Kernels.byteEntropy(payload)
+  def mediaFormat(payload: Column): Column = Kernels.mediaFormat(payload)
+  /** Bitset-fingerprint Jaccard, the set-similarity verify hot path: as
+    * one call, Catalyst cannot inline a per-word sum into both the join
+    * condition and the output projection. */
+  def maskJaccard(a: Column, b: Column): Column = Kernels.maskJaccard(a, b)
+  def nearestCell(vec: Column, centroids: Seq[Seq[Double]]): Column =
+    overCells(Kernels.nearestCell, vec, centroids)
+  def nearestCellUnit(vec: Column, centroids: Seq[Seq[Double]]): Column =
+    overCells(Kernels.nearestCellUnit, vec, centroids)
+  def normF(vec: Column): Column = Kernels.normF(vec)
+  def signPack64(vec: Column): Column = Kernels.signPack64(vec)
+  /** struct<n_patterns_hit, n_occurrences> of a blocklist over `text`; the
+    * automaton is built once here and travels with the plan. */
   def multiPatternCount(text: Column, patterns: Seq[String]): Column =
-    col(MultiPatternCount(expr(text), patterns))
+    Kernels.countMatches(text, AhoCorasick.build(patterns))
   def srpProjNorm(vec: Column, nBits: Int, seed: Long): Column =
-    col(SrpProjNorm(expr(vec), nBits, seed))
-  def minCellDistUnit(vec: Column, centroids: Seq[Seq[Double]]): Column = {
-    val d = centroids.head.length
-    require(centroids.forall(_.length == d), "ragged centroid matrix")
-    col(MinCellDistUnit(expr(vec), centroids.flatten.toArray, d))
-  }
-  def sortedJaccard(a: Column, b: Column): Column = col(SortedJaccard(expr(a), expr(b)))
+    Kernels.srpProjNorm(vec, nBits, seed)
+  def minCellDistUnit(vec: Column, centroids: Seq[Seq[Double]]): Column =
+    overCells(Kernels.minCellDistUnit, vec, centroids)
+  def sortedJaccard(a: Column, b: Column): Column = Kernels.sortedJaccard(a, b)
+  /** Product-quantization codes against plan-embedded per-subspace
+    * codebooks (m·ksub·dsub doubles, a few KB). */
   def pqCodes(vec: Column, books: Seq[Seq[Seq[Double]]]): Column = {
     val m = books.length
     val ksub = books.head.length
     val dsub = books.head.head.length
     require(books.forall(b => b.length == ksub && b.forall(_.length == dsub)),
       "ragged PQ codebooks")
-    col(PqCodes(expr(vec), books.flatten.flatten.toArray, m, ksub, dsub))
+    Kernels.pqCodes(vec, books.flatten.flatten.toArray, m, ksub, dsub)
   }
-  def adcDist(codes: Column, lut: Column): Column = col(AdcDist(expr(codes), expr(lut)))
+  /** Fused PQ lookup-table sum: one call, so Catalyst cannot inline the Σ
+    * into both the rank and the projection. */
+  def adcDist(codes: Column, lut: Column): Column = Kernels.adcDist(codes, lut)
 }

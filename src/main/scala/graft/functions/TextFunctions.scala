@@ -2,10 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Language-ID scoring kernel: counts characteristic marker substrings
@@ -61,20 +57,7 @@ object TextImpl {
   }
 }
 
-/** LangId(text) → struct<lang_pred: string, lang_score: double>. */
-case class LangId(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("lang_pred", StringType, nullable = false),
-    StructField("lang_score", DoubleType, nullable = false)))
-  override protected def nullSafeEval(input: Any): Any =
-    TextImpl.langBest(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextImpl.langBest($c)")
-  override protected def withNewChildInternal(newChild: Expression): LangId =
-    copy(child = newChild)
-}
-
 object TextFunctions {
-  def langId(text: Column): Column =
-    ColumnBridge.column(LangId(ColumnBridge.expression(text)))
+  /** struct<lang_pred, lang_score> (see [[TextImpl.langBest]]). */
+  def langId(text: Column): Column = Kernels.langBest(text)
 }

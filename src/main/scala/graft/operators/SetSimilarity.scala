@@ -316,7 +316,7 @@ object SetSimilarity {
     * typos cluster at the end) and normalizes to [0,1] so one threshold
     * works across name lengths. Candidates come from the same shared-token
     * block as fuzzyNameJoin — never all-pairs — and the scorer is the
-    * codegen'd [[graft.functions.JaroWinklerF]] kernel, cross-checked
+    * codegen'd [[graft.functions.HashImpl.jaroWinkler]] kernel, cross-checked
     * bit-for-bit against DuckDB's `jaro_winkler_similarity` (3000-pair
     * offline sweep + the oracle hash gate). The threshold compares the
     * ROUNDED score in both engines, so a last-ulp divergence cannot flip

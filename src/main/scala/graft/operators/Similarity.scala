@@ -21,8 +21,8 @@ object Similarity {
 
   /** Exact brute-force cosine top-k for query vectors `vec_id < nQueries`.
     * The query side is tiny and broadcast; cosine runs in one codegen'd
-    * kernel ([[graft.functions.CosineSimF]]); ranking is a per-query window
-    * (bounded partitions — safe at any corpus size). */
+    * kernel ([[graft.functions.HashImpl.cosineF]]); ranking is a per-query
+    * window (bounded partitions — safe at any corpus size). */
   def bruteForceTopK(t: Tables, nQueries: Int = 10, k: Int = 5): DataFrame = {
     val emb = t.embeddings
     val q = emb.filter(col("vec_id") < nQueries)
@@ -391,7 +391,7 @@ object Similarity {
     *
     * Scale shape: the quantizer trains on a deterministic bounded sample
     * ([[fitCentroids]]); assignment is a narrow codegen'd projection
-    * ([[graft.functions.NearestCell]] against the broadcast-as-literal
+    * ([[graft.functions.HashImpl.nearestCellUnit]] against the plan-embedded
     * centroids); the probe is a broadcast equi-join on the cell id —
     * expected candidates per query ≈ corpus·nProbe/nList, never all-pairs.
     * Vectors are unit-normalized before clustering so euclidean cells
@@ -421,16 +421,7 @@ object Similarity {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
       .sortBy(_._1)
-    def unitOf(v: Seq[Float]): Array[Double] = {
-      val d = v.toArray.map(_.toDouble)
-      var n2 = 0.0
-      var j = 0
-      while (j < d.length) { n2 += d(j) * d(j); j += 1 }
-      val n = math.sqrt(n2)
-      val inv = if (n == 0.0) 1.0 else n
-      d.map(_ / inv)
-    }
-    val sample = collected.filter(_._1 < sampleTarget).map(c => unitOf(c._2))
+    val sample = collected.filter(_._1 < sampleTarget).map(c => unitOf(c._2).toArray)
     if (sample.isEmpty)
       // empty corpus → empty result with the right shape, not a crash
       return t.embeddings.sparkSession.createDataFrame(
@@ -460,7 +451,7 @@ object Similarity {
     // ~nQueries·nList rows.
     val spark = t.embeddings.sparkSession
     val probedRows = collected.filter(_._1 < nQueries).flatMap { case (qid, qEmb) =>
-      val qUnit = unitOf(qEmb)
+      val qUnit = unitOf(qEmb).toArray
       val d2 = cents.zipWithIndex.map { case (c, i) =>
         var dist = 0.0; var j = 0
         while (j < c.length) { val df = qUnit(j) - c(j); dist += df * df; j += 1 }
@@ -496,7 +487,7 @@ object Similarity {
     * Deterministic end to end, same contract as [[ivfTopK]]: per-subspace
     * codebooks train via [[fitCentroids]] (first-ksub init over the
     * vec_id-ordered bounded sample, fixed iterations, no RNG anywhere);
-    * encoding is one codegen'd kernel ([[graft.functions.PqCodes]]) over
+    * encoding is one codegen'd kernel ([[graft.functions.HashImpl.pqCodes]]) over
     * the raw float column; query LUTs are driver-built with the kernel's
     * exact j-accumulation order and broadcast; ranking uses the ROUNDED
     * ADC distance with an id tie-break (the q_tfidf_search convention) so
@@ -1138,7 +1129,7 @@ object Similarity {
   /** Deterministic Lloyd k-means over the embeddings: seeds are the first
     * `k` vectors by vec_id, `iters` fixed rounds — no RNG, so the result
     * is oracle-checkable. Per round the ASSIGNMENT is a narrow map
-    * through the codegen'd [[graft.functions.NearestCell]] kernel (k×d
+    * through the codegen'd [[graft.functions.HashImpl.nearestCell]] kernel (k×d
     * centroid matrix plan-embedded — quantizer-sized) and the UPDATE is a
     * (k·d)-key partial+final average: the corpus never shuffles on more
     * than k·d keys and only the centroid matrix crosses the driver. A
@@ -1231,7 +1222,7 @@ object Similarity {
     * order (the q_mi_terms fold-association pattern; the oracle's
     * list_reduce folds the identical order with the identical
     * parenthesization); purity is all-integer until one division.
-    * Scale shape: one corpus assignment pass (codegen'd NearestCell) +
+    * Scale shape: one corpus assignment pass (codegen'd `HashImpl.nearestCell`) +
     * a (cell, label)-keyed count — the contingency and everything after
     * it is bounded by k·|labels|, never the corpus. */
   def clusterLabelNmi(t: Tables, k: Int = 8, iters: Int = 2): DataFrame = {
@@ -1317,7 +1308,7 @@ object Similarity {
     * min-max-cosine diversity).
     *
     * Scale shape: each round is ONE narrow corpus pass — the fused
-    * [[graft.functions.MinCellDistUnit]] kernel scores every vector
+    * [[graft.functions.HashImpl.minCellDistUnit]] kernel scores every vector
     * against the plan-embedded center matrix (≤ k·d doubles, a few KB) —
     * followed by a global top-1 that plans as TakeOrderedAndProject
     * (per-partition heaps; nothing corpus-sized moves). Driver state is
@@ -1407,7 +1398,7 @@ object Similarity {
     var v = Array.fill(dim)(1.0 / math.sqrt(dim.toDouble))
     var lastNorm = 0.0
     for (_ <- 1 to iters) {
-      // codegen'd fused dot product (HashFunctions.DotRef) — the
+      // codegen'd fused dot product (`HashImpl.dotRef`) — the
       // compositional aggregate(zip_with(...)) form pays an interpreted
       // lambda call per element, O(n·d) of them per pass
       val y = xa

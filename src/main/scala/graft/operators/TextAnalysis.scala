@@ -174,8 +174,7 @@ object TextAnalysis {
   }
 
   /** Document fingerprint: Karp–Rabin rolling hash of the normalized text
-    * (custom codegen'd Catalyst expression — see
-    * [[graft.functions.RollingHash64]]). */
+    * (a codegen'd kernel call — see [[graft.functions.HashImpl.rollingHash]]). */
   def fingerprints(t: Tables): DataFrame =
     t.documents
       .select(
@@ -460,14 +459,14 @@ object TextAnalysis {
     * algorithm's boundary rule), so every included doc has ≥ 1
     * fingerprint. */
   /** The winnowing selection expressions over a tokenized frame: `_tk`
-    * (token array) → `_gh` (positioned k-shingle hashes) → selected
+    * (token array, at least `k` tokens) → `_gh` (positioned k-shingle
+    * hashes, each the `rollingHash64` of the shingle's `concat_ws(" ")`,
+    * in one fused [[HashFunctions.runFingerprints]] pass) → selected
     * fingerprint array. Shared by [[winnowFingerprints]] and the
     * winnowed containment candidate generator
     * ([[Dedup.containmentPairs]]). */
   private def winnowExprs(k: Int, w: Int): (org.apache.spark.sql.Column, org.apache.spark.sql.Column) = {
-    val gh = transform(
-      sequence(lit(0), size(col("_tk")) - k),
-      i => HashFunctions.rollingHash64(concat_ws(" ", slice(col("_tk"), i + 1, lit(k)))))
+    val gh = HashFunctions.runFingerprints(col("_tk"), k)
     val sel = when(size(col("_gh")) >= w,
       array_distinct(transform(sequence(lit(0), size(col("_gh")) - w),
         j => array_min(slice(col("_gh"), j + 1, lit(w))))))
@@ -571,7 +570,7 @@ object TextAnalysis {
       .withColumn("mean_tok_len", round(
         length(regexp_replace(col("text"), "\\s+", "")).cast("double") /
           greatest(size(col("_tk")), lit(1)), 6))
-      // repetition signal via the fused Dup3Frac kernel: the compositional
+      // repetition signal via the fused `HashImpl.dup3Frac` kernel: the compositional
       // transform+concat_ws+array_distinct form allocates one gram string
       // per position through interpreted HOF lambdas (measured ~2× slower
       // end to end); the kernel dedups token triples in one pass
@@ -1074,7 +1073,7 @@ object TextAnalysis {
     * and two different md5s to the exact-dedup pass; U+212B ANGSTROM
     * collapses to U+00C5). The corpus is ASCII, so each row APPENDS a
     * decomposed suffix executor-side and the oracle synthesizes the same
-    * string — the md5 hash match proves the custom [[graft.functions.NfcNormalize]]
+    * string — the md5 hash match proves the [[graft.functions.HashImpl.nfcNormalize]]
     * kernel (java.text.Normalizer, the JDK's UAX #15 implementation)
     * agrees byte-for-byte with DuckDB's utf8proc `nfc_normalize`. Narrow
     * codegen'd projection, no shuffle. */

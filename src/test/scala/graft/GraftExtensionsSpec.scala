@@ -58,6 +58,25 @@ class GraftExtensionsSpec extends SparkSpec {
       row.getDouble(1) / row.getDouble(0) < 3.0))
   }
 
+  test("kernel functions reject a bad literal argument, naming the function and position") {
+    engine
+    Seq(
+      "SELECT minhash_sig(array('a','b'), 'x', 1)" -> "minhash_sig: argument 2",
+      "SELECT minhash_sig(array('a','b'), 2.7, 1)" -> "minhash_sig: argument 2",
+      "SELECT minhash_sig(array('a','b'), NULL, 1)" -> "minhash_sig: argument 2",
+      "SELECT minhash_sig(array('a','b'), -3, 1)" -> "minhash_sig: argument 2",
+      "SELECT srp_bucket(array(CAST(1.0 AS FLOAT)), 33, 7)" -> "srp_bucket: argument 2"
+    ).foreach { case (q, msg) =>
+      val e = intercept[IllegalArgumentException](spark.sql(q).collect())
+      assert(e.getMessage.contains(msg), s"$q: ${e.getMessage}")
+    }
+    // the bounds themselves are accepted
+    val r = spark.sql(
+      "SELECT size(minhash_sig(array('a','b'), 1, 1)), srp_bucket(array(CAST(1.0 AS FLOAT)), 32, 7)")
+      .head()
+    assert(r.getInt(0) == 1)
+  }
+
   test("extensions class injects the same functions at session build time") {
     import org.apache.spark.sql.SparkSession
     val prev = spark // force shared session creation first
