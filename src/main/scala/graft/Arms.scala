@@ -11,7 +11,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * `rows`). Under `spark.graft.arms=distributed` every arm is
   * `distributed`, whatever `measured` is. */
 final case class ArmDecision(site: String, arm: String, measured: Long,
-                             limit: Long, unit: String) extends SparkListenerEvent
+                             limit: Long, unit: String) extends SparkListenerEvent {
+  /** The [[QueryRecord]] blocks open on the posting thread, set as it posts. */
+  private[graft] var postedIn: Option[String] = None
+}
 
 /** The one arm-selection policy: every size-gated path choice in the
   * operators compares against a threshold here and posts an
@@ -83,6 +86,8 @@ object Arms {
     Option.when(fits)(rows)
   }
 
-  private def post(spark: SparkSession, d: ArmDecision): Unit =
+  private def post(spark: SparkSession, d: ArmDecision): Unit = {
+    d.postedIn = QueryRecord.openBlocks(spark)
     ListenerBridge.post(spark.sparkContext, d)
+  }
 }

@@ -63,15 +63,10 @@ object Bench {
     // CacheManager via canonical-plan matching, and the "measurement" would
     // be a cache read. Dropping cached data keeps the timed pass honest.
     spark.catalog.clearCache()
-    // localCheckpoint RDD blocks are NOT freed by clearCache (they live in
-    // the block manager until the ContextCleaner collects the plan), so the
-    // checkpoint-bearing operators would otherwise accumulate residency
-    // across the alphabetical query order and, on a memory-pressured
-    // machine, inflate later heavy queries 4-5× (round-5 driver snapshot).
-    // Synchronous on purpose: blocking=false would race the next timing.
-    def dropLingeringRdds(): Unit =
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    dropLingeringRdds()
+    // localCheckpoint blocks outlive clearCache; left in place they inflated
+    // later heavy queries 4-5× on a memory-pressured machine (round-5
+    // driver snapshot)
+    GraftSession.dropPersistedRdds(spark)
     // Self-diagnosing timing: ≥2 timed runs per query BY DEFAULT so the
     // artifact itself can distinguish a real regression from a contended
     // machine (round-7/8 lesson: single-run numbers swung 3-5× on
@@ -167,18 +162,8 @@ object Bench {
     // artifact also records the sum of executor task durations per timed
     // run ("tasksec"). busy ≈ tasksec/cpus is the floor-free signal: a
     // wall regression with flat tasksec is scheduling/JVM noise, a tasksec
-    // regression is a real plan change. The listener bus is drained before
-    // each sample so tasks are charged to the query that ran them.
-    val taskMillis = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskInfo != null) taskMillis.addAndGet(te.taskInfo.duration)
-    })
-    def drainedTaskSec(): Double = {
-      org.apache.spark.graftbridge.ListenerBridge
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      taskMillis.get() / 1000.0
-    }
+    // regression is a real plan change. Each timed run's tasks come from
+    // its QueryRecord, which charges a task to the run whose jobs ran it.
     val taskSecs = scala.collection.mutable.Map.empty[String, Seq[Double]]
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
@@ -186,14 +171,15 @@ object Bench {
       try {
         val measured = (1 to runs).map { _ =>
           maybeGc(force = gcEvery > 0 && sinceGc >= gcEvery)
-          val busy0 = drainedTaskSec()
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val dt = (System.nanoTime() - t0) / 1e9
+          val (dt, record) = QueryRecord.of(spark) {
+            val t0 = System.nanoTime()
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            (System.nanoTime() - t0) / 1e9
+          }
           // between timed executions, not inside them: a query's own
           // checkpoint blocks must not outlive its measurement window
-          dropLingeringRdds()
-          (dt, drainedTaskSec() - busy0)
+          GraftSession.dropPersistedRdds(spark)
+          (dt, record.tasksec)
         }.sortBy(_._1)
         timings += name -> measured.map(_._1)
         taskSecs(name) = measured.map(_._2)

@@ -48,6 +48,16 @@ object GraftSession {
     spark
   }
 
+  /** Unpersist every persisted RDD and wait until its blocks are freed.
+    * `catalog.clearCache` does not free `localCheckpoint` blocks: they stay
+    * in the block manager until the ContextCleaner collects their plan. A
+    * main that runs one query after another calls this between them, so
+    * checkpoint-heavy queries do not pile up block-manager residency and
+    * slow the queries after them; it blocks so that the freeing does not
+    * overlap the next query's run. */
+  def dropPersistedRdds(spark: SparkSession): Unit =
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+
   /** Build the session and open a data directory as an [[Engine]].
     *
     * Note: registering the `events` table sets the session-level

@@ -163,9 +163,6 @@ est AS (SELECT doc_a, doc_b, round(sum(CASE WHEN sa.sv = sb.sv THEN 1 ELSE 0 END
       "FROM msig a JOIN msig b ON a.j = b.j AND a.source < b.source " +
       "GROUP BY 1, 2 ORDER BY source_a, source_b"
 
-  /** Oracle for q_dedup_lsh_verified
-    * ([[graft.operators.Dedup.lshVerifiedPairs]] defaults: candidates at
-    * est ≥ 0.2, exact w=2-shingle Jaccard ≥ 0.5 on candidates only). */
   /** Shared CTE chain ending in `vpairs(doc_a, doc_b, jac)` — the
     * LSH-candidate → exact-shingle-Jaccard-verified pair set both
     * [[lshVerifiedPairs]] and [[nearDupRates]] read. */
@@ -177,6 +174,9 @@ cpairs AS (SELECT doc_a, doc_b FROM est WHERE est_jaccard >= $minEst),
 inter AS (SELECT c.doc_a, c.doc_b, count(*) AS n_common FROM cpairs c JOIN sh a ON a.doc_id = c.doc_a JOIN sh b ON b.doc_id = c.doc_b AND a.s = b.s GROUP BY c.doc_a, c.doc_b),
 vpairs AS (SELECT doc_a, doc_b, n_common / (sa.sz + sb.sz - n_common) AS jac FROM inter JOIN ssz sa ON sa.doc_id = doc_a JOIN ssz sb ON sb.doc_id = doc_b WHERE n_common / (sa.sz + sb.sz - n_common) >= $minJaccard)"""
 
+  /** Oracle for q_dedup_lsh_verified
+    * ([[graft.operators.Dedup.lshVerifiedPairs]] defaults: candidates at
+    * est ≥ 0.2, exact w=2-shingle Jaccard ≥ 0.5 on candidates only). */
   def lshVerifiedPairs(k: Int = 64, bands: Int = 16, seed: Long = 42L,
                        minEst: Double = 0.2, minJaccard: Double = 0.5): String =
     s"""WITH ${verifiedCtes(k, bands, seed, minEst, minJaccard)}
@@ -270,12 +270,6 @@ inter AS (SELECT c.doc_id, c.corp_id, count(*) AS n_common FROM cpairs c JOIN sh
 ver AS (SELECT DISTINCT i.doc_id FROM inter i JOIN ssz sa ON sa.doc_id = i.doc_id JOIN ssz sb ON sb.doc_id = i.corp_id WHERE i.n_common / (sa.sz + sb.sz - i.n_common) >= $minJaccard)
 SELECT d.doc_id, d.lang, d.source FROM documents d WHERE d.doc_id IN (SELECT doc_id FROM cx) AND d.doc_id NOT IN (SELECT doc_id FROM ver) AND d.doc_id NOT IN (SELECT doc_id FROM bver) ORDER BY d.doc_id"""
 
-  /** Oracle for q_dedup_groups ([[graft.operators.Dedup.nearDupGroups]]
-    * defaults: candidate pairs at est ≥ 0.5 → connected components → min
-    * doc_id per component, singletons keep their own id). Components run
-    * as a recursive CTE propagating every reachable id and taking the min
-    * — rows are bounded by Σ component-size², and near-dup components are
-    * small by construction. */
   /** Shared CTE chain for the component queries — candidate pairs at
     * `minEst` → recursive-CTE connected components → `grp(doc_id,
     * group_id)` with min-id canonicals and singletons kept. */
@@ -287,6 +281,12 @@ r(n, m) AS (SELECT an, an FROM eb UNION SELECT eb.bn, r.m FROM r JOIN eb ON eb.a
 comp AS (SELECT n AS doc_id, min(m) AS gid FROM r GROUP BY n),
 grp AS (SELECT d.doc_id, coalesce(comp.gid, d.doc_id) AS group_id FROM documents d LEFT JOIN comp ON d.doc_id = comp.doc_id)"""
 
+  /** Oracle for q_dedup_groups ([[graft.operators.Dedup.nearDupGroups]]
+    * defaults: candidate pairs at est ≥ 0.5 → connected components → min
+    * doc_id per component, singletons keep their own id). Components run
+    * as a recursive CTE propagating every reachable id and taking the min
+    * — rows are bounded by Σ component-size², and near-dup components are
+    * small by construction. */
   def nearDupGroups(k: Int = 64, bands: Int = 16, seed: Long = 42L,
                     minEst: Double = 0.5): String =
     s"""WITH RECURSIVE ${sigCtes(k, bands, seed)}, ${groupsCtes(k, minEst)}
@@ -452,11 +452,6 @@ SELECT emb.vec_id, coalesce(comp.gid, emb.vec_id) AS group_id FROM embeddings em
     s"""WITH RECURSIVE ${compCtes(minCosine, nBits, nTables)}
 SELECT emb.vec_id, emb.label FROM embeddings emb LEFT JOIN comp ON emb.vec_id = comp.vec_id WHERE coalesce(comp.gid, emb.vec_id) = emb.vec_id ORDER BY emb.vec_id"""
 
-  /** Oracle for q_ann_lsh ([[graft.operators.Similarity.lshTopK]] defaults:
-    * 10 queries, k=5, nBits=12, nTables=8, probeHamming=3): the query side
-    * probes every bucket within Hamming distance ≤ h (mask list generated
-    * with the operator's own [[graft.operators.Similarity.hammingMasks]]),
-    * candidates rank by the same sequential-fold cosine. */
   /** Shared CTE chain ending in `ranked(query_id, neighbor_id, cos, rn)` —
     * the multiprobe LSH neighbor ranking both [[annLsh]] and
     * [[knnClassifyLsh]] read. */
@@ -473,6 +468,11 @@ cosed AS (SELECT query_id, neighbor_id, CASE WHEN sqrt(na) * sqrt(nb) = 0.0 THEN
 ranked AS (SELECT query_id, neighbor_id, cos, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rn FROM cosed)"""
   }
 
+  /** Oracle for q_ann_lsh ([[graft.operators.Similarity.lshTopK]] defaults:
+    * 10 queries, k=5, nBits=12, nTables=8, probeHamming=3): the query side
+    * probes every bucket within Hamming distance ≤ h (mask list generated
+    * with the operator's own [[graft.operators.Similarity.hammingMasks]]),
+    * candidates rank by the same sequential-fold cosine. */
   def annLsh(nQueries: Int = 10, topK: Int = 5, nBits: Int = 12,
              nTables: Int = 8, probeHamming: Int = 3): String =
     s"""WITH ${annLshCtes(nQueries, nBits, nTables, probeHamming)}
@@ -716,11 +716,6 @@ FROM dw JOIN enc e USING (word) JOIN unk u USING (word)
 GROUP BY dw.lang ORDER BY dw.lang"""
   }
 
-  /** Oracle for q_winnow ([[graft.operators.TextAnalysis.winnowFingerprints]]
-    * defaults k=3, w=4): positioned 3-token shingles, Karp–Rabin fold +
-    * mix64 per shingle (the rollingHash64 chain over the gram string),
-    * per-window min over SIGNED hashes, distinct winnowed set per doc
-    * (global min when fewer than w windows), cross-doc shared counts. */
   /** The winnowing selection chain (tokens → positioned k-shingle
     * Karp–Rabin hashes → window minima → per-doc selected set `sel`),
     * shared by [[winnowFingerprints]] and [[containmentWinnowed]]. Ends
@@ -742,6 +737,11 @@ smin AS (SELECT doc_id, min(h) AS mh FROM gh GROUP BY doc_id),
 sel AS MATERIALIZED (SELECT doc_id, mh FROM selw UNION ALL SELECT s.doc_id, s.mh FROM smin s WHERE s.doc_id NOT IN (SELECT doc_id FROM ws))"""
   }
 
+  /** Oracle for q_winnow ([[graft.operators.TextAnalysis.winnowFingerprints]]
+    * defaults k=3, w=4): positioned 3-token shingles, Karp–Rabin fold +
+    * mix64 per shingle (the rollingHash64 chain over the gram string),
+    * per-window min over SIGNED hashes, distinct winnowed set per doc
+    * (global min when fewer than w windows), cross-doc shared counts. */
   def winnowFingerprints(k: Int = 3, w: Int = 4): String = {
     s"""WITH ${winnowCtes(k, w)},
 shf AS (SELECT mh FROM (SELECT mh, count(DISTINCT doc_id) AS nd FROM sel GROUP BY mh) WHERE nd >= 2),
@@ -1182,13 +1182,6 @@ per AS (SELECT doc_id, n_tokens, span_id, min(pos) AS s0, max(pos) + $spanLen AS
 SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans, CAST(sum(e0 - s0) AS BIGINT) AS dup_tokens, CAST(n_tokens AS BIGINT) AS n_tokens, round(CAST(sum(e0 - s0) AS DOUBLE) / n_tokens, 6) AS dup_frac FROM per GROUP BY doc_id, n_tokens ORDER BY doc_id"""
   }
 
-  /** Oracle for q_dup_substrings
-    * ([[graft.operators.SuffixDedup.duplicateSubstrings]]): the DIRECT
-    * derivation — every L-char substring extracted and grouped by the
-    * string itself, cross-doc duplicate starts merged into maximal
-    * spans. The engine builds the same answer by truncated prefix
-    * doubling (exact rank equality, no strings through the shuffle);
-    * both derivations are exact, so they must match row-for-row. */
   /** Shared chain ending in `spans(doc_id, span_start, span_len)` — the
     * direct-derivation duplicate-substring spans [[dupSubstrings]] and
     * [[dupCut]] both read. */
@@ -1200,6 +1193,13 @@ isl AS (SELECT doc_id, p, CASE WHEN p - lag(p) OVER (PARTITION BY doc_id ORDER B
 grp AS (SELECT doc_id, p, sum(brk) OVER (PARTITION BY doc_id ORDER BY p) AS gid FROM isl),
 spans AS MATERIALIZED (SELECT doc_id, CAST(min(p) AS BIGINT) AS span_start, CAST(max(p) + $minLen - min(p) AS BIGINT) AS span_len FROM grp GROUP BY doc_id, gid)"""
 
+  /** Oracle for q_dup_substrings
+    * ([[graft.operators.SuffixDedup.duplicateSubstrings]]): the DIRECT
+    * derivation — every L-char substring extracted and grouped by the
+    * string itself, cross-doc duplicate starts merged into maximal
+    * spans. The engine builds the same answer by truncated prefix
+    * doubling (exact rank equality, no strings through the shuffle);
+    * both derivations are exact, so they must match row-for-row. */
   def dupSubstrings(minLen: Int = 32, minDocs: Int = 2): String =
     s"""WITH ${dupSpanCtes(minLen, minDocs)}
 SELECT doc_id, span_start, span_len FROM spans ORDER BY doc_id, span_start"""

@@ -24,7 +24,7 @@ object PlanDump {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"), txt)
       spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      GraftSession.dropPersistedRdds(spark)
       println(s"dumped $name")
     }
     spark.stop()

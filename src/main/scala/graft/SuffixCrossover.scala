@@ -30,8 +30,6 @@ object SuffixCrossover {
     val spark = GraftSession.diagnostic()
     val base = graft.sources.Tables(spark, sfDir).documents
       .select("doc_id", "text")
-    def dropRdds(): Unit =
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     scales.foreach { k =>
       val dir = s"target/suffix_scale/x$k"
       if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))) {
@@ -49,13 +47,13 @@ object SuffixCrossover {
       // warmup + 2 timed runs, min wins (the bench protocol)
       SuffixDedup.duplicateSubstrings(docs)
         .write.format("noop").mode("overwrite").save()
-      spark.catalog.clearCache(); dropRdds()
+      spark.catalog.clearCache(); GraftSession.dropPersistedRdds(spark)
       val times = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
         SuffixDedup.duplicateSubstrings(docs)
           .write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
-        dropRdds()
+        GraftSession.dropPersistedRdds(spark)
         dt
       }
       println(f"SCALE x$k rows=${stats.getLong(0)} chars=${stats.getLong(1)} engineSec=${times.min}%.2f (runs ${times.map(t => f"$t%.2f").mkString(",")}) dir=$dir")

@@ -32,10 +32,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // localCheckpoint RDD blocks outlive clearCache; drop them between
-      // queries so a 73-query dump doesn't accumulate block-manager
-      // residency (same armor as Bench — round-5 driver-snapshot lesson)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      GraftSession.dropPersistedRdds(spark)
     }
     // a tab or CR in builder-authored SQL would otherwise make the driver's
     // json.load fail and silently zero the round's correctness

@@ -414,32 +414,6 @@ object Analytics {
       .orderBy("l_returnflag")
   }
 
-  /** Exact interpolated quantiles per group via RANGE-PARTITIONED SORT +
-    * rank arithmetic — the order-statistics shape that survives groups too
-    * large to buffer (Spark's `percentile` aggregate holds every value of
-    * a group in one aggregator; at corpus scale a single group is
-    * billions of values and the executor dies).
-    *
-    * Three bounded passes over one range shuffle:
-    *   1. `repartitionByRange(group, value)` + a partition-local sort —
-    *      every group occupies a contiguous run of partitions, values
-    *      ordered within; the sorts parallelize across all partitions
-    *      (nothing ever holds a whole group).
-    *   2. A per-(partition, group) COUNT pass — collects partitions ×
-    *      groups longs, from which the driver turns each target rank
-    *      (pos = (n−1)·p; its floor/ceil bracket) into a (partition,
-    *      group, local-offset) address.
-    *   3. A FETCH pass that touches only the addressed partitions and
-    *      emits exactly the bracket values; quantile_cont interpolation
-    *      (lo + frac·(hi−lo) — Spark `percentile`'s own formula) runs on
-    *      the collected handful.
-    * Driver state is partitions×groups counters plus groups×quantiles
-    * bracket values — never data-sized. The two passes share one RDD, so
-    * the fetch reuses the count pass's shuffle files (map stage skipped)
-    * rather than persisting the shuffled data.
-    *
-    * @return one row per group: (groupCol, outNames…), quantiles rounded
-    *         to 6 places in `ps` order */
   /** Sliver count for [[quantilesBySort]], exposed so a caller whose
     * input is a DERIVED frame with garbage plan stats (a broadcast-join
     * product estimate, a checkpoint's unknown sentinel) can size the pass
@@ -475,6 +449,32 @@ object Analytics {
         statBytes.toLong / (32L << 20) + par)).toInt
   }
 
+  /** Exact interpolated quantiles per group via RANGE-PARTITIONED SORT +
+    * rank arithmetic — the order-statistics shape that survives groups too
+    * large to buffer (Spark's `percentile` aggregate holds every value of
+    * a group in one aggregator; at corpus scale a single group is
+    * billions of values and the executor dies).
+    *
+    * Three bounded passes over one range shuffle:
+    *   1. `repartitionByRange(group, value)` + a partition-local sort —
+    *      every group occupies a contiguous run of partitions, values
+    *      ordered within; the sorts parallelize across all partitions
+    *      (nothing ever holds a whole group).
+    *   2. A per-(partition, group) COUNT pass — collects partitions ×
+    *      groups longs, from which the driver turns each target rank
+    *      (pos = (n−1)·p; its floor/ceil bracket) into a (partition,
+    *      group, local-offset) address.
+    *   3. A FETCH pass that touches only the addressed partitions and
+    *      emits exactly the bracket values; quantile_cont interpolation
+    *      (lo + frac·(hi−lo) — Spark `percentile`'s own formula) runs on
+    *      the collected handful.
+    * Driver state is partitions×groups counters plus groups×quantiles
+    * bracket values — never data-sized. The two passes share one RDD, so
+    * the fetch reuses the count pass's shuffle files (map stage skipped)
+    * rather than persisting the shuffled data.
+    *
+    * @return one row per group: (groupCol, outNames…), quantiles rounded
+    *         to 6 places in `ps` order */
   def quantilesBySort(df: DataFrame, groupCol: String, valueCol: String,
                       ps: Seq[Double], outNames: Seq[String],
                       nParts: Int = 96,
@@ -731,8 +731,7 @@ object Analytics {
     * surface on the partitioned shape. The (n_tokens, doc_id) order is
     * total, so tile assignment is deterministic on both engines. */
   def sourceDeciles(t: Tables): DataFrame = {
-    val nTokens = size(filter(
-      split(lower(trim(col("text"))), "\\s+"), tk => tk =!= ""))
+    val nTokens = size(TextAnalysis.tokens(col("text")))
     val w = Window.partitionBy(col("source"))
       .orderBy(col("n_tokens").asc, col("doc_id").asc)
     t.documents
@@ -1209,8 +1208,7 @@ object Analytics {
     * with the oracle pinning it at 1 — a sketch regression fails the
     * driver's hash, not just a spec bound. */
   def globalDecileBands(t: Tables, accuracy: Int = 10000): DataFrame = {
-    val nTokens = size(filter(
-      split(lower(trim(col("text"))), "\\s+"), tk => tk =!= ""))
+    val nTokens = size(TextAnalysis.tokens(col("text")))
     val docs = t.documents.select(nTokens.as("n_tokens")).localCheckpoint()
     // exact cuts: count-collapse + cumulative ranks over the value domain
     val counts = docs.groupBy("n_tokens").agg(count(lit(1)).as("_c"))
@@ -1497,14 +1495,6 @@ object Analytics {
       .orderBy("step")
   }
 
-  /** Daily retention cohorts: users grouped by their first active day;
-    * for each (cohort_day, day_offset) the count of cohort members active
-    * that day and the retention rate vs the cohort's size. Two user-keyed
-    * aggregations (first day, distinct active days) and one user-keyed
-    * equi-join — at corpus scale both sides are user-cardinality-bounded
-    * and co-partitioned by the join key, and the cohort-size denominator
-    * joins back as a cohort-day-sized broadcast. No windows, no
-    * day×day self-join. */
   /** RFM SCORING (recency / frequency / monetary quintiles — the classic
     * customer-value segmentation): per-user metrics reduce in one
     * aggregation (recency = days from the user's last event to the
@@ -1632,6 +1622,14 @@ object Analytics {
       .orderBy("event_id")
   }
 
+  /** Daily retention cohorts: users grouped by their first active day;
+    * for each (cohort_day, day_offset) the count of cohort members active
+    * that day and the retention rate vs the cohort's size. Two user-keyed
+    * aggregations (first day, distinct active days) and one user-keyed
+    * equi-join — at corpus scale both sides are user-cardinality-bounded
+    * and co-partitioned by the join key, and the cohort-size denominator
+    * joins back as a cohort-day-sized broadcast. No windows, no
+    * day×day self-join. */
   def retentionCohorts(t: Tables): DataFrame = {
     // TWO exchanges total: (1) the user-clustered layout — the distinct
     // dedups partition-locally on it and the cohort day is a per-user

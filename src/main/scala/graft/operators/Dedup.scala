@@ -195,8 +195,6 @@ object Dedup {
     (dropHotBuckets(cached, Some(cap)), () => { cached.unpersist(blocking = false); () })
   }
 
-  /** Unordered candidate pairs — consumers that don't need a total order
-    * (e.g. [[nearDupGroups]]) use this to avoid a pointless global sort. */
   /** Raw band-collision candidate pairs WITHOUT the signature-agreement
     * estimate — for consumers (recall evaluation) that need the candidate
     * set itself: skipping the estimate join halves the work when every
@@ -219,6 +217,8 @@ object Dedup {
       .distinct()
   }
 
+  /** Unordered candidate pairs — consumers that don't need a total order
+    * (e.g. [[nearDupGroups]]) use this to avoid a pointless global sort. */
   def minhashCandidatesCore(t: Tables, w: Int = 2, k: Int = 64, bands: Int = 16,
                             minEstJaccard: Double = 0.2,
                             maxBucketSize: Option[Long] = None): DataFrame = {
@@ -265,13 +265,6 @@ object Dedup {
       .select("doc_a", "doc_b", "est_jaccard")
   }
 
-  /** Exact token-set Jaccard similarity over the WHOLE corpus — the verify
-    * stage for LSH candidates and a standalone exact near-dup pass. Runs on
-    * the [[SetSimilarity]] engine (dictionary-encode → collapse identical
-    * sets → candidate pairs → exact bitset verify), which replaces the naive
-    * token self-join whose cost is quadratic in per-token document
-    * frequency. `maxDf` optionally drops corpus-scale stopwords first
-    * (changes the result; mirror it in any oracle). */
   /** Spread a SMALL document frame across tasks before a per-row text
     * kernel (tokenize / shingle / gram / 64-hash minhash): a sub-split-size
     * corpus arrives as ONE scan task, so each kernel pass over it runs
@@ -292,6 +285,13 @@ object Dedup {
       docs.sparkSession.sparkContext.defaultParallelism.toLong,
       Arms.statsBytes(docs) >> 17)).toInt, col("doc_id"))
 
+  /** Exact token-set Jaccard similarity over the WHOLE corpus — the verify
+    * stage for LSH candidates and a standalone exact near-dup pass. Runs on
+    * the [[SetSimilarity]] engine (dictionary-encode → collapse identical
+    * sets → candidate pairs → exact bitset verify), which replaces the naive
+    * token self-join whose cost is quadratic in per-token document
+    * frequency. `maxDf` optionally drops corpus-scale stopwords first
+    * (changes the result; mirror it in any oracle). */
   def jaccardPairs(docs: DataFrame, minJaccard: Double,
                    maxDf: Option[Long] = None): DataFrame =
     SetSimilarity.jaccardSelfJoin(

@@ -68,24 +68,6 @@ object Pipeline {
       .orderBy("source")
   }
 
-  /** HYBRID RETRIEVAL by Reciprocal Rank Fusion (Cormack/Clarke/Büttcher
-    * SIGIR'09 — the production default for combining lexical and vector
-    * search): per query, fuse the BM25 top-k ([[TextAnalysis.bm25Search]])
-    * with the embedding-cosine top-k ([[Similarity.bruteForceTopK]]) by
-    * RRF(d) = Σ_arms 1/(kRrf + rank_arm(d)) — rank-based, so the two
-    * arms' incomparable score scales never need calibration. Documents
-    * and embeddings are parallel corpora here (vec_id i embeds doc i —
-    * the testdata contract every cross-modal query in this repo uses).
-    *
-    * Determinism/oracle story: each arm's membership comes from that
-    * operator's own (hash-verified) ranking; fusion ranks arms on their
-    * ROUNDED emitted scores with id tie-breaks, and an RRF sum has at
-    * most one term per arm — two-double addition is order-free — so the
-    * composed SQL oracle (the two arms' oracle texts verbatim, fused by
-    * the same window arithmetic) matches hash-for-hash. Cost: the two
-    * arms (each bounded: broadcast query side, corpus streamed once)
-    * plus two k·nQueries-row windows — fusion itself is free at any
-    * corpus size. */
   /** RANK-BIASED OVERLAP (Webber, Moffat & Zobel, TOIS 2010 — the
     * standard top-weighted rank-agreement measure) between the lexical
     * and semantic retrieval arms, per query: truncated RBO@k with
@@ -127,6 +109,24 @@ object Pipeline {
       .orderBy("query_id")
   }
 
+  /** HYBRID RETRIEVAL by Reciprocal Rank Fusion (Cormack/Clarke/Büttcher
+    * SIGIR'09 — the production default for combining lexical and vector
+    * search): per query, fuse the BM25 top-k ([[TextAnalysis.bm25Search]])
+    * with the embedding-cosine top-k ([[Similarity.bruteForceTopK]]) by
+    * RRF(d) = Σ_arms 1/(kRrf + rank_arm(d)) — rank-based, so the two
+    * arms' incomparable score scales never need calibration. Documents
+    * and embeddings are parallel corpora here (vec_id i embeds doc i —
+    * the testdata contract every cross-modal query in this repo uses).
+    *
+    * Determinism/oracle story: each arm's membership comes from that
+    * operator's own (hash-verified) ranking; fusion ranks arms on their
+    * ROUNDED emitted scores with id tie-breaks, and an RRF sum has at
+    * most one term per arm — two-double addition is order-free — so the
+    * composed SQL oracle (the two arms' oracle texts verbatim, fused by
+    * the same window arithmetic) matches hash-for-hash. Cost: the two
+    * arms (each bounded: broadcast query side, corpus streamed once)
+    * plus two k·nQueries-row windows — fusion itself is free at any
+    * corpus size. */
   def hybridSearch(t: Tables, k: Int = 5, kRrf: Int = 60): DataFrame =
     rrfFuse(TextAnalysis.bm25Search(t), "bm25",
       Similarity.bruteForceTopK(t), "cosine", k, kRrf)

@@ -182,8 +182,7 @@ object Sampling {
     * and are excluded (ln(u)/0 is undefined — they can never win). */
   def weightedSample(t: Tables, k: Int = 50,
                      denom: Int = 1 << 20): DataFrame = {
-    val nTokens = size(filter(
-      split(lower(trim(col("text"))), "\\s+"), tk => tk =!= ""))
+    val nTokens = size(TextAnalysis.tokens(col("text")))
     val u = (pmod(xxhash64(col("doc_id")), lit(denom.toLong)).cast("double") +
       lit(0.5)) / lit(denom.toDouble)
     t.documents

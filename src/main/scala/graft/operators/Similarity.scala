@@ -1299,6 +1299,21 @@ object Similarity {
       .orderBy("vec_id")
   }
 
+  /** Unit-normalized double coordinates of a float vector — the SEQUENTIAL
+    * (index-ascending) norm fold every kernel and oracle in this family
+    * shares, so driver-built center/benchmark matrices are bit-identical
+    * to what [[graft.functions.HashFunctions.minCellDistUnit]] computes
+    * executor-side. */
+  private[operators] def unitOf(v: Seq[Float]): Seq[Double] = {
+    val d = v.toArray.map(_.toDouble)
+    var n2 = 0.0
+    var j = 0
+    while (j < d.length) { n2 += d(j) * d(j); j += 1 }
+    val n = math.sqrt(n2)
+    val inv = if (n == 0.0) 1.0 else n
+    d.toSeq.map(_ / inv)
+  }
+
   /** Greedy k-center data selection (Gonzalez 1985 farthest-point
     * traversal, the classic 2-approximation — the coreset/diversity
     * selection primitive of embedding-based data curation): seed with the
@@ -1326,21 +1341,6 @@ object Similarity {
     * max-min coverage radius, NULL for the seed (it has no prior
     * centers); the monotone non-increasing radius sequence is the
     * coverage-vs-k curve a curation pipeline reads the budget off. */
-  /** Unit-normalized double coordinates of a float vector — the SEQUENTIAL
-    * (index-ascending) norm fold every kernel and oracle in this family
-    * shares, so driver-built center/benchmark matrices are bit-identical
-    * to what [[graft.functions.HashFunctions.minCellDistUnit]] computes
-    * executor-side. */
-  private[operators] def unitOf(v: Seq[Float]): Seq[Double] = {
-    val d = v.toArray.map(_.toDouble)
-    var n2 = 0.0
-    var j = 0
-    while (j < d.length) { n2 += d(j) * d(j); j += 1 }
-    val n = math.sqrt(n2)
-    val inv = if (n == 0.0) 1.0 else n
-    d.toSeq.map(_ / inv)
-  }
-
   def kCenterSelect(t: Tables, k: Int = 8): DataFrame = {
     val spark = t.spark
     import spark.implicits._

@@ -16,9 +16,11 @@ object TextAnalysis {
   /** Whitespace tokenization of the normalized text. The empty-string guard
     * matters: `split("", "\\s+")` yields `[""]`, so without it empty or
     * whitespace-only documents would count one phantom token and "" could
-    * rank as a top term. */
+    * rank as a top term. `array_remove`, not a `filter` lambda: it is
+    * code-generated, so a projection that tokenizes stays in whole-stage
+    * codegen. */
   def tokens(text: Column): Column =
-    filter(split(lower(trim(text)), "\\s+"), t => t =!= "")
+    array_remove(split(lower(trim(text)), "\\s+"), "")
 
   /** A small English stopword list (enough for ratio features). */
   val Stopwords: Seq[String] =
@@ -213,7 +215,7 @@ object TextAnalysis {
     val vocab0 = words
       .withColumn("seq",
         concat(lit(BpeSep),
-          array_join(filter(split(col("word"), ""), c => c =!= ""), BpeSep + BpeSep),
+          array_join(array_remove(split(col("word"), ""), ""), BpeSep + BpeSep),
           lit(BpeSep)))
       .select("freq", "seq")
     learnMergesFromVocab(vocab0, nMerges)
@@ -233,14 +235,12 @@ object TextAnalysis {
     * IDENTICAL round arithmetic and argmax tie-break. */
   private def learnMergesFromVocab(vocab0: DataFrame,
                                    nMerges: Int): Seq[(Int, String, String, Long)] = {
-    val SEP = BpeSep
-    def framed(a: String, b: String) = bpeFramed(a, b)
     var vocab = vocab0.localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     var r = 1
     var exhausted = false
     while (r <= nMerges && !exhausted) {
-      val syms = filter(split(col("seq"), SEP), s => s =!= "")
+      val syms = array_remove(split(col("seq"), BpeSep), "")
       val top = vocab
         .select(col("freq"), syms.as("_sy"))
         .filter(size(col("_sy")) >= 2)
@@ -257,7 +257,7 @@ object TextAnalysis {
         val (a, b, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((r, a, b, cnt))
         val next = vocab.withColumn("seq",
-          call_function("replace", col("seq"), lit(framed(a, b)), lit(s"$SEP$a$b$SEP")))
+          call_function("replace", col("seq"), lit(bpeFramed(a, b)), lit(s"$BpeSep$a$b$BpeSep")))
           .localCheckpoint()
         vocab.unpersist(blocking = false)
         vocab = next
@@ -284,8 +284,6 @@ object TextAnalysis {
     */
   def bpeEncode(t: Tables, nMerges: Int = 8,
                 trained: Option[Seq[(String, String)]] = None): DataFrame = {
-    val SEP = "\u001f"
-    def framed(a: String, b: String) = s"$SEP$a$SEP$SEP$b$SEP"
     // a production tokenizer is TRAINED ONCE and shipped; `trained` is
     // that shape — the caller loads a persisted rank-ordered merge table
     // and the per-call training pass disappears (the from-scratch default
@@ -296,15 +294,15 @@ object TextAnalysis {
       .select(col("doc_id"), explode(tokens(col("text"))).as("word"))
     val vocab0 = docWords.select("word").distinct()
       .withColumn("seq",
-        concat(lit(SEP),
-          array_join(filter(split(col("word"), ""), c => c =!= ""), SEP + SEP),
-          lit(SEP)))
+        concat(lit(BpeSep),
+          array_join(array_remove(split(col("word"), ""), ""), BpeSep + BpeSep),
+          lit(BpeSep)))
     val encoded = merges.foldLeft(vocab0) { case (df, (a, b)) =>
       df.withColumn("seq",
-        call_function("replace", col("seq"), lit(framed(a, b)), lit(s"$SEP$a$b$SEP")))
+        call_function("replace", col("seq"), lit(bpeFramed(a, b)), lit(s"$BpeSep$a$b$BpeSep")))
     }
       .select(col("word"), length(col("word")).cast("bigint").as("_nch"),
-        size(filter(split(col("seq"), SEP), s => s =!= "")).cast("bigint").as("_nsym"))
+        size(array_remove(split(col("seq"), BpeSep), "")).cast("bigint").as("_nsym"))
     docWords.join(encoded, Seq("word"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_words"),
@@ -365,7 +363,6 @@ object TextAnalysis {
     * table). */
   def bpeByteFallback(t: Tables, nMerges: Int = 8,
                       trained: Option[(Seq[(String, String)], Seq[String])] = None): DataFrame = {
-    val SEP = BpeSep
     val docs2 = t.documents.select(col("doc_id"), col("lang"),
       concat(col("text"),
         when(col("lang") =!= "en", lit(" café 中")).otherwise(lit("")))
@@ -374,10 +371,10 @@ object TextAnalysis {
       .select(col("doc_id"), col("lang"), explode(tokens(col("text"))).as("word"))
       .localCheckpoint() // train subcorpus + apply vocab + rollup read it
     def byteSeq(w: org.apache.spark.sql.Column) =
-      concat(lit(SEP),
+      concat(lit(BpeSep),
         array_join(regexp_extract_all(hex(encode(w, "UTF-8")), lit(".."), lit(0)),
-          SEP + SEP),
-        lit(SEP))
+          BpeSep + BpeSep),
+        lit(BpeSep))
     // a tokenizer trains ONCE and ships: `trained` carries the persisted
     // (merge table, training alphabet) pair — the q_bpe_encode contract;
     // the from-scratch default re-learns for self-contained use
@@ -386,12 +383,12 @@ object TextAnalysis {
       .withColumn("seq", byteSeq(col("word")))
     val encoded = merges.foldLeft(vocab0) { case (df, (a, b)) =>
       df.withColumn("seq",
-        call_function("replace", col("seq"), lit(bpeFramed(a, b)), lit(s"$SEP$a$b$SEP")))
+        call_function("replace", col("seq"), lit(bpeFramed(a, b)), lit(s"$BpeSep$a$b$BpeSep")))
     }
       .select(col("word"),
         length(encode(col("word"), "UTF-8")).cast("bigint").as("_nb"),
-        size(filter(split(col("seq"), SEP), s => s =!= "")).cast("bigint").as("_nsym"),
-        (size(array_except(filter(split(col("word"), ""), c => c =!= ""),
+        size(array_remove(split(col("seq"), BpeSep), "")).cast("bigint").as("_nsym"),
+        (size(array_except(array_remove(split(col("word"), ""), ""),
           array(alphabet.map(lit): _*))) > 0).as("_unk"))
     docWords.join(encoded, Seq("word"))
       .groupBy("lang")
@@ -410,7 +407,6 @@ object TextAnalysis {
     * training-alphabet char set the closed-vocab UNK arm compares
     * against. Both halves ship together as one persisted artifact. */
   def trainByteBpe(t: Tables, nMerges: Int = 8): (Seq[(String, String)], Seq[String]) = {
-    val SEP = BpeSep
     val docs2 = t.documents.select(col("lang"),
       concat(col("text"),
         when(col("lang") =!= "en", lit(" café 中")).otherwise(lit("")))
@@ -419,10 +415,10 @@ object TextAnalysis {
       .select(explode(tokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
       .localCheckpoint() // merges + alphabet both read it
-    val seq0 = concat(lit(SEP),
+    val seq0 = concat(lit(BpeSep),
       array_join(regexp_extract_all(hex(encode(col("word"), "UTF-8")),
-        lit(".."), lit(0)), SEP + SEP),
-      lit(SEP))
+        lit(".."), lit(0)), BpeSep + BpeSep),
+      lit(BpeSep))
     val m = learnMergesFromVocab(
       trainWords.select(col("freq"), seq0.as("seq")), nMerges)
       .map(x => (x._2, x._3))
@@ -430,34 +426,11 @@ object TextAnalysis {
     // char-level tokenizer saw in training (driver-side constant — the
     // shipped artifact, bounded by charset size)
     val a = trainWords
-      .select(explode(filter(split(col("word"), ""), c => c =!= "")).as("c"))
+      .select(explode(array_remove(split(col("word"), ""), "")).as("c"))
       .distinct().collect().map(_.getString(0)).sorted.toSeq
     (m, a)
   }
 
-  /** Winnowing fingerprint selection (Schleimer, Wilkerson, Aiken,
-    * "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD
-    * 2003 — public algorithm, token-shingle variant): hash every
-    * positioned `k`-token shingle (Karp–Rabin fold + mix64 — the
-    * [[HashFunctions.rollingHash64]] kernel), then keep the MINIMUM hash
-    * of every window of `w` consecutive shingle hashes. The winnowed set
-    * is position-robust — insertions far from a match don't disturb the
-    * selected fingerprints — with expected density 2/(w+1), and the
-    * guarantee that any shared run of ≥ w+k−1 tokens yields at least one
-    * shared fingerprint. Per document the report carries the selected
-    * count, the density, and how many selected fingerprints also appear
-    * in ANOTHER document's winnowed set — the mirror/plagiarism signal an
-    * auditor reads.
-    *
-    * Scale shape — linear like [[graft.operators.Dedup.duplicateSpans]]:
-    * shingle hashing and window minima are per-document array transforms
-    * (no shuffle), the winnowed sets explode to (fp, doc) rows for ONE
-    * fp-keyed count-distinct, and the shared counts come from a semi-join
-    * back on the fp key — never a document pair join. Documents shorter
-    * than `k` tokens have no shingles and are excluded by construction;
-    * documents with fewer than `w` windows keep the global minimum (the
-    * algorithm's boundary rule), so every included doc has ≥ 1
-    * fingerprint. */
   /** The winnowing selection expressions over a tokenized frame: `_tk`
     * (token array, at least `k` tokens) → `_gh` (positioned k-shingle
     * hashes, each the `rollingHash64` of the shingle's `concat_ws(" ")`,
@@ -495,6 +468,29 @@ object TextAnalysis {
       .select(col("doc_id"), explode(sel).as("fp"))
   }
 
+  /** Winnowing fingerprint selection (Schleimer, Wilkerson, Aiken,
+    * "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD
+    * 2003 — public algorithm, token-shingle variant): hash every
+    * positioned `k`-token shingle (Karp–Rabin fold + mix64 — the
+    * [[HashFunctions.rollingHash64]] kernel), then keep the MINIMUM hash
+    * of every window of `w` consecutive shingle hashes. The winnowed set
+    * is position-robust — insertions far from a match don't disturb the
+    * selected fingerprints — with expected density 2/(w+1), and the
+    * guarantee that any shared run of ≥ w+k−1 tokens yields at least one
+    * shared fingerprint. Per document the report carries the selected
+    * count, the density, and how many selected fingerprints also appear
+    * in ANOTHER document's winnowed set — the mirror/plagiarism signal an
+    * auditor reads.
+    *
+    * Scale shape — linear like [[graft.operators.Dedup.duplicateSpans]]:
+    * shingle hashing and window minima are per-document array transforms
+    * (no shuffle), the winnowed sets explode to (fp, doc) rows for ONE
+    * fp-keyed count-distinct, and the shared counts come from a semi-join
+    * back on the fp key — never a document pair join. Documents shorter
+    * than `k` tokens have no shingles and are excluded by construction;
+    * documents with fewer than `w` windows keep the global minimum (the
+    * algorithm's boundary rule), so every included doc has ≥ 1
+    * fingerprint. */
   def winnowFingerprints(t: Tables, k: Int = 3, w: Int = 4): DataFrame = {
     val (gh, sel) = winnowExprs(k, w)
     // kernelSpread (r19): the tokenize+gram-hash+winnow-select kernel ran
@@ -1849,16 +1845,6 @@ object TextAnalysis {
       .orderBy("lang_a", "lang_b")
   }
 
-  /** COHEN'S KAPPA agreement (Cohen 1960) between two rule-based binary
-    * quality labelers — labeler A: character length ≥ 300; labeler B:
-    * token count ≥ 55 (both near the corpus medians, so neither is a
-    * constant and chance agreement is a real correction). The
-    * inter-annotator-agreement statistic every labeling pipeline reports:
-    * κ = (p_o − p_e)/(1 − p_e), observed agreement corrected by the
-    * agreement two INDEPENDENT labelers with these marginals would reach
-    * by chance. Confusion cells are exact integers from ONE corpus
-    * aggregation; p_o, p_e, κ are closed-form ratios of those integers
-    * (round-6), mirrored term-for-term in the oracle. */
   /** TEXTRANK KEYWORD EXTRACTION (Mihalcea & Tarau EMNLP'04 — PageRank
     * over the word co-occurrence graph; the unsupervised keyword method
     * every document-understanding pipeline reaches for before training a
@@ -1967,6 +1953,16 @@ object TextAnalysis {
       .limit(k)
   }
 
+  /** COHEN'S KAPPA agreement (Cohen 1960) between two rule-based binary
+    * quality labelers — labeler A: character length ≥ 300; labeler B:
+    * token count ≥ 55 (both near the corpus medians, so neither is a
+    * constant and chance agreement is a real correction). The
+    * inter-annotator-agreement statistic every labeling pipeline reports:
+    * κ = (p_o − p_e)/(1 − p_e), observed agreement corrected by the
+    * agreement two INDEPENDENT labelers with these marginals would reach
+    * by chance. Confusion cells are exact integers from ONE corpus
+    * aggregation; p_o, p_e, κ are closed-form ratios of those integers
+    * (round-6), mirrored term-for-term in the oracle. */
   def cohensKappa(t: Tables, charThreshold: Int = 300,
                   tokenThreshold: Int = 55): DataFrame = {
     val labeled = t.documents.select(

@@ -250,13 +250,6 @@ object TextIndex {
       .orderBy("query_id", "neighbor_id")
   }
 
-  /** BM25 top-k against the SEGMENTED index: per-segment term-pruned
-    * scans union (each one bucket- and row-group-pruned exactly like the
-    * monolithic probe), df recovers as a term-partitioned count over the
-    * probed postings — the probe reads every posting of its terms by
-    * construction, so the derivation is exact — and N/avgdl sum from the
-    * immutable per-segment metas. Scoring arithmetic is identical to
-    * [[bm25Probe]], so the same from-scratch oracle verifies it. */
   /** The shared byte-derived probe gate (r17 verdict item 1): a bucketed-
     * table scan is ONE TASK PER BUCKET PER TABLE regardless of bytes —
     * tiny stores pay ~100 ms of setup per bucket-task for kilobytes of
@@ -295,6 +288,13 @@ object TextIndex {
     }
   }
 
+  /** BM25 top-k against the SEGMENTED index: per-segment term-pruned
+    * scans union (each one bucket- and row-group-pruned exactly like the
+    * monolithic probe), df recovers as a term-partitioned count over the
+    * probed postings — the probe reads every posting of its terms by
+    * construction, so the derivation is exact — and N/avgdl sum from the
+    * immutable per-segment metas. Scoring arithmetic is identical to
+    * [[bm25Probe]], so the same from-scratch oracle verifies it. */
   def bm25ProbeSegmented(spark: SparkSession, seg: Segments,
                          queryDocs: DataFrame, topK: Int = 5,
                          k1: Double = 1.2, b: Double = 0.75): DataFrame = {

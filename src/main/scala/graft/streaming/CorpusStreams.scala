@@ -180,19 +180,6 @@ object CorpusStreams {
       .filter(col("_m.n_occurrences") === 0L)
       .drop("_m")
 
-  /** Streaming trending terms: the SpaceSaving frequent-items sketch
-    * ([[graft.functions.FreqItemsSketch]]) as a GLOBAL streaming aggregate
-    * in complete mode — each micro-batch's tokens merge into the sketch
-    * held in the state store, and the output is the current top-`k`
-    * estimate with per-item error bounds.
-    *
-    * The scale story is the sketch's: state is ONE capacity-bounded buffer
-    * (not a per-term key space), so the aggregation runs forever on an
-    * unbounded vocabulary stream where an exact groupBy's state would grow
-    * without bound. Same mergeable partial/final machinery as the batch
-    * twin ([[graft.operators.TextAnalysis.topTermsSketch]]) — the spec
-    * asserts the streamed result over split batches equals the batch
-    * sketch over the union. */
   /** Streaming EMBEDDING ingest into the persisted ANN index
     * ([[graft.operators.AnnIndex]]): each micro-batch's vectors are
     * assigned THROUGH the frozen quantizer and appended to the
@@ -357,6 +344,19 @@ object CorpusStreams {
       .select(col("window_start"), col("e.item").as("token"),
         col("e.est_count").as("est_count"), col("e.max_err").as("max_err"))
 
+  /** Streaming trending terms: the SpaceSaving frequent-items sketch
+    * ([[graft.functions.FreqItemsSketch]]) as a GLOBAL streaming aggregate
+    * in complete mode — each micro-batch's tokens merge into the sketch
+    * held in the state store, and the output is the current top-`k`
+    * estimate with per-item error bounds.
+    *
+    * The scale story is the sketch's: state is ONE capacity-bounded buffer
+    * (not a per-term key space), so the aggregation runs forever on an
+    * unbounded vocabulary stream where an exact groupBy's state would grow
+    * without bound. Same mergeable partial/final machinery as the batch
+    * twin ([[graft.operators.TextAnalysis.topTermsSketch]]) — the spec
+    * asserts the streamed result over split batches equals the batch
+    * sketch over the union. */
   def trendingTerms(docs: DataFrame, capacity: Int = 64, k: Int = 10): DataFrame =
     docs
       .select(explode(TextAnalysis.tokens(col("text"))).as("token"))

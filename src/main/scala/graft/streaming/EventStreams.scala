@@ -182,11 +182,38 @@ object EventStreams {
   final case class SessionOut(user_id: Long, start_us: Long, end_us: Long,
                               n_events: Long)
 
+  /** Full-precision micros: `getTime` truncated to seconds plus the nanos
+    * field. */
+  private def us(t: Timestamp): Long = t.getTime / 1000 * 1000000L + t.getNanos / 1000
+
+  /** Folds one user's batch into the open session `open`, in (event-time,
+    * event_id) order since the group iterator's order is unspecified: an
+    * event within `gapUs` of the session's last one extends it, a later
+    * one closes it in-line and opens the next. Returns the session left
+    * open and the sessions closed. */
+  private def foldSessions(userId: Long, batch: Iterator[Event], open: Option[SessionState],
+                           gapUs: Long): (Option[SessionState], Seq[SessionOut]) = {
+    var cur = open
+    val closed = Seq.newBuilder[SessionOut]
+    batch.toArray.sortBy(e => (us(e.ts), e.event_id)).foreach { e =>
+      val t = us(e.ts)
+      cur match {
+        case Some(s) if t - s.last_us <= gapUs =>
+          cur = Some(SessionState(s.start_us, math.max(s.last_us, t), s.n + 1))
+        case Some(s) =>
+          closed += SessionOut(userId, s.start_us, s.last_us, s.n)
+          cur = Some(SessionState(t, t, 1))
+        case None =>
+          cur = Some(SessionState(t, t, 1))
+      }
+    }
+    (cur, closed.result())
+  }
+
   def sessionizeTimeout(spark: SparkSession, events: Dataset[Event],
                         gapMinutes: Int = 30,
                         watermark: String = "10 minutes"): Dataset[SessionOut] = {
     import spark.implicits._
-    def us(t: Timestamp): Long = t.getTime / 1000 * 1000000L + t.getNanos / 1000
     val gapUs = gapMinutes * 60000000L
     events
       .withColumn("ts", col("ts").cast("timestamp"))
@@ -202,21 +229,7 @@ object EventStreams {
             state.remove()
             Iterator.single(SessionOut(userId, s.start_us, s.last_us, s.n))
           } else {
-            val sorted = batch.toArray.sortBy(e => (us(e.ts), e.event_id))
-            var cur = state.getOption
-            val closed = Seq.newBuilder[SessionOut]
-            sorted.foreach { e =>
-              val t = us(e.ts)
-              cur match {
-                case Some(s) if t - s.last_us <= gapUs =>
-                  cur = Some(SessionState(s.start_us, math.max(s.last_us, t), s.n + 1))
-                case Some(s) => // gap exceeded INSIDE the data: close in-line
-                  closed += SessionOut(userId, s.start_us, s.last_us, s.n)
-                  cur = Some(SessionState(t, t, 1))
-                case None =>
-                  cur = Some(SessionState(t, t, 1))
-              }
-            }
+            val (cur, closed) = foldSessions(userId, batch, state.getOption, gapUs)
             cur.foreach { s =>
               state.update(s)
               // CEIL to millis: a floored timer represents an instant up
@@ -226,7 +239,7 @@ object EventStreams {
               // session already closed
               state.setTimeoutTimestamp((s.last_us + gapUs + 999) / 1000)
             }
-            closed.result().iterator
+            closed.iterator
           }
       }
   }
@@ -252,25 +265,10 @@ object EventStreams {
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       session = getHandle.getValueState[SessionState]("session",
         org.apache.spark.sql.Encoders.product[SessionState], TTLConfig.NONE)
-    private def us(t: Timestamp): Long =
-      t.getTime / 1000 * 1000000L + t.getNanos / 1000
     override def handleInputRows(userId: Long, rows: Iterator[Event],
                                  tv: TimerValues): Iterator[SessionOut] = {
-      val sorted = rows.toArray.sortBy(e => (us(e.ts), e.event_id))
-      var cur = if (session.exists()) Some(session.get()) else None
-      val closed = Seq.newBuilder[SessionOut]
-      sorted.foreach { e =>
-        val t = us(e.ts)
-        cur match {
-          case Some(s) if t - s.last_us <= gapUs =>
-            cur = Some(SessionState(s.start_us, math.max(s.last_us, t), s.n + 1))
-          case Some(s) =>
-            closed += SessionOut(userId, s.start_us, s.last_us, s.n)
-            cur = Some(SessionState(t, t, 1))
-          case None =>
-            cur = Some(SessionState(t, t, 1))
-        }
-      }
+      val (cur, closed) = foldSessions(userId, rows,
+        if (session.exists()) Some(session.get()) else None, gapUs)
       cur.foreach { s =>
         session.update(s)
         // exactly one live timer per open session: drop stale, arm last+gap
@@ -279,7 +277,7 @@ object EventStreams {
         // never fire before the true gap expiry at last+gap microseconds
         getHandle.registerTimer((s.last_us + gapUs + 999) / 1000)
       }
-      closed.result().iterator
+      closed.iterator
     }
     override def handleExpiredTimer(userId: Long, tv: TimerValues,
                                     info: ExpiredTimerInfo): Iterator[SessionOut] = {
@@ -325,8 +323,6 @@ object EventStreams {
   def funnelProgress(spark: SparkSession, events: Dataset[Event],
                      steps: Seq[String] = Seq("view", "click", "purchase")): Dataset[FunnelProgress] = {
     import spark.implicits._
-    // full-precision micros: getTime truncated to seconds + the nanos field
-    def us(t: Timestamp): Long = t.getTime / 1000 * 1000000L + t.getNanos / 1000
     events
       .groupByKey(_.user_id)
       .mapGroupsWithState[FunnelProgress, FunnelProgress](GroupStateTimeout.NoTimeout) {
@@ -376,7 +372,6 @@ object EventStreams {
                             watermark: String = "10 minutes",
                             steps: Seq[String] = Seq("view", "click", "purchase")): Dataset[FunnelProgress] = {
     import spark.implicits._
-    def us(t: Timestamp): Long = t.getTime / 1000 * 1000000L + t.getNanos / 1000
     val stepSet = steps.toSet
     def fold(step0: Int, entry0: Long, evs: Seq[BufEvent]): (Int, Long) = {
       var step = step0; var entry = entry0

@@ -5,12 +5,11 @@ import org.apache.spark.scheduler.SparkListenerEvent
 
 /** Bridge to `SparkContext.listenerBus` (`private[spark]` in Spark 4.x).
   *
-  * The bench's per-query task-time accounting reads an accumulator that a
-  * `SparkListener.onTaskEnd` writes; listener events are delivered on an
-  * async bus, so the reader must drain the bus before sampling or the last
-  * tasks of a query get charged to the next one. This is the one sanctioned
-  * way to block on that drain, and to post an engine event such as
-  * [[graft.ArmDecision]] to every attached listener.
+  * [[graft.QueryRecord]] reads what its listener collected; listener
+  * events are delivered on an async bus, so the reader must drain the bus
+  * first or the last tasks of a block are missed. This is the one
+  * sanctioned way to block on that drain, and to post an engine event such
+  * as [[graft.ArmDecision]] to every attached listener.
   */
 object ListenerBridge {
   def waitUntilListenerBusEmpty(sc: SparkContext, timeoutMillis: Long = 30000L): Unit =

@@ -26,21 +26,13 @@ class ArmsSpec extends SparkSpec {
   }
 
   test("collectBounded runs no job when plan-stats exceed the budget or arms=distributed") {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     val df = spark.range(100).toDF()
-    sc.addSparkListener(listener)
-    val (results, arms) = try armDecisions(Seq(
+    val (results, record) = QueryRecord.of(spark)(Seq(
       Arms.collectBounded("spec.stats", df, 1000L, maxStatsBytes = 1L),
       withArms("distributed")(Arms.collectBounded("spec.forced", df, 1000L))))
-    finally sc.removeSparkListener(listener)
     assert(results == Seq(None, None))
-    assert(jobs.get == 0, s"${jobs.get} jobs ran")
-    assert(arms.map(d => (d.site, d.arm, d.unit)) ==
+    assert(record.jobs == 0, s"${record.jobs} jobs ran")
+    assert(record.arms.map(d => (d.site, d.arm, d.unit)) ==
       Seq(("spec.stats", "distributed", "bytes"), ("spec.forced", "distributed", "bytes")))
   }
 

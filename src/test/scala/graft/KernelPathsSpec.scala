@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.{HashFunctions => H, TextFunctions}
+import graft.operators.TextAnalysis
 
 /** Every engine kernel, called through the column API and through its SQL
   * name, over the sf0.001 parquet fixture:
@@ -33,9 +34,7 @@ class KernelPathsSpec extends SparkSpec {
   private def docKernels: DataFrame = {
     val text = col("text")
     val txt = coalesce(text, lit(""))
-    // split, not TextAnalysis.tokens: its filter lambda is interpreted-only
-    // and would keep the projection out of whole-stage codegen
-    val tk = split(lower(trim(text)), " ")
+    val tk = TextAnalysis.tokens(text)
     // 0, 1 or 2 tokens: topBigram's null result
     val short = slice(tk, lit(1), pmod(col("doc_id"), lit(3L)).cast("int"))
     val ids = sort_array(array_distinct(array(
@@ -153,6 +152,13 @@ class KernelPathsSpec extends SparkSpec {
     }
     // the nullable kernel really returns null on short input
     assert(codegen.head.exists(_.isNullAt(docKernels.columns.indexOf("top_bigram"))))
+  }
+
+  test("a projection that tokenizes stays in whole-stage codegen") {
+    val df = tables.documents.select(
+      H.simhash64(TextAnalysis.tokens(col("text"))).as("simhash64"))
+    assert("""\*\(\d+\) Project""".r.findFirstIn(planOf(df)).isDefined,
+      s"not in whole-stage codegen:\n${planOf(df)}")
   }
 
   private def f(name: String, t: DataType, nullable: Boolean = true) =

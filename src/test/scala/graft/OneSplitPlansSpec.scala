@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SparkPlan}
@@ -36,18 +33,8 @@ class OneSplitPlansSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** `f`'s result and the number of jobs it ran. */
   private def jobsOf[T](f: => T): (T, Int) = {
-    val sc = ext.sparkContext
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerBridge.waitUntilListenerBusEmpty(sc)
-    sc.addSparkListener(l)
-    try {
-      val r = f
-      ListenerBridge.waitUntilListenerBusEmpty(sc)
-      (r, n.get)
-    } finally sc.removeSparkListener(l)
+    val (r, record) = QueryRecord.of(ext)(f)
+    (r, record.jobs)
   }
 
   private def withConf[T](key: String, value: String)(f: => T): T = {

@@ -1,11 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.internal.StaticSQLConf
 import org.scalatest.funsuite.AnyFunSuite
@@ -30,20 +24,8 @@ trait SparkSpec extends AnyFunSuite {
 
   /** `f`'s result and the [[ArmDecision]]s posted while it ran. */
   def armDecisions[T](f: => T): (T, Seq[ArmDecision]) = {
-    val sc = spark.sparkContext
-    val seen = new ConcurrentLinkedQueue[ArmDecision]
-    val listener = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case d: ArmDecision => seen.add(d)
-        case _ =>
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      val r = f
-      ListenerBridge.waitUntilListenerBusEmpty(sc)
-      (r, seen.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
+    val (r, record) = QueryRecord.of(spark)(f)
+    (r, record.arms)
   }
 }
 

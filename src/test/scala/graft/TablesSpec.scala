@@ -1,15 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.graftbridge.ListenerBridge
 import org.apache.spark.metrics.source.HiveCatalogMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{LongType, StringType, TimestampNTZType, TimestampType}
@@ -24,27 +21,10 @@ class TablesSpec extends SparkSpec {
 
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
-  /** Jobs launched from this thread while `f` runs, counted after the
-    * listener bus has drained. */
+  /** Jobs launched from this thread while `f` runs. */
   private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("graft.tablesspec") == tag)
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.tablesspec", tag)
-    try {
-      val r = f
-      ListenerBridge.waitUntilListenerBusEmpty(sc)
-      (r, n.get)
-    } finally {
-      sc.setLocalProperty("graft.tablesspec", null)
-      sc.removeSparkListener(listener)
-    }
+    val (r, record) = QueryRecord.of(spark)(f)
+    (r, record.jobs)
   }
 
   private def freshDir(): Path = Files.createTempDirectory("graft_tables_")

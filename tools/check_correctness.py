@@ -6,11 +6,14 @@ Usage: python3 tools/check_correctness.py [sf_dir] [verify_out]
 Mirrors the driver's t2 gate: for each query with oracle SQL, run the SQL in
 DuckDB over the same parquet tables, sort columns by name, compare row count,
 schema (column names), and a hash of the values (rows sorted for stability).
+Each query's line carries its elapsed seconds (reading the Verify dump, the
+DuckDB SQL and the compare); the summary line carries the total.
 """
 import glob
 import json
 import math
 import sys
+import time
 
 import duckdb
 import pandas as pd
@@ -43,6 +46,39 @@ def table_hash(df: pd.DataFrame):
     return h.hexdigest()
 
 
+def check(con, name, sql, out_dir):
+    """One query's result: its Verify dump against its oracle SQL."""
+    files = glob.glob(f"{out_dir}/{name}/*.parquet")
+    if not files:
+        return {"status": "NO_SPARK_OUTPUT"}
+    try:
+        got = canon(pd.concat([pd.read_parquet(f) for f in files]))
+        want = canon(con.sql(sql).df())
+    except Exception as e:
+        return {"status": "ERROR", "err": str(e)[:300]}
+    r = {
+        "rows": [len(got), len(want)],
+        "cols_match": list(got.columns) == list(want.columns),
+        "hash_match": None,
+    }
+    if r["cols_match"] and len(got) == len(want):
+        r["hash_match"] = table_hash(got) == table_hash(want)
+        if not r["hash_match"]:
+            # locate first differing cell for debugging
+            for i in range(len(got)):
+                for c in got.columns:
+                    a, b = norm_cell(got[c].iloc[i]), norm_cell(want[c].iloc[i])
+                    if a != b:
+                        r["first_diff"] = {"row": i, "col": c,
+                                           "spark": a, "duckdb": b}
+                        break
+                if "first_diff" in r:
+                    break
+    r["status"] = ("PASS" if r["hash_match"]
+                   else "FAIL")
+    return r
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/target/verify_out"
@@ -54,45 +90,17 @@ def main():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     results = {}
+    elapsed = {}
     for name in sorted(oracle):
-        sql = oracle[name]
-        files = glob.glob(f"{out_dir}/{name}/*.parquet")
-        if not files:
-            results[name] = {"status": "NO_SPARK_OUTPUT"}
-            continue
-        try:
-            got = canon(pd.concat([pd.read_parquet(f) for f in files]))
-            want = canon(con.sql(sql).df())
-        except Exception as e:
-            results[name] = {"status": "ERROR", "err": str(e)[:300]}
-            continue
-        r = {
-            "rows": [len(got), len(want)],
-            "cols_match": list(got.columns) == list(want.columns),
-            "hash_match": None,
-        }
-        if r["cols_match"] and len(got) == len(want):
-            r["hash_match"] = table_hash(got) == table_hash(want)
-            if not r["hash_match"]:
-                # locate first differing cell for debugging
-                for i in range(len(got)):
-                    for c in got.columns:
-                        a, b = norm_cell(got[c].iloc[i]), norm_cell(want[c].iloc[i])
-                        if a != b:
-                            r["first_diff"] = {"row": i, "col": c,
-                                               "spark": a, "duckdb": b}
-                            break
-                    if "first_diff" in r:
-                        break
-        r["status"] = ("PASS" if r["hash_match"]
-                       else "FAIL")
-        results[name] = r
+        t0 = time.perf_counter()
+        results[name] = check(con, name, oracle[name], out_dir)
+        elapsed[name] = time.perf_counter() - t0
     npass = sum(1 for r in results.values() if r.get("status") == "PASS")
     for name, r in results.items():
         flag = "✓" if r.get("status") == "PASS" else "✗"
         extra = "" if r.get("status") == "PASS" else f"  {json.dumps(r, default=str)[:400]}"
-        print(f"{flag} {name}{extra}")
-    print(f"\n{npass}/{len(results)} oracle queries PASS")
+        print(f"{flag} {name}  {elapsed[name]:.2f}s{extra}")
+    print(f"\n{npass}/{len(results)} oracle queries PASS in {sum(elapsed.values()):.1f}s")
     # rows-only queries: report row counts
     import os
     for name in sorted(os.listdir(out_dir)):
