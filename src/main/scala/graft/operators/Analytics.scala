@@ -686,7 +686,7 @@ object Analytics {
   }
 
   /** Median absolute deviation per group — the robust spread statistic
-    * ([[zScoreOutliers]]' moment pass breaks on heavy tails; MAD doesn't).
+    * ([[zscoreOutliers]]' moment pass breaks on heavy tails; MAD doesn't).
     * Two exact-percentile aggregations: the per-group median (group-space
     * shuffle), broadcast back onto the facts, then the median of the
     * absolute deviations. Same deliberate exact-order-statistics surface

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.HashFunctions
 import graft.sources.Tables
@@ -27,10 +26,12 @@ import graft.sources.Tables
   * fit on A) ≡ build(A) then append(B), spec-asserted. Re-fitting
   * centroids is an explicit rebuild, not an append.
   *
-  * Fit/probe/rank arithmetic is IDENTICAL to [[Similarity.ivfTopK]]
-  * (same deterministic vec_id-bounded sample, same [[Similarity.unitOf]]
-  * fold, same Lloyd iterations, same rounded-cosine/id ranking), so the
-  * attached-index query is verified by the very same SQL oracle.
+  * Fit, probe and rank call the same steps as [[Similarity.ivfTopK]]:
+  * [[Similarity.boundedVectors]] (the vec_id-bounded sample),
+  * [[Similarity.fitUnitCentroids]] (the Lloyd fit), [[Similarity.nearestCells]]
+  * (the probe) and [[Similarity.rankByCosine]] (the rounded-cosine/id
+  * ranking), so the attached-index query is verified by the very same SQL
+  * oracle.
   */
 object AnnIndex {
 
@@ -45,10 +46,6 @@ object AnnIndex {
   // would see data with no marker (r11 ADVICE)
   private def markerPath(dir: String) =
     new org.apache.hadoop.fs.Path(dir, "_ANN_INDEX_OK")
-
-  /** Driver-side unit normalization, shared fold with the engine kernels. */
-  private def unitArr(v: Seq[Float]): Array[Double] =
-    Similarity.unitOf(v).toArray
 
   private def loadCentroids(spark: SparkSession, idx: Index): Array[Array[Double]] =
     Tables.scan(spark, idx.centroidsPath)
@@ -70,15 +67,10 @@ object AnnIndex {
                  nList: Int = 16, lloydIters: Int = 2,
                  fitOn: Option[DataFrame] = None): Index = {
     val sampleTarget = 1000L * nList
-    val sample = fitOn.getOrElse(embeddings)
-      .filter(col("vec_id") < sampleTarget)
-      .select(col("vec_id"), col("embedding"))
-      .collect()
-      .sortBy(_.getLong(0))
-      .map(r => unitArr(r.getSeq[Float](1)))
+    val sample = Similarity.boundedVectors(fitOn.getOrElse(embeddings), sampleTarget)
     require(sample.nonEmpty,
       s"AnnIndex.buildIndex: no vectors with vec_id < $sampleTarget to fit the quantizer on")
-    val cents = Similarity.fitCentroids(sample, nList, iters = lloydIters)
+    val cents = Similarity.fitUnitCentroids(sample, nList, lloydIters)
     val idx = Index(dir, cents.length)
     import spark.implicits._
     cents.zipWithIndex
@@ -157,34 +149,18 @@ object AnnIndex {
   def queryIndex(spark: SparkSession, idx: Index, queries: DataFrame,
                  k: Int = 5, nProbe: Int = 4): DataFrame = {
     val cents = loadCentroids(spark, idx)
-    val qs = queries.select(col("vec_id"), col("embedding")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1)))
-      .sortBy(_._1)
-    val probedRows = qs.flatMap { case (qid, qEmb) =>
-      val qUnit = unitArr(qEmb)
-      cents.zipWithIndex.map { case (c, i) =>
-        var dist = 0.0
-        var j = 0
-        while (j < c.length) { val df = qUnit(j) - c(j); dist += df * df; j += 1 }
-        (dist, i)
-      }.sortBy { case (dist, i) => (dist, i) }.take(nProbe)
-        .map { case (_, cell) => (qid, qEmb, cell) }
+    val probedRows = Similarity.sortedVectors(queries).flatMap { case (qid, qEmb) =>
+      Similarity.nearestCells(cents, qEmb, nProbe).map(cell => (qid, qEmb, cell))
     }
     import spark.implicits._
     val probed = probedRows.toSeq.toDF("query_id", "q_emb", "cell")
     val cells = probedRows.map(_._3).distinct.sorted
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    Tables.scan(spark, idx.vectorsPath)
+    Similarity.rankByCosine(Tables.scan(spark, idx.vectorsPath)
       // static values → partition pruning at the file listing, not a join
       .filter(col("cell").isin(cells.map(Integer.valueOf).toSeq: _*))
       .select(col("vec_id").as("neighbor_id"), col("embedding"), col("cell"))
       .join(broadcast(probed), "cell")
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", HashFunctions.cosineSim(col("q_emb"), col("embedding")))
-      .withColumn("rn", row_number().over(wRank))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"))
-      .orderBy("query_id", "neighbor_id")
+      .withColumn("cosine", HashFunctions.cosineSim(col("q_emb"), col("embedding"))), k)
   }
 }

@@ -186,7 +186,7 @@ object Dedup {
     * its (bounded, post-join) result via `localCheckpoint` and then calls
     * `release()` — a persist that outlives the call accumulates
     * block-manager residency across a long-lived session (round-4 finding).
-    * Not used for stored-table band scans ([[DedupIndex.probeIndex]]),
+    * Not used for stored-table band scans ([[DedupIndex.dedupeAgainstIndex]]),
     * where a rescan is a cheap bucketed file read and a cache would only
     * evict hotter blocks. */
   private def dropHotBucketsCached(

@@ -84,19 +84,11 @@ object Graph {
       d: Double): (DataFrame, Int) = {
     require(maxIters >= 1, s"pageRankConverged: maxIters must be >= 1, got $maxIters")
     val (edgesDeg, release) = tradeEdgesDeg(t)
-    var ranks = edgesDeg
-      .groupBy(col("dst").as("node"))
-      .agg((lit(1.0 - d) + lit(d) * sum(lit(1.0) / col("_deg"))).as("rank"))
-      .localCheckpoint()
+    var ranks = pageRankRound(edgesDeg, None, d).localCheckpoint()
     var rounds = 1
     var converged = false
     while (!converged && rounds < maxIters) {
-      val next = edgesDeg
-        .join(ranks.select(col("node").as("src"), col("rank")), "src")
-        .groupBy(col("dst").as("node"))
-        .agg((lit(1.0 - d) + lit(d) * sum(col("rank") / col("_deg")))
-          .as("rank"))
-        .localCheckpoint()
+      val next = pageRankRound(edgesDeg, Some(ranks), d).localCheckpoint()
       // symmetric edges ⇒ identical node sets every round: inner join is
       // total, the delta sees every node
       val delta = next
@@ -214,17 +206,23 @@ object Graph {
     // edge list is symmetric, so every node appears as a dst and each
     // round's aggregate already carries one row per node — no nodes
     // re-join, no coalesce.
-    var ranks = edgesDeg
+    var ranks = pageRankRound(edgesDeg, None, d)
+    for (_ <- 2 to iters) ranks = pageRankRound(edgesDeg, Some(ranks), d)
+    (formatRanks(ranks), release)
+  }
+
+  /** One rankN update, rankN' = (1−d) + d·Σ rankN/deg, as a lazy plan over
+    * the edge cache. Round 1 (`prev` None, rankN₀ ≡ 1) is a single
+    * aggregate; later rounds join the previous ranks on `src`. */
+  private def pageRankRound(edgesDeg: DataFrame, prev: Option[DataFrame],
+                            d: Double): DataFrame = prev match {
+    case None => edgesDeg
       .groupBy(col("dst").as("node"))
       .agg((lit(1.0 - d) + lit(d) * sum(lit(1.0) / col("_deg"))).as("rank"))
-    for (_ <- 2 to iters) {
-      ranks = edgesDeg
-        .join(ranks.select(col("node").as("src"), col("rank")), "src")
-        .groupBy(col("dst").as("node"))
-        .agg((lit(1.0 - d) + lit(d) * sum(col("rank") / col("_deg")))
-          .as("rank"))
-    }
-    (formatRanks(ranks), release)
+    case Some(ranks) => edgesDeg
+      .join(ranks.select(col("node").as("src"), col("rank")), "src")
+      .groupBy(col("dst").as("node"))
+      .agg((lit(1.0 - d) + lit(d) * sum(col("rank") / col("_deg"))).as("rank"))
   }
 
   /** Task count for a small-graph lazy stage, derived from the input's
@@ -340,7 +338,7 @@ object Graph {
     // must outlive a cache drop) skips only the OUTPUT checkpoint — the
     // writer is the single consumer — saving one plan compile + one
     // double execution of the union.
-    val (a0, h0) = rawHitsChain(edgesS, edgesD, iters, checkpointEach = false)
+    val (a0, h0) = rawHitsChain(edgesS, edgesD, iters)
     if (edgesS eq edgesD) formatHits(h0, a0)
     else {
       val out = formatHits(h0, a0).localCheckpoint()
@@ -392,33 +390,31 @@ object Graph {
   }
 
   /** The un-normalized HITS recurrence after `iters` rounds: a_r = E^T
-    * h_{r-1}, h_r = E a_r, h_0 ≡ 1 (so round 1's authority is the
-    * in-degree — an exchange-free partition-local count on the
-    * dst-clustered cache). Intermediate rounds are consumed exactly once,
-    * so with `checkpointEach = false` the chain composes LAZILY and only
-    * the final round's two aggregates checkpoint (each has two readers:
-    * its norm and the output/next step). `checkpointEach = true`
-    * materializes every round — the convergence variant needs each round
-    * for its delta probe. All values are exact integers (in double) below
+    * h_{r-1}, h_r = E a_r, h_0 ≡ 1. Intermediate rounds are consumed
+    * exactly once, so the chain composes LAZILY and only the final round's
+    * two aggregates checkpoint (each has two readers: its norm and the
+    * output/next step). All values are exact integers (in double) below
     * 2^53 — see [[hits]]. */
   private def rawHitsChain(edgesS: DataFrame, edgesD: DataFrame,
-                           iters: Int, checkpointEach: Boolean,
-                           checkpointLast: Boolean = true): (DataFrame, DataFrame) = {
-    var a: DataFrame = null
-    var h: DataFrame = null
-    for (it <- 1 to iters) {
-      val aRaw = if (it == 1)
-          edgesD.groupBy("dst").agg(count(lit(1)).cast("double").as("a0"))
-        else
-          edgesS.join(h.select(col("src"), col("h0")), "src")
-            .groupBy("dst").agg(sum("h0").as("a0"))
-      a = if (checkpointEach || (checkpointLast && it == iters))
-        aRaw.localCheckpoint() else aRaw
-      val hRaw = edgesD.join(a.select(col("dst"), col("a0")), "dst")
-        .groupBy("src").agg(sum("a0").as("h0"))
-      h = if (checkpointEach || (checkpointLast && it == iters))
-        hRaw.localCheckpoint() else hRaw
+                           iters: Int): (DataFrame, DataFrame) =
+    (2 to iters).foldLeft(hitsRound(edgesS, edgesD, None, materialize = iters == 1)) {
+      case ((_, h), it) => hitsRound(edgesS, edgesD, Some(h), materialize = it == iters)
     }
+
+  /** One HITS round over the two edge layouts: the authority step a = Eᵀh
+    * (round 1, `prev` None, is the in-degree — an exchange-free
+    * partition-local count on the dst-clustered cache), then the hub step
+    * h = E·a. `materialize` checkpoints each of the two as it is built. */
+  private def hitsRound(edgesS: DataFrame, edgesD: DataFrame, prev: Option[DataFrame],
+                        materialize: Boolean): (DataFrame, DataFrame) = {
+    def done(df: DataFrame) = if (materialize) df.localCheckpoint() else df
+    val a = done(prev match {
+      case None => edgesD.groupBy("dst").agg(count(lit(1)).cast("double").as("a0"))
+      case Some(h) => edgesS.join(h.select(col("src"), col("h0")), "src")
+        .groupBy("dst").agg(sum("h0").as("a0"))
+    })
+    val h = done(edgesD.join(a.select(col("dst"), col("a0")), "dst")
+      .groupBy("src").agg(sum("a0").as("h0")))
     (a, h)
   }
 
@@ -494,15 +490,7 @@ object Graph {
     var converged = false
     while (!converged && rounds < maxIters) {
       val it = rounds + 1
-      val aNew = (if (it == 1)
-          edgesD.groupBy("dst").agg(count(lit(1)).cast("double").as("a0"))
-        else
-          edgesS.join(h0.select(col("src"), col("h0")), "src")
-            .groupBy("dst").agg(sum("h0").as("a0")))
-        .localCheckpoint()
-      val hNew = edgesD.join(aNew.select(col("dst"), col("a0")), "dst")
-        .groupBy("src").agg(sum("a0").as("h0"))
-        .localCheckpoint()
+      val (aNew, hNew) = hitsRound(edgesS, edgesD, Option(h0), materialize = true)
       if (it > 1) {
         converged = math.max(normalizedDelta(aNew, a0, "dst", "a0"),
           normalizedDelta(hNew, h0, "src", "h0")) < eps

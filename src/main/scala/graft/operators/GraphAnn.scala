@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Arms
 import graft.functions.HashFunctions
@@ -83,28 +84,7 @@ object GraphAnn {
   def buildIndex(spark: SparkSession, embeddings: DataFrame, prefix: String,
                  dir: String, degree: Int = 16, nBits: Int = 4,
                  nTables: Int = 8, buckets: Int = 16): Index = {
-    val tableIds = array((0 until nTables).map(lit): _*)
-    val emb = embeddings
-      .select(col("vec_id"), col("embedding"), explode(tableIds).as("tbl"))
-      .withColumn("bucket",
-        HashFunctions.srpBucketSeeded(col("embedding"), nBits, col("tbl")))
-    // directed candidate edges: every ordered in-bucket pair, exact cosine
-    // map-side (ids + one double through the shuffle, not vectors), best
-    // collision per pair
-    val pairs = emb.as("a")
-      .join(emb.as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .withColumn("cos",
-        HashFunctions.cosineSim(col("a.embedding"), col("b.embedding")))
-      .select(col("a.vec_id").as("node_id"),
-        col("b.vec_id").as("neighbor_id"), col("cos"))
-      .groupBy("node_id", "neighbor_id").agg(max("cos").as("cos"))
-    import org.apache.spark.sql.expressions.Window
-    def topPerNode(df: DataFrame, n: Int) = df
-      .withColumn("rn", row_number().over(Window.partitionBy("node_id")
-        .orderBy(col("cos").desc, col("neighbor_id").asc)))
-      .filter(col("rn") <= n).drop("rn")
+    val pairs = candidateEdges(embeddings, nBits, nTables)
     // LOG-SPACED rank selection, not plain top-degree: three quarters of
     // the edges are the closest candidates (ranks 1..12 for degree 16 —
     // local navigability), the rest sit at exponentially spaced
@@ -123,28 +103,13 @@ object GraphAnn {
       .withColumn("rn", row_number().over(Window.partitionBy("node_id")
         .orderBy(col("cos").desc, col("neighbor_id").asc)))
       .filter(col("rn").isin(ranks: _*)).drop("rn")
-    // symmetrize so beam search can enter a neighborhood from either side;
-    // re-cap at 2·degree (keep best) to bound adjacency rows per node
-    val sym = topPerNode(
-      directed
-        .unionByName(directed.select(col("neighbor_id").as("node_id"),
-          col("node_id").as("neighbor_id"), col("cos")))
-        .groupBy("node_id", "neighbor_id").agg(max("cos").as("cos")),
-      2 * degree)
+    // symmetrize so beam search can enter a neighborhood from either side
+    val sym = symmetrized(directed, degree)
     // connectivity bridges: entry ↔ min-vec_id representative of every
     // seed-0 SRP bucket (≤ 2^nBits each way — constant-sized)
     val entry = embeddings.agg(min("vec_id")).head().getLong(0)
-    val reps = emb.filter(col("tbl") === 0)
-      .groupBy("bucket").agg(min("vec_id").as("rep"))
-      .filter(col("rep") =!= entry)
-      .select("rep")
     val vecOf = embeddings.select(col("vec_id"), col("embedding"))
-    val entryVec = vecOf.filter(col("vec_id") === entry)
-      .select(col("embedding").as("e_emb"))
-    val bridgeCos = reps.join(vecOf, col("rep") === col("vec_id"))
-      .crossJoin(broadcast(entryVec))
-      .withColumn("cos", HashFunctions.cosineSim(col("e_emb"), col("embedding")))
-      .select(col("rep"), col("cos"))
+    val bridgeCos = bridgeCosines(vecOf, nBits, entry)
     val bridges = bridgeCos
       .select(lit(entry).as("node_id"), col("rep").as("neighbor_id"), col("cos"))
       .unionByName(bridgeCos.select(col("rep").as("node_id"),
@@ -173,16 +138,14 @@ object GraphAnn {
   private def tagsPath(dir: String) = new HPath(dir, "graph_ann.tags")
 
   /** Directed LSH candidate edges with exact cosine over `embeddings`
-    * alone — the [[buildIndex]] candidate-join shape, reused by
-    * [[appendToIndex]] for INTRA-BATCH linking (bounded by the batch,
-    * never the corpus). */
+    * alone: every ordered pair sharing a bucket in any of the
+    * [[Similarity.srpTables]], cosine computed map-side (ids + one double
+    * through the shuffle, not vectors), best collision per pair. The
+    * [[buildIndex]] candidate join, reused by [[appendToIndex]] for
+    * INTRA-BATCH linking (bounded by the batch, never the corpus). */
   private def candidateEdges(embeddings: DataFrame, nBits: Int,
                              nTables: Int): DataFrame = {
-    val tableIds = array((0 until nTables).map(lit): _*)
-    val emb = embeddings
-      .select(col("vec_id"), col("embedding"), explode(tableIds).as("tbl"))
-      .withColumn("bucket",
-        HashFunctions.srpBucketSeeded(col("embedding"), nBits, col("tbl")))
+    val emb = Similarity.srpTables(embeddings, nBits, nTables)
     emb.as("a").join(emb.as("b"),
         col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
           col("a.vec_id") =!= col("b.vec_id"))
@@ -193,12 +156,37 @@ object GraphAnn {
       .groupBy("node_id", "neighbor_id").agg(max("cos").as("cos"))
   }
 
-  private def topEdgesPerNode(df: DataFrame, n: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  private def topEdgesPerNode(df: DataFrame, n: Int): DataFrame =
     df.withColumn("_rn", row_number().over(Window.partitionBy("node_id")
         .orderBy(col("cos").desc, col("neighbor_id").asc)))
       .filter(col("_rn") <= n).drop("_rn")
+
+  /** Connectivity-bridge cosines over `nodes(vec_id, embedding)`: the
+    * min-vec_id representative `rep` of every seed-0 SRP bucket other than
+    * the entry's own (≤ 2^nBits — constant-sized), with its `embedding`,
+    * the entry's `e_emb` and their `cos`. */
+  private def bridgeCosines(nodes: DataFrame, nBits: Int, entry: Long): DataFrame = {
+    val entryVec = nodes.filter(col("vec_id") === entry)
+      .select(col("embedding").as("e_emb"))
+    Similarity.srpTables(nodes, nBits, nTables = 1)
+      .groupBy("bucket").agg(min("vec_id").as("rep"))
+      .filter(col("rep") =!= entry)
+      .select("rep")
+      .join(nodes, col("rep") === col("vec_id"))
+      .crossJoin(broadcast(entryVec))
+      .withColumn("cos", HashFunctions.cosineSim(col("e_emb"), col("embedding")))
+      .select(col("rep"), col("cos"), col("embedding"), col("e_emb"))
   }
+
+  /** Directed edges plus their reverses, best cos per pair, re-capped at
+    * 2·degree per node (keep best) to bound adjacency rows per node. */
+  private def symmetrized(directed: DataFrame, degree: Int): DataFrame =
+    topEdgesPerNode(
+      directed
+        .unionByName(directed.select(col("neighbor_id").as("node_id"),
+          col("node_id").as("neighbor_id"), col("cos")))
+        .groupBy("node_id", "neighbor_id").agg(max("cos").as("cos")),
+      2 * degree)
 
   /** APPEND a batch of new vectors — the HNSW insert path, batched: each
     * new vector beam-searches the EXISTING graph for its `degree` nearest
@@ -260,11 +248,7 @@ object GraphAnn {
     val batchVec = newVectors.select(col("vec_id"), col("embedding"))
     val batchTop = topEdgesPerNode(
       candidateEdges(batchVec, nBits = 4, nTables = 8), idx.degree)
-    val intra = topEdgesPerNode(
-      batchTop.unionByName(batchTop.select(col("neighbor_id").as("node_id"),
-          col("node_id").as("neighbor_id"), col("cos")))
-        .groupBy("node_id", "neighbor_id").agg(max("cos").as("cos")),
-      2 * idx.degree)
+    val intra = symmetrized(batchTop, idx.degree)
       .join(batchVec.select(col("vec_id").as("neighbor_id"),
         col("embedding").as("n_emb")), "neighbor_id")
       .select("node_id", "neighbor_id", "cos", "n_emb")
@@ -312,25 +296,11 @@ object GraphAnn {
     * them). */
   def compactIndex(spark: SparkSession, idx: Index, nBits: Int = 4): Index = {
     val adj = spark.table(idx.adjTable)
-    import org.apache.spark.sql.expressions.Window
     val nodesDedup = spark.table(idx.nodesTable)
       .groupBy("vec_id").agg(first("embedding").as("embedding"))
       .localCheckpoint() // bridge refresh + stage write + recount read it
-    // fresh bridges over the CURRENT corpus: entry ↔ min-vec_id
-    // representative of every seed-0 SRP bucket (the buildIndex shape)
-    val entryVec = nodesDedup.filter(col("vec_id") === idx.entry)
-      .select(col("embedding").as("e_emb"))
-    val reps = nodesDedup
-      .withColumn("bucket",
-        HashFunctions.srpBucketSeeded(col("embedding"), nBits, lit(0)))
-      .groupBy("bucket").agg(min("vec_id").as("rep"))
-      .filter(col("rep") =!= idx.entry)
-      .select("rep")
-    val bridgeCos = reps
-      .join(nodesDedup, col("rep") === col("vec_id"))
-      .crossJoin(broadcast(entryVec))
-      .withColumn("cos", HashFunctions.cosineSim(col("e_emb"), col("embedding")))
-      .select(col("rep"), col("cos"), col("embedding"), col("e_emb"))
+    // fresh bridges over the CURRENT corpus (the buildIndex shape)
+    val bridgeCos = bridgeCosines(nodesDedup, nBits, idx.entry)
     val freshBridges = bridgeCos
       .select(lit(idx.entry).as("node_id"), col("rep").as("neighbor_id"),
         col("cos"), col("embedding").as("n_emb"))
@@ -339,11 +309,8 @@ object GraphAnn {
           col("cos"), col("e_emb").as("n_emb")))
     // n_emb is identical across duplicate (node, neighbor) rows (a
     // vec_id's embedding never changes), so `first` is value-determinate
-    val capped = adj.groupBy("node_id", "neighbor_id")
-      .agg(max("cos").as("cos"), first("n_emb").as("n_emb"))
-      .withColumn("_rn", row_number().over(Window.partitionBy("node_id")
-        .orderBy(col("cos").desc, col("neighbor_id").asc)))
-      .filter(col("_rn") <= 2 * idx.degree).drop("_rn")
+    val capped = topEdgesPerNode(adj.groupBy("node_id", "neighbor_id")
+      .agg(max("cos").as("cos"), first("n_emb").as("n_emb")), 2 * idx.degree)
     // bridges exempt from the cap: union AFTER re-capping, dedup keeps
     // the max-cos row (values are equal where both sides have the pair)
     val compacted = capped.unionByName(freshBridges)

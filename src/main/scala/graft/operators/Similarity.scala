@@ -1,21 +1,32 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.Arms
 import graft.functions.HashFunctions
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (`array<float>` vectors).
   *
-  * Two paths, per SURVEY.md §2 rows 20–21:
-  *  - brute force: exact top-k for a BOUNDED query set — the query side is
-  *    broadcast, the corpus streams through one narrow projection + bounded
-  *    per-query window. Correctness baseline and small-query-set workhorse.
-  *  - LSH (signed random projection): bucket the corpus once, equi-join
-  *    queries to their bucket, rank only within the bucket. The 100 TB path:
-  *    candidate count per query is corpus/2^bits on average, never all-pairs.
+  * The top-k family (SURVEY.md §2 rows 20–21), every member for a BOUNDED
+  * query set (`vec_id < nQueries`):
+  *  - exact: [[bruteForceTopK]], [[int8TopK]] (int8 codes), [[twoStageTopK]]
+  *    and [[binaryTopK]] (coarse shortlist + exact rerank) — the query side
+  *    broadcasts, the corpus streams through one narrow projection.
+  *  - LSH ([[lshTopK]]): bucket the corpus once per SRP table, equi-join
+  *    queries to their buckets — candidates per query ≈ corpus/2^bits.
+  *  - quantized: [[ivfTopK]] (coarse cells), [[pqTopK]] (PQ codes + ADC),
+  *    [[ivfPqTopK]] (both), and the stored forms [[AnnIndex]] (IVF) and
+  *    [[GraphAnn]] (neighbor graph over SRP candidate edges).
+  *
+  * Each shared step has one definition here: [[queryPairs]] (broadcast
+  * query side), [[srpTables]] (multi-table SRP buckets), [[boundedVectors]]
+  * (the vec_id-bounded driver collect), [[fitUnitCentroids]] /
+  * [[fitCentroids]] (the quantizer fit), [[nearestCells]] (the cell
+  * probe), [[pqCodebooks]] / [[adcTable]] (PQ tables), and the ranking
+  * tails [[rankByCosine]] / [[rankByAdc]] / [[emptyResult]].
   */
 object Similarity {
 
@@ -23,13 +34,28 @@ object Similarity {
     * The query side is tiny and broadcast; cosine runs in one codegen'd
     * kernel ([[graft.functions.HashImpl.cosineF]]); ranking is a per-query
     * window (bounded partitions — safe at any corpus size). */
-  def bruteForceTopK(t: Tables, nQueries: Int = 10, k: Int = 5): DataFrame = {
-    val emb = t.embeddings
-    val q = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val scored = emb.select(col("vec_id").as("neighbor_id"), col("embedding"))
-      .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", HashFunctions.cosineSim(col("q_emb"), col("embedding")))
+  def bruteForceTopK(t: Tables, nQueries: Int = 10, k: Int = 5): DataFrame =
+    rankByCosine(queryPairs(t.embeddings, nQueries)
+      .withColumn("cosine", HashFunctions.cosineSim(col("q_emb"), col("embedding"))), k)
+
+  /** The bounded query side: `(query_id, q_emb)` for `vec_id < nQueries`,
+    * `q_emb` read from the `vec` column. */
+  private[operators] def queries(emb: DataFrame, nQueries: Int,
+                                 vec: String = "embedding"): DataFrame =
+    emb.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), col(vec).as("q_emb"))
+
+  /** Every (corpus vector, bounded query) pair but self-pairs: the corpus
+    * `(neighbor_id, <vec>)` streams once against the broadcast [[queries]]. */
+  private[operators] def queryPairs(emb: DataFrame, nQueries: Int,
+                                    vec: String = "embedding"): DataFrame =
+    emb.select(col("vec_id").as("neighbor_id"), col(vec))
+      .join(broadcast(queries(emb, nQueries, vec)), col("neighbor_id") =!= col("query_id"))
+
+  /** The cosine ranking tail: per query the top `k` by `cosine` desc with a
+    * `neighbor_id` tie-break, emitted `(query_id, neighbor_id, cosine)` with
+    * the cosine rounded to 6 dp and ordered for the dump. */
+  private[operators] def rankByCosine(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored
@@ -38,6 +64,27 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"))
       .orderBy("query_id", "neighbor_id")
   }
+
+  /** The ADC ranking tail over (query, candidate) rows carrying `codes` and
+    * the query's `lut`: self-pairs dropped, the ROUNDED ADC distance
+    * ascending with a `neighbor_id` tie-break, top `k` per query. */
+  private[operators] def rankByAdc(cand: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
+    cand.filter(col("neighbor_id") =!= col("query_id"))
+      .withColumn("adc_dist",
+        round(HashFunctions.adcDist(col("codes"), col("lut")), 6))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("adc_dist"))
+      .orderBy("query_id", "neighbor_id")
+  }
+
+  /** The empty-corpus result: no rows, `(query_id, neighbor_id, <score>)`. */
+  private[operators] def emptyResult(spark: SparkSession, score: String): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[Row](), StructType(Seq(
+      StructField("query_id", LongType), StructField("neighbor_id", LongType),
+      StructField(score, DoubleType))))
 
   /** Embedding-dimension truncation recall (the Matryoshka question —
     * Kusupati et al. 2022, public method): for each truncated dimension
@@ -59,11 +106,7 @@ object Similarity {
     * neighbor-id tie-break) is exactly [[bruteForceTopK]]'s. */
   def truncationRecall(t: Tables, dims: Seq[Int] = Seq(8, 16, 32),
                        nQueries: Int = 10, k: Int = 5): DataFrame = {
-    val emb = t.embeddings
-    val q = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val base = emb.select(col("vec_id").as("neighbor_id"), col("embedding"))
-      .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
+    val base = queryPairs(t.embeddings, nQueries)
       .withColumn("cos_full",
         HashFunctions.cosineSim(col("q_emb"), col("embedding")))
     val withCos = dims.foldLeft(base) { case (df, d) =>
@@ -78,12 +121,12 @@ object Similarity {
       .filter(col("rn") <= k)
       .select("query_id", "neighbor_id")
     val full = topk("cos_full").localCheckpoint() // one arm per dim reads it
-    val queries = q.select("query_id")
+    val qids = queries(t.embeddings, nQueries).select("query_id")
     val arms = dims.map { d =>
       val hits = full.join(topk(s"cos_$d"), Seq("query_id", "neighbor_id"),
           "left_semi")
         .groupBy("query_id").agg(count(lit(1)).as("n_common"))
-      queries.join(hits, Seq("query_id"), "left")
+      qids.join(hits, Seq("query_id"), "left")
         .select(lit(d).as("dim"), col("query_id"),
           coalesce(col("n_common"), lit(0L)).as("n_common"))
     }
@@ -105,15 +148,20 @@ object Similarity {
     * oracle replays both stages exactly. */
   def twoStageTopK(t: Tables, nQueries: Int = 10, k: Int = 5,
                    coarseDims: Int = 32, shortlist: Int = 100): DataFrame = {
-    val emb = t.embeddings
-    val q = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val coarse = emb.select(col("vec_id").as("neighbor_id"), col("embedding"))
-      .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
+    val coarse = queryPairs(t.embeddings, nQueries)
       .withColumn("_ccos", HashFunctions.cosineSim(
         slice(col("q_emb"), 1, coarseDims), slice(col("embedding"), 1, coarseDims)))
+    rerankShortlist(coarse, col("_ccos").desc, shortlist, k)
+  }
+
+  /** The funnel's two bounded per-query windows: keep the `shortlist`
+    * candidates first by `coarseOrder` (id tie-break), re-score them with
+    * the exact full-dimension cosine, and emit the top `k` — `keep`
+    * columns, then the cosine rounded to 6 dp, ordered for the dump. */
+  private def rerankShortlist(coarse: DataFrame, coarseOrder: Column, shortlist: Int,
+                              k: Int, keep: Seq[Column] = Nil): DataFrame = {
     val w1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("_ccos").desc, col("neighbor_id").asc)
+      .orderBy(coarseOrder, col("neighbor_id").asc)
     val listed = coarse.withColumn("_rn", row_number().over(w1))
       .filter(col("_rn") <= shortlist)
     val w2 = Window.partitionBy(col("query_id"))
@@ -122,8 +170,8 @@ object Similarity {
       .withColumn("_cos", HashFunctions.cosineSim(col("q_emb"), col("embedding")))
       .withColumn("_rk", row_number().over(w2))
       .filter(col("_rk") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("_cos"), 6).as("cosine"))
+      .select(Seq(col("query_id"), col("neighbor_id")) ++ keep :+
+        round(col("_cos"), 6).as("cosine"): _*)
       .orderBy("query_id", "neighbor_id")
   }
 
@@ -158,19 +206,7 @@ object Similarity {
       .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
       .withColumn("hamming",
         bit_count(col("code").bitwiseXOR(col("q_code"))).cast("long"))
-    val w1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming").asc, col("neighbor_id").asc)
-    val listed = coarse.withColumn("_rn", row_number().over(w1))
-      .filter(col("_rn") <= shortlist)
-    val w2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("_cos").desc, col("neighbor_id").asc)
-    listed
-      .withColumn("_cos", HashFunctions.cosineSim(col("q_emb"), col("embedding")))
-      .withColumn("_rk", row_number().over(w2))
-      .filter(col("_rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("hamming"),
-        round(col("_cos"), 6).as("cosine"))
-      .orderBy("query_id", "neighbor_id")
+    rerankShortlist(coarse, col("hamming").asc, shortlist, k, keep = Seq(col("hamming")))
   }
 
   /** MARGIN-BASED ALIGNMENT MINING (Artetxe & Schwenk 2019 — the
@@ -193,11 +229,9 @@ object Similarity {
     * probes; margin logic downstream is unchanged. */
   def marginMine(t: Tables, nQueries: Int = 10, k: Int = 4): DataFrame = {
     val emb = t.embeddings
-    val q = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val scored = emb.filter(col("vec_id") >= nQueries)
       .select(col("vec_id").as("cand_id"), col("embedding"))
-      .crossJoin(broadcast(q))
+      .crossJoin(broadcast(queries(emb, nQueries)))
       .withColumn("cos", HashFunctions.cosineSim(col("q_emb"), col("embedding")))
       .select("query_id", "cand_id", "cos")
       .localCheckpoint()
@@ -305,17 +339,10 @@ object Similarity {
     // cosine BEFORE the dedup (same reasoning as embeddingNearDups): the
     // distinct then shuffles ids + one double per candidate instead of two
     // embedding arrays as group-by keys
-    val cand = lshCandidates(t, nQueries, nBits, nTables, probeHamming)
+    rankByCosine(lshCandidates(t, nQueries, nBits, nTables, probeHamming)
       .withColumn("cosine", HashFunctions.cosineSim(col("q_emb"), col("embedding")))
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
-      .distinct() // a pair colliding in several tables ranks once
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    cand
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"))
-      .orderBy("query_id", "neighbor_id")
+      .distinct(), k) // a pair colliding in several tables ranks once
   }
 
   /** The (table, bucket) candidate equi-join shared by [[lshTopK]] and the
@@ -324,11 +351,7 @@ object Similarity {
     * actually joins. Multiprobe expands the bounded query side only. */
   private[graft] def lshCandidates(t: Tables, nQueries: Int, nBits: Int,
                                    nTables: Int, probeHamming: Int): DataFrame = {
-    val tableIds = array((0 until nTables).map(lit): _*)
-    val emb = t.embeddings
-      .select(col("vec_id"), col("embedding"), explode(tableIds).as("tbl"))
-      .withColumn("bucket",
-        HashFunctions.srpBucketSeeded(col("embedding"), nBits, col("tbl")))
+    val emb = srpTables(t.embeddings, nBits, nTables)
     val masks = hammingMasks(nBits, probeHamming)
     val q = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
@@ -341,6 +364,15 @@ object Similarity {
       .filter(col("neighbor_id") =!= col("query_id"))
       .select("query_id", "neighbor_id", "q_emb", "embedding")
   }
+
+  /** `nTables` independent SRP bucketings of `df`'s `(vec_id, embedding)`:
+    * one row per (vector, table) with its `tbl` and seeded `bucket`. A pair
+    * is a candidate when it shares (tbl, bucket) in ANY table. */
+  private[operators] def srpTables(df: DataFrame, nBits: Int, nTables: Int): DataFrame =
+    df.select(col("vec_id"), col("embedding"),
+        explode(array((0 until nTables).map(lit): _*)).as("tbl"))
+      .withColumn("bucket",
+        HashFunctions.srpBucketSeeded(col("embedding"), nBits, col("tbl")))
 
   /** Fixed-iteration Lloyd's over an in-memory sample — the quantizer
     * fit. Driver-local ON PURPOSE: the training input is a BOUNDED sample
@@ -385,6 +417,89 @@ object Similarity {
     cents
   }
 
+  /** The IVF coarse quantizer: [[fitCentroids]] over the [[unitOf]] vectors
+    * of a vec_id-sorted sample, so euclidean cells respect cosine geometry. */
+  private[operators] def fitUnitCentroids(sample: Array[(Long, Seq[Float])], nList: Int,
+                                          iters: Int): Array[Array[Double]] =
+    fitCentroids(sample.map(v => unitOf(v._2).toArray), nList, iters)
+
+  /** The driver collect every quantized-ANN fit reads: `(vec_id, embedding)`
+    * for `vec_id < bound`, sorted by vec_id. ONE collect covers both the
+    * quantizer sample and the query vectors (callers pass the max of the
+    * two bounds) — each extra collect costs a full job of scheduling. A
+    * deterministic id predicate, NOT a random sample: it pushes to the
+    * scan, skips a sizing count() job, and — vec_ids being
+    * content-uncorrelated in this corpus — is as unbiased as an RNG sample
+    * while being exactly replayable by the SQL oracle (a seeded .sample()
+    * depends on Spark's partition-level RNG). The driver-side sort keeps
+    * [[fitCentroids]]' first-k init well-defined without a cluster sort. */
+  private[operators] def boundedVectors(df: DataFrame, bound: Long): Array[(Long, Seq[Float])] =
+    sortedVectors(df.filter(col("vec_id") < bound))
+
+  /** `(vec_id, embedding)` of a bounded frame, collected and vec_id-sorted. */
+  private[operators] def sortedVectors(df: DataFrame): Array[(Long, Seq[Float])] =
+    df.select(col("vec_id"), col("embedding")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1)))
+      .sortBy(_._1)
+
+  /** The cell probe: the `nProbe` centroids nearest to `v`'s unit vector
+    * (squared euclidean, ties to the lower cell), computed on the driver —
+    * the query set is bounded by contract, so a distributed probe would
+    * spend several stages shuffling ~nQueries·nList rows. */
+  private[operators] def nearestCells(cents: Array[Array[Double]], v: Seq[Float],
+                                      nProbe: Int): Array[Int] = {
+    val u = unitOf(v).toArray
+    cents.zipWithIndex.map { case (c, i) =>
+      var dist = 0.0
+      var j = 0
+      while (j < c.length) { val df = u(j) - c(j); dist += df * df; j += 1 }
+      (dist, i)
+    }.sortBy { case (dist, i) => (dist, i) }.take(nProbe).map(_._2)
+  }
+
+  /** PQ codebooks: one [[fitCentroids]] per `d/m`-wide subspace of the RAW
+    * (not unit) sample vectors, `ksub` centroids each. */
+  private[operators] def pqCodebooks(sample: Array[(Long, Seq[Float])], d: Int, m: Int,
+                                     ksub: Int, iters: Int): Seq[Seq[Seq[Double]]] = {
+    require(d % m == 0, s"embedding dim $d not divisible by m=$m")
+    val dsub = d / m
+    val raw = sample.map(_._2.toArray.map(_.toDouble))
+    (0 until m).map { s =>
+      fitCentroids(
+        raw.map(v => java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub)),
+        ksub, iters).map(_.toSeq).toSeq
+    }
+  }
+
+  /** One query's flat ADC lookup table: `lut(s·ksub + c)` is the squared
+    * distance of the query's subvector `s` to codeword `c`, accumulated in
+    * the [[graft.functions.HashImpl.pqCodes]] kernel's j-order so driver
+    * and executors agree bit-for-bit. */
+  private[operators] def adcTable(qEmb: Seq[Float], books: Seq[Seq[Seq[Double]]],
+                                  ksub: Int): Seq[Double] = {
+    val q = qEmb.toArray.map(_.toDouble)
+    val m = books.length
+    val dsub = q.length / m
+    val lut = new Array[Double](m * ksub)
+    var s = 0
+    while (s < m) {
+      var c = 0
+      while (c < ksub) {
+        var dist = 0.0
+        var j = 0
+        while (j < dsub) {
+          val df = q(s * dsub + j) - books(s)(c)(j)
+          dist += df * df
+          j += 1
+        }
+        lut(s * ksub + c) = dist
+        c += 1
+      }
+      s += 1
+    }
+    lut.toSeq
+  }
+
   /** IVF (inverted-file) ANN: a KMeans coarse quantizer partitions the
     * corpus into `nList` cells; each query probes its `nProbe` nearest cells
     * and ranks only those candidates by exact cosine.
@@ -400,80 +515,31 @@ object Similarity {
     * centroids, since assignment and probing share them). */
   def ivfTopK(t: Tables, nQueries: Int = 10, k: Int = 5,
               nList: Int = 16, nProbe: Int = 4, lloydIters: Int = 2): DataFrame = {
-    // ONE driver materialization covers both the quantizer sample AND the
-    // query vectors (nQueries ≤ sampleTarget in any sane call; the bound
-    // takes the max regardless) — the toy-scale profile showed each extra
-    // collect costing a full job of scheduling overhead. Deterministic id
-    // predicate, NOT a random sample: the filter pushes to the scan, skips
-    // the sizing count() job, and — because vec_ids are content-
-    // uncorrelated in this corpus — is as unbiased as an RNG sample while
-    // being exactly replayable by the SQL oracle (a seeded .sample()
-    // depends on Spark's partition-level RNG, which no other engine can
-    // reproduce). Driver-side sort by vec_id keeps the first-`nList` init
-    // in fitCentroids well-defined without a cluster sort; unit-norms are
-    // computed on the driver with the same cast/accumulation order as the
-    // engine kernel, so the fit is bit-identical to the previous
-    // cluster-side normalize lineage.
+    val emb = t.embeddings
     val sampleTarget = 1000L * nList
-    val collected = t.embeddings
-      .filter(col("vec_id") < math.max(sampleTarget, nQueries.toLong))
-      .select(col("vec_id"), col("embedding"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1)))
-      .sortBy(_._1)
-    val sample = collected.filter(_._1 < sampleTarget).map(c => unitOf(c._2).toArray)
-    if (sample.isEmpty)
-      // empty corpus → empty result with the right shape, not a crash
-      return t.embeddings.sparkSession.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("query_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("neighbor_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("cosine",
-            org.apache.spark.sql.types.DoubleType))))
-    val cents = fitCentroids(sample, nList, iters = lloydIters)
-
+    val collected = boundedVectors(emb, math.max(sampleTarget, nQueries.toLong))
+    val sample = collected.filter(_._1 < sampleTarget)
+    // empty corpus → empty result with the right shape, not a crash
+    if (sample.isEmpty) return emptyResult(emb.sparkSession, "cosine")
+    val cents = fitUnitCentroids(sample, nList, lloydIters)
     // assignment is ONE fused codegen'd kernel over the raw float column
     // (norm + divide + cell scan per row) — no materialized double unit
     // array, no higher-order-function lambdas in the corpus-wide stage
-    val assigned = t.embeddings
+    val assigned = emb
       .select(col("vec_id"), col("embedding"),
         HashFunctions.nearestCellUnit(col("embedding"), cents.map(_.toSeq).toSeq)
           .as("cell"))
-
-    // probe: nProbe nearest cells per query vector (euclidean on unit
-    // sphere), computed on the DRIVER — the query set is bounded by this
-    // API's contract (same reasoning as bruteForceTopK's broadcast side)
-    // and the query vectors are already local from the shared collect, so
-    // a distributed probe would spend several AQE stages shuffling
-    // ~nQueries·nList rows.
-    val spark = t.embeddings.sparkSession
     val probedRows = collected.filter(_._1 < nQueries).flatMap { case (qid, qEmb) =>
-      val qUnit = unitOf(qEmb).toArray
-      val d2 = cents.zipWithIndex.map { case (c, i) =>
-        var dist = 0.0; var j = 0
-        while (j < c.length) { val df = qUnit(j) - c(j); dist += df * df; j += 1 }
-        (dist, i)
-      }
-      d2.sortBy { case (dist, i) => (dist, i) }.take(nProbe)
-        .map { case (_, cell) => (qid, qEmb, cell) }
+      nearestCells(cents, qEmb, nProbe).map(cell => (qid, qEmb, cell))
     }
-    val probed = spark.createDataFrame(probedRows.toSeq)
+    val probed = emb.sparkSession.createDataFrame(probedRows.toSeq)
       .toDF("query_id", "q_emb", "cell")
-
     // candidates: only vectors in probed cells; exact cosine; top-k
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    assigned.select(col("vec_id").as("neighbor_id"), col("embedding"), col("cell"))
-      .join(broadcast(probed), "cell")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", HashFunctions.cosineSim(col("q_emb"), col("embedding")))
-      .withColumn("rn", row_number().over(wRank))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"))
-      .orderBy("query_id", "neighbor_id")
+    rankByCosine(
+      assigned.select(col("vec_id").as("neighbor_id"), col("embedding"), col("cell"))
+        .join(broadcast(probed), "cell")
+        .filter(col("neighbor_id") =!= col("query_id"))
+        .withColumn("cosine", HashFunctions.cosineSim(col("q_emb"), col("embedding"))), k)
   }
 
   /** Product-quantization ANN (PQ + ADC, Jégou et al. 2011 — public
@@ -492,78 +558,27 @@ object Similarity {
     * exact j-accumulation order and broadcast; ranking uses the ROUNDED
     * ADC distance with an id tie-break (the q_tfidf_search convention) so
     * a last-ulp sum divergence cannot flip the hash. The oracle replays
-    * train/encode/LUT/rank as one CTE chain ([[KernelOracleSql.pqTopK]]).
+    * train/encode/LUT/rank as one CTE chain ([[graft.KernelOracleSql.annPq]]).
     * In a production deployment this composes with [[ivfTopK]]'s coarse
     * quantizer (probe cells first, ADC inside the cell); kept orthogonal
     * here so each stage is independently oracle-verified. */
   def pqTopK(t: Tables, nQueries: Int = 10, k: Int = 5,
              m: Int = 8, ksub: Int = 16, lloydIters: Int = 2): DataFrame = {
+    val emb = t.embeddings
     val sampleTarget = 1000L * ksub
-    val collected = t.embeddings
-      .filter(col("vec_id") < math.max(sampleTarget, nQueries.toLong))
-      .select(col("vec_id"), col("embedding"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1)))
-      .sortBy(_._1)
-    val spark = t.embeddings.sparkSession
-    if (collected.isEmpty)
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("query_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("neighbor_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("adc_dist",
-            org.apache.spark.sql.types.DoubleType))))
-    val d = collected.head._2.length
-    require(d % m == 0, s"embedding dim $d not divisible by m=$m")
-    val dsub = d / m
-    val sample = collected.filter(_._1 < sampleTarget)
-      .map(_._2.toArray.map(_.toDouble))
-    val books: Seq[Seq[Seq[Double]]] = (0 until m).map { s =>
-      fitCentroids(
-        sample.map(v => java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub)),
-        ksub, iters = lloydIters)
-        .map(_.toSeq).toSeq
-    }
-    // per-query flat LUTs on the driver (query set bounded by contract —
-    // the same reasoning as ivfTopK's driver-side probe), built with the
-    // kernel's j-order so driver and executors agree bit-for-bit
+    val collected = boundedVectors(emb, math.max(sampleTarget, nQueries.toLong))
+    if (collected.isEmpty) return emptyResult(emb.sparkSession, "adc_dist")
+    val books = pqCodebooks(collected.filter(_._1 < sampleTarget),
+      collected.head._2.length, m, ksub, lloydIters)
+    // per-query LUTs on the driver (query set bounded by contract — the
+    // same reasoning as ivfTopK's driver-side probe)
     val luts = collected.filter(_._1 < nQueries).map { case (qid, qEmb) =>
-      val q = qEmb.toArray.map(_.toDouble)
-      val lut = new Array[Double](m * ksub)
-      var s = 0
-      while (s < m) {
-        var c = 0
-        while (c < ksub) {
-          var dist = 0.0
-          var j = 0
-          while (j < dsub) {
-            val df = q(s * dsub + j) - books(s)(c)(j)
-            dist += df * df
-            j += 1
-          }
-          lut(s * ksub + c) = dist
-          c += 1
-        }
-        s += 1
-      }
-      (qid, lut.toSeq)
+      (qid, adcTable(qEmb, books, ksub))
     }
-    val qdf = spark.createDataFrame(luts.toIndexedSeq).toDF("query_id", "lut")
-    val codes = t.embeddings.select(col("vec_id").as("neighbor_id"),
+    val qdf = emb.sparkSession.createDataFrame(luts.toIndexedSeq).toDF("query_id", "lut")
+    val codes = emb.select(col("vec_id").as("neighbor_id"),
       HashFunctions.pqCodes(col("embedding"), books).as("codes"))
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    codes.crossJoin(broadcast(qdf))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc_dist",
-        round(HashFunctions.adcDist(col("codes"), col("lut")), 6))
-      .withColumn("rn", row_number().over(wRank))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("adc_dist"))
-      .orderBy("query_id", "neighbor_id")
+    rankByAdc(codes.crossJoin(broadcast(qdf)), k)
   }
 
   /** IVF+PQ composed ANN (the FAISS `IVFPQ` architecture, Jégou et al.
@@ -582,75 +597,28 @@ object Similarity {
   def ivfPqTopK(t: Tables, nQueries: Int = 10, k: Int = 5,
                 nList: Int = 16, nProbe: Int = 4,
                 m: Int = 8, ksub: Int = 16, lloydIters: Int = 2): DataFrame = {
+    val emb = t.embeddings
     val sampleTarget = 1000L * math.max(nList, ksub)
-    val collected = t.embeddings
-      .filter(col("vec_id") < math.max(sampleTarget, nQueries.toLong))
-      .select(col("vec_id"), col("embedding"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1)))
-      .sortBy(_._1)
-    val spark = t.embeddings.sparkSession
+    val collected = boundedVectors(emb, math.max(sampleTarget, nQueries.toLong))
     require(collected.nonEmpty, "ivfPqTopK: empty corpus")
-    val d = collected.head._2.length
-    require(d % m == 0, s"embedding dim $d not divisible by m=$m")
-    val dsub = d / m
     val sample = collected.filter(_._1 < sampleTarget)
-    // coarse quantizer on UNIT vectors (the ivfTopK contract)...
-    val cents = fitCentroids(
-      sample.map(c => unitOf(c._2).toArray), nList, iters = lloydIters)
-    // ...PQ codebooks on RAW subvectors (the pqTopK contract)
-    val raw = sample.map(_._2.toArray.map(_.toDouble))
-    val books: Seq[Seq[Seq[Double]]] = (0 until m).map { s =>
-      fitCentroids(
-        raw.map(v => java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub)),
-        ksub, iters = lloydIters).map(_.toSeq).toSeq
-    }
-    val assigned = t.embeddings.select(
+    // PQ codebooks on RAW subvectors (the pqTopK contract), coarse
+    // quantizer on UNIT vectors (the ivfTopK contract)
+    val books = pqCodebooks(sample, collected.head._2.length, m, ksub, lloydIters)
+    val cents = fitUnitCentroids(sample, nList, lloydIters)
+    val assigned = emb.select(
       col("vec_id").as("neighbor_id"),
       HashFunctions.nearestCellUnit(col("embedding"), cents.map(_.toSeq).toSeq)
         .as("cell"),
       HashFunctions.pqCodes(col("embedding"), books).as("codes"))
     // driver-side probe + LUT per bounded query (shared collect)
     val probedRows = collected.filter(_._1 < nQueries).flatMap { case (qid, qEmb) =>
-      val qUnit = unitOf(qEmb).toArray
-      val cells = cents.zipWithIndex.map { case (c, i) =>
-        var dist = 0.0
-        var j = 0
-        while (j < c.length) { val df = qUnit(j) - c(j); dist += df * df; j += 1 }
-        (dist, i)
-      }.sortBy { case (dist, i) => (dist, i) }.take(nProbe).map(_._2)
-      val q = qEmb.toArray.map(_.toDouble)
-      val lut = new Array[Double](m * ksub)
-      var s = 0
-      while (s < m) {
-        var c = 0
-        while (c < ksub) {
-          var dist = 0.0
-          var j = 0
-          while (j < dsub) {
-            val df = q(s * dsub + j) - books(s)(c)(j)
-            dist += df * df
-            j += 1
-          }
-          lut(s * ksub + c) = dist
-          c += 1
-        }
-        s += 1
-      }
-      cells.map(cell => (qid, cell, lut.toSeq))
+      val lut = adcTable(qEmb, books, ksub)
+      nearestCells(cents, qEmb, nProbe).map(cell => (qid, cell, lut))
     }
-    val probed = spark.createDataFrame(probedRows.toIndexedSeq)
+    val probed = emb.sparkSession.createDataFrame(probedRows.toIndexedSeq)
       .toDF("query_id", "cell", "lut")
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    assigned.join(broadcast(probed), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc_dist",
-        round(HashFunctions.adcDist(col("codes"), col("lut")), 6))
-      .withColumn("rn", row_number().over(wRank))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("adc_dist"))
-      .orderBy("query_id", "neighbor_id")
+    rankByAdc(assigned.join(broadcast(probed), Seq("cell")), k)
   }
 
   /** The staged int8-code projection shared by [[quantizeEmbeddings]],
@@ -722,17 +690,8 @@ object Similarity {
   def int8TopK(t: Tables, nQueries: Int = 10, k: Int = 5): DataFrame = {
     val codes = withInt8Codes(t.embeddings)
       .select(col("vec_id"), transform(col("q"), x => x.cast("float")).as("qf"))
-    val qry = codes.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("qf").as("q_emb"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    codes.select(col("vec_id").as("neighbor_id"), col("qf"))
-      .join(broadcast(qry), col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", HashFunctions.cosineSim(col("q_emb"), col("qf")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"))
-      .orderBy("query_id", "neighbor_id")
+    rankByCosine(queryPairs(codes, nQueries, vec = "qf")
+      .withColumn("cosine", HashFunctions.cosineSim(col("q_emb"), col("qf"))), k)
   }
 
   /** Transitive embedding near-duplicate groups — the embedding twin of
@@ -768,12 +727,7 @@ object Similarity {
     * global sort, mirroring [[Dedup.minhashCandidatesCore]]. */
   def embeddingNearDupsCore(t: Tables, minCosine: Double = 0.35,
                             nBits: Int = 4, nTables: Int = 8): DataFrame = {
-    val tableIds = array((0 until nTables).map(lit): _*)
-    val emb = t.embeddings
-      .select(col("vec_id"), col("embedding"), explode(tableIds).as("tbl"))
-      .withColumn("bucket",
-        HashFunctions.srpBucketSeeded(col("embedding"), nBits, col("tbl")))
-      .select(col("vec_id"), col("embedding"), col("tbl"), col("bucket"))
+    val emb = srpTables(t.embeddings, nBits, nTables)
     // A sub-broadcast-threshold embeddings table scans as ONE split, so the
     // whole collision probe — ~n²/2^nBits per table exact-cosine
     // verifications, the quadratic core of this operator — runs serially in
@@ -943,10 +897,7 @@ object Similarity {
   def mmrTopK(t: Tables, nQueries: Int = 10, k: Int = 5, m: Int = 20,
               lam: Double = 0.7, lamPen: Double = 0.3): DataFrame = {
     val emb = t.embeddings
-    val q = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val scored = emb.select(col("vec_id").as("neighbor_id"), col("embedding"))
-      .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
+    val scored = queryPairs(emb, nQueries)
       .withColumn("rel", HashFunctions.cosineSim(col("q_emb"), col("embedding")))
     val wRel = Window.partitionBy(col("query_id"))
       .orderBy(col("rel").desc, col("neighbor_id").asc)

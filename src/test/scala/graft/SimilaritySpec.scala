@@ -527,6 +527,18 @@ class SimilaritySpec extends SparkSpec {
     assert(got.map(_.getLong(1)).toSet == Set(0L, 1L, 2L))
   }
 
+  test("quantized top-k on an empty corpus: ivf and pq return typed empty frames, ivfpq refuses") {
+    val t0 = tables.withTable("embeddings", tables.embeddings.limit(0))
+    val ivf = Similarity.ivfTopK(t0)
+    assert(ivf.columns.toSeq == Seq("query_id", "neighbor_id", "cosine"))
+    assert(ivf.collect().isEmpty)
+    val pq = Similarity.pqTopK(t0)
+    assert(pq.columns.toSeq == Seq("query_id", "neighbor_id", "adc_dist"))
+    assert(pq.collect().isEmpty)
+    val e = intercept[IllegalArgumentException](Similarity.ivfPqTopK(t0))
+    assert(e.getMessage.contains("empty corpus"))
+  }
+
   test("truncationRecall: full-dim arm is recall 1.0 shape; naive sliced recompute agrees") {
     val vecs = tables.embeddings.collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap

@@ -1,17 +1,22 @@
 #!/usr/bin/env python3
 """Local driver-mimic: compare Verify parquet dumps against DuckDB oracle SQL.
 
-Usage: python3 tools/check_correctness.py [sf_dir] [verify_out]
+Usage: python3 tools/check_correctness.py [sf_dir] [verify_out] [q_a,q_b,...]
 
 Mirrors the driver's t2 gate: for each query with oracle SQL, run the SQL in
 DuckDB over the same parquet tables, sort columns by name, compare row count,
 schema (column names), and a hash of the values (rows sorted for stability).
 Each query's line carries its elapsed seconds (reading the Verify dump, the
 DuckDB SQL and the compare); the summary line carries the total.
+
+The optional third argument, a comma-separated key list (the same form
+`graft.Verify` takes as its third argument), checks and counts only those
+keys; a listed key with neither oracle SQL nor a dump fails the run.
 """
 import glob
 import json
 import math
+import os
 import sys
 import time
 
@@ -82,8 +87,14 @@ def check(con, name, sql, out_dir):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/target/verify_out"
+    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracle = json.load(f)
+    unknown = []
+    if only is not None:
+        oracle = {k: v for k, v in oracle.items() if k in only}
+        unknown = sorted(k for k in only
+                         if k not in oracle and not os.path.isdir(f"{out_dir}/{k}"))
     con = duckdb.connect()
     for t in ("region nation customer supplier part orders lineitem events "
               "documents embeddings").split():
@@ -102,14 +113,15 @@ def main():
         print(f"{flag} {name}  {elapsed[name]:.2f}s{extra}")
     print(f"\n{npass}/{len(results)} oracle queries PASS in {sum(elapsed.values()):.1f}s")
     # rows-only queries: report row counts
-    import os
     for name in sorted(os.listdir(out_dir)):
         p = f"{out_dir}/{name}"
-        if os.path.isdir(p) and name not in oracle:
+        if os.path.isdir(p) and name not in oracle and (only is None or name in only):
             files = glob.glob(f"{p}/*.parquet")
             n = sum(len(pd.read_parquet(f)) for f in files) if files else -1
             print(f"  rows-only {name}: {n} rows")
-    sys.exit(0 if npass == len(results) else 1)
+    for name in unknown:
+        print(f"✗ {name}: no oracle SQL and no dump under {out_dir}")
+    sys.exit(0 if npass == len(results) and not unknown else 1)
 
 
 if __name__ == "__main__":
