@@ -18,10 +18,9 @@ import graft.sources.{Bucketing, Tables}
   * [[IndexFiles.SegmentLog]] `cdc_segments.list` (bucket count in
   * `cdc_store.buckets`), which gives the exactly-once and crash
   * contracts. [[currentState]] resolves per key by LAST-WRITER-WINS over
-  * the segment order (one key-partitioned window over the unioned
-  * segment scans; deletes drop out), and [[compactStore]] folds the
-  * resolved state into ONE base segment — the maintenance pass that
-  * bounds read cost.
+  * the segment order (bucket i of every live segment merged in one task;
+  * deletes drop out), and [[compactStore]] folds the resolved state into
+  * ONE base segment — the maintenance pass that bounds read cost.
   *
   * Schema-generic: the payload columns are whatever the first batch
   * carries (parquet records them; attach re-derives the DDL from the
@@ -34,13 +33,23 @@ import graft.sources.{Bucketing, Tables}
   * change.
   *
   * 100 TB shape: ingest cost is the batch itself (bucketed write, no
-  * read-modify-write of the base — the LSM trade); resolution shuffles
-  * the live segments once on the key (the window's clustering);
-  * compaction restores O(base) reads. */
+  * read-modify-write of the base — the LSM trade); resolution reads the
+  * live segments as one bucketed relation and merges each bucket across
+  * them in one task, with no shuffle, so a read is `buckets` tasks however
+  * many segments are live; compaction restores O(base) reads. The read's
+  * width is the store's bucket count, which the first
+  * [[appendChanges]]'s `buckets` sets for good, as for any Spark bucketed
+  * table: a store expected to outgrow `buckets` tasks' worth of state
+  * needs more buckets from its first batch. */
 object CdcStore {
 
-  final case class Store(prefix: String, dir: String, ids: Seq[Int]) {
+  /** A store's live segments in apply order, and its bucket count. Each
+    * segment is the bucketed table [[tableOf]] in the directory of that
+    * name under `dir`. */
+  final case class Store(prefix: String, dir: String, ids: Seq[Int],
+                         buckets: Int) {
     def tableOf(id: Int): String = s"${prefix}_cdc$id"
+    def pathOf(id: Int): String = new HPath(dir, tableOf(id)).toString
   }
 
   private def segLog(dir: String) = IndexFiles.SegmentLog(
@@ -68,10 +77,10 @@ object CdcStore {
       // in the store, so the streaming loop and every caller is covered
       Bucketing.saveBucketed(
         IndexFiles.boundBucketedWrite(batch, "k", st.buckets, statBytes),
-        table, Seq("k"), st.buckets, Some(new HPath(dir, table).toString),
+        table, Seq("k"), st.buckets, Some(prev.pathOf(st.nextId)),
         SaveMode.Overwrite)
       segLog(dir).commit(spark, st, batchTag)
-      Store(prefix, dir, prev.ids :+ st.nextId)
+      prev.copy(ids = prev.ids :+ st.nextId)
     } finally batch.unpersist(blocking = false)
   }
 
@@ -84,10 +93,10 @@ object CdcStore {
 
   private def register(spark: SparkSession, prefix: String, dir: String,
                        st: IndexFiles.LogState): Store = {
-    val store = Store(prefix, dir, st.ids)
-    st.ids.map(store.tableOf).foreach { table =>
-      val loc = new HPath(dir, table).toString
-      Bucketing.registerBucketed(spark, table,
+    val store = Store(prefix, dir, st.ids, st.buckets)
+    st.ids.foreach { id =>
+      val loc = store.pathOf(id)
+      Bucketing.registerBucketed(spark, store.tableOf(id),
         Tables.scan(spark, loc).schema.toDDL, Seq("k"), st.buckets, loc)
     }
     store
@@ -95,15 +104,24 @@ object CdcStore {
 
   /** The resolved current state: per key, the LAST segment's row wins
     * (segment order = apply order); rows whose last op is `delete` drop
-    * out. One key-partitioned window over the unioned segment scans —
-    * partitions bounded by a key's change count across live segments. */
+    * out. The live segments are read as ONE bucketed relation
+    * ([[Bucketing.readBucketed]]), so task i merges bucket i of every
+    * segment, and the scan's `HashPartitioning(k, buckets)` already
+    * clusters the last-writer-wins window: one job of `buckets` tasks and
+    * no exchange, however many segments are live. */
   def currentState(spark: SparkSession, store: Store): DataFrame = {
     require(store.ids.nonEmpty, "currentState: empty store")
-    val all = store.ids.map(id =>
-        spark.table(store.tableOf(id)).withColumn("_seg", lit(id)))
-      .reduce(_.unionByName(_))
+    val segments = Bucketing.readBucketed(spark, store.ids.map(store.pathOf),
+      spark.table(store.tableOf(store.ids.head)).schema, Seq("k"),
+      store.buckets)
+    // a row's segment id: its file's directory is tableOf(id), and the
+    // digits after that name's LAST `_cdc` are the id (the prefix may
+    // itself contain `_cdc`)
+    val seg = regexp_extract(col("_metadata.file_path"),
+      "_cdc(\\d+)/[^/]*$", 1).cast("int")
     val w = Window.partitionBy("k").orderBy(col("_seg").desc)
-    all.withColumn("_rn", row_number().over(w))
+    segments.withColumn("_seg", seg)
+      .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1 && col("op") =!= "delete")
       .drop("_rn", "_seg")
   }
@@ -118,17 +136,16 @@ object CdcStore {
     require(store.ids.nonEmpty, "compactStore: empty store")
     val b = segLog(store.dir).buckets(spark, buckets)
     val id = store.ids.last + 1
-    val table = store.tableOf(id)
     // the compacted base's file count derives from the live segments'
     // TRUE on-disk bytes (the resolved state is never larger)
     val liveBytes = store.ids.map(i =>
-      IndexFiles.dirBytes(spark, new HPath(store.dir, store.tableOf(i)))).sum
+      IndexFiles.dirBytes(spark, new HPath(store.pathOf(i)))).sum
     Bucketing.saveBucketed(
       IndexFiles.boundBucketedWrite(currentState(spark, store), "k", b,
         BigInt(liveBytes)),
-      table, Seq("k"), b, Some(new HPath(store.dir, table).toString),
+      store.tableOf(id), Seq("k"), b, Some(store.pathOf(id)),
       SaveMode.Overwrite)
     segLog(store.dir).commitCompaction(spark, store.ids, id, maxTags)
-    Store(store.prefix, store.dir, Seq(id))
+    store.copy(ids = Seq(id), buckets = b)
   }
 }

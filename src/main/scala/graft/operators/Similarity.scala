@@ -329,8 +329,8 @@ object Similarity {
     * lands one projection bit away stops being a miss, which is most
     * misses: per-bit disagreement is θ/π, so single-bit misses dominate.
     * Expected candidate fraction ≤ nTables·nProbeBuckets/2^nBits. Measured
-    * at sf0.1 via [[graft.RecallEval]] (random vectors — LSH's worst
-    * case), recall@10 at MEASURED candidate fraction: 8×4-bit exact-probe
+    * at sf0.1 via `graft.RecallEval` (a test-set main; random vectors —
+    * LSH's worst case), recall@10 at MEASURED candidate fraction: 8×4-bit exact-probe
     * = 0.69 @ 0.41, while the default 8×12-bit h=3 = 0.89 @ 0.46 — more
     * recall per candidate than exact probing reaches at any table count
     * (see PLANS.md for the full frontier). */
@@ -346,7 +346,7 @@ object Similarity {
   }
 
   /** The (table, bucket) candidate equi-join shared by [[lshTopK]] and the
-    * [[graft.RecallEval]] measurement harness — one definition, so the
+    * `graft.RecallEval` measurement main — one definition, so the
     * measured candidate fraction can never drift from what the operator
     * actually joins. Multiprobe expands the bounded query side only. */
   private[graft] def lshCandidates(t: Tables, nQueries: Int, nBits: Int,

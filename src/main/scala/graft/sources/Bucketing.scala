@@ -1,6 +1,11 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.classic.{SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.execution.datasources.{DataSource, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.types.StructType
 
 /** Bucketed-table layout: pre-shuffle a table ONCE into hash buckets on its
   * join key so every subsequent join/aggregation on that key runs with zero
@@ -10,7 +15,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * Bucket metadata lives in the session catalog (`saveAsTable`); both sides
   * of a join must agree on key and bucket count for the exchange-free plan.
   * [[saveBucketed]] and [[registerBucketed]] are the one write and the one
-  * re-registration every persisted store goes through.
+  * re-registration every persisted store goes through; [[readBucketed]]
+  * reads several such tables as one.
   */
 object Bucketing {
 
@@ -52,6 +58,24 @@ object Bucketing {
            |CLUSTERED BY ($k) SORTED BY ($k) INTO $buckets BUCKETS
            |LOCATION '$location'""".stripMargin)
     }
+
+  /** Several bucketed parquet directories of one layout (the same
+    * columns, each written by [[saveBucketed]] with `buckets` buckets on
+    * `keys`) read as ONE bucketed relation: Spark's bucketed scan puts
+    * bucket i of every directory into task i and reports
+    * `HashPartitioning(keys, buckets)`, so an aggregate or window clustered
+    * on the keys above it needs no exchange, however many directories
+    * there are. A row's directory is in `_metadata.file_path`. The schema
+    * is the caller's, so no footer is read to infer it. */
+  private[graft] def readBucketed(spark: SparkSession, paths: Seq[String],
+                                  schema: StructType, keys: Seq[String],
+                                  buckets: Int): DataFrame = {
+    val relation = DataSource(spark.asInstanceOf[ClassicSparkSession],
+      "parquet", paths = paths, userSpecifiedSchema = Some(schema),
+      bucketSpec = Some(BucketSpec(buckets, keys, keys))).resolveRelation()
+      .asInstanceOf[HadoopFsRelation]
+    DatasetBridge.ofRows(spark, LogicalRelation(relation))
+  }
 
   /** Run `f` with bucketed scans forced on. The planner's
     * `DisableUnnecessaryBucketedScan` rule turns a bucketed read off when

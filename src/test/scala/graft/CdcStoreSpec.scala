@@ -2,11 +2,16 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.{CdcStore, Relational}
 import graft.streaming.CorpusStreams
 
-class CdcStoreSpec extends SparkSpec {
+class CdcStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   /** The seed snapshot (op = keep) plus the SAME change derivation as the
@@ -36,6 +41,77 @@ class CdcStoreSpec extends SparkSpec {
         col("op").as("merge_op"))
       .orderBy("custkey")
       .collect().map(_.toSeq).toSeq
+
+  /** The state as a union of the segments' catalog tables, each tagged
+    * with its id, under the same last-writer-wins window: the read
+    * [[CdcStore.currentState]] replaced, kept here as its reference. */
+  private def unionState(store: CdcStore.Store): DataFrame = {
+    val all = store.ids.map(id =>
+        spark.table(store.tableOf(id)).withColumn("_seg", lit(id)))
+      .reduce(_.unionByName(_))
+    val w = Window.partitionBy("k").orderBy(col("_seg").desc)
+    all.withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") === 1 && col("op") =!= "delete")
+      .drop("_rn", "_seg")
+  }
+
+  private def byKey(rows: Seq[Row]): Seq[Row] = rows.sortBy(_.getAs[Long]("k"))
+
+  /** Change batch `i` over `customer`: the keys ≡ i (mod 9) are
+    * inserted again (some after an earlier batch deleted them), and the
+    * other keys divisible by `i + 2` are deleted or updated by parity, so
+    * each live segment decides some keys and not others. */
+  private def batch(i: Int) = tables.customer
+    .filter(col("c_custkey") % (i + 2) === 0 || col("c_custkey") % 9 === i)
+    .select(col("c_custkey").as("k"),
+      when(col("c_custkey") % 9 === i, lit("insert"))
+        .when(col("c_custkey") % 2 === i % 2, lit("delete"))
+        .otherwise(lit("update")).as("op"),
+      col("c_nationkey").as("nationkey"),
+      round(col("c_acctbal") + i * 100.0, 2).as("acctbal"))
+
+  /** One state read: its rows equal [[unionState]]'s, and it runs as one
+    * job of `buckets` tasks over a bucketed scan, with no exchange. */
+  private def checkRead(store: CdcStore.Store, what: String): Unit = {
+    val df = CdcStore.currentState(spark, store)
+    val (rows, record) = QueryRecord.of(spark)(df.collect().toSeq)
+    val plan = df.queryExecution.executedPlan
+    assert(collectWithSubqueries(plan) { case e: ShuffleExchangeExec => e }
+      .isEmpty, s"$what:\n$plan")
+    assert(collect(plan) { case s: FileSourceScanExec => s.bucketedScan } ==
+      Seq(true), s"$what:\n$plan")
+    assert(record.jobs == 1, s"$what ran ${record.jobs} jobs")
+    assert(record.tasks == store.buckets,
+      s"$what ran ${record.tasks} tasks for ${store.buckets} buckets")
+    val expected = byKey(unionState(store).collect().toSeq)
+    assert(rows.nonEmpty && byKey(rows) == expected, what)
+  }
+
+  test("a state read merges each bucket across all live segments in one job") {
+    // "x_cdc7" names tables x_cdc7_cdc0, x_cdc7_cdc1, …: the segment id
+    // must come from the last `_cdc`, not the prefix's
+    for ((prefix, buckets) <- Seq(("cdc_rs", 16), ("x_cdc7", 4))) {
+      val dir = Files.createTempDirectory(s"cdc_read_$prefix").toString
+      def append(changes: DataFrame, i: Int): Unit =
+        CdcStore.appendChanges(spark, changes, prefix, dir,
+          buckets = buckets, batchTag = Some(s"b$i"))
+      append(seed, 0)
+      checkRead(CdcStore.attachStore(spark, prefix, dir), s"$prefix, 1 segment")
+      append(batch(1), 1)
+      checkRead(CdcStore.attachStore(spark, prefix, dir), s"$prefix, 2 segments")
+      append(batch(2), 2)
+      append(batch(3), 3)
+      // attach with the default bucket count: the stored one must win
+      val grown = CdcStore.attachStore(spark, prefix, dir)
+      assert(grown.ids == Seq(0, 1, 2, 3) && grown.buckets == buckets)
+      checkRead(grown, s"$prefix, 4 segments")
+      val compacted = CdcStore.compactStore(spark, grown)
+      assert(compacted.ids == Seq(4) && compacted.buckets == buckets)
+      checkRead(compacted, s"$prefix, compacted")
+      assert(byKey(CdcStore.currentState(spark, compacted).collect().toSeq) ==
+        byKey(unionState(grown).collect().toSeq), s"$prefix: compaction")
+    }
+  }
 
   test("streamed change batches reproduce the batch upsertMerge row-for-row") {
     val dir = Files.createTempDirectory("cdc_eq").toString

@@ -28,7 +28,7 @@ import graft.sources.Tables
   *  - IVF at nList ≈ √n scaling, candidate fraction = nProbe/nList
   *    (structural — the probe reads whole cells by construction).
   *
-  * Usage: sbt "runMain graft.GraphAnnFrontier [nVectors]"  (default 20000)
+  * Usage: sbt "Test/runMain graft.GraphAnnFrontier [nVectors]"  (default 20000)
   */
 object GraphAnnFrontier {
   def main(args: Array[String]): Unit = {

@@ -10,7 +10,7 @@ import graft.sources.Tables
   * hoc while tuning; the committed PLANS.md table is this tool's output at
   * sf0.1 (deterministic corpus, seeded projections → reproducible).
   *
-  * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.RecallEval"
+  * Usage: SPARK_GRAFT_SF_DIR=<sf0.1 dir> sbt "Test/runMain graft.RecallEval"
   */
 object RecallEval {
   def main(args: Array[String]): Unit = {

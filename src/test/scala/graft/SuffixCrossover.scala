@@ -19,7 +19,7 @@ import graft.operators.SuffixDedup
   * SQL (the direct substring-group form) via the driver-side
   * `tools/suffix_crossover_duckdb.py`.
   *
-  * Usage: sbt "runMain graft.SuffixCrossover [k1,k2,...]"   (default 1,3,10)
+  * Usage: sbt "Test/runMain graft.SuffixCrossover [k1,k2,...]"   (default 1,3,10)
   * Prints one line per scale: corpus rows/chars + engine min-of-2 secs.
   */
 object SuffixCrossover {
