@@ -32,7 +32,8 @@ import graft.sources.{Bucketing, Tables}
   * (spec-pinned), because each surviving key carries the op of its LAST
   * change.
   *
-  * 100 TB shape: ingest cost is the batch itself (bucketed write, no
+  * 100 TB shape: ingest cost is the batch itself (one bucketed write job,
+  * with no exchange for a batch read as one file split, and no
   * read-modify-write of the base — the LSM trade); resolution reads the
   * live segments as one bucketed relation and merges each bucket across
   * them in one task, with no shuffle, so a read is `buckets` tasks however
@@ -56,32 +57,35 @@ object CdcStore {
     new HPath(dir, "cdc_segments.list"), new HPath(dir, "cdc_store.buckets"))
 
   /** Apply one change batch as a new delta segment. Exactly-once via
-    * `batchTag` (validated before any write); empty batches are no-ops. */
+    * `batchTag` (validated before any write); empty batches are no-ops.
+    * The batch plan runs ONCE, as the segment write: an empty batch is
+    * seen after it, with no job, because a bucketed write opens a file
+    * only for a bucket that gets a row, so its directory holds no data
+    * bytes. That segment's table and directory are then removed and
+    * nothing is committed (a crash in between leaves an orphan table,
+    * which no list names). */
   def appendChanges(spark: SparkSession, changes: DataFrame, prefix: String,
                     dir: String, buckets: Int = 16,
                     batchTag: Option[String] = None): Store = {
     val st = segLog(dir).begin(spark, batchTag, buckets)
     val prev = register(spark, prefix, dir, st)
     if (st.listed(batchTag)) return prev
-    // plan-stats BEFORE the checkpoint below hides them behind the
-    // unknown sentinel — they size the segment's file count
-    val statBytes = changes.queryExecution.optimizedPlan.stats.sizeInBytes
-    // ONE evaluation of the change plan serves both the emptiness probe
-    // and the segment write (a bare `changes.isEmpty` would run the wide
-    // batch plan once for the probe and again for the write)
-    val batch = changes.localCheckpoint()
-    try {
-      if (batch.isEmpty) return prev
-      val table = prev.tableOf(st.nextId)
-      // file count bounded by the batch's BYTES, not the caller's width —
-      // in the store, so the streaming loop and every caller is covered
-      Bucketing.saveBucketed(
-        IndexFiles.boundBucketedWrite(batch, "k", st.buckets, statBytes),
-        table, Seq("k"), st.buckets, Some(prev.pathOf(st.nextId)),
-        SaveMode.Overwrite)
+    val table = prev.tableOf(st.nextId)
+    val path = new HPath(prev.pathOf(st.nextId))
+    // file count bounded by the batch's BYTES, not the caller's width —
+    // in the store, so the streaming loop and every caller is covered
+    Bucketing.saveBucketed(
+      IndexFiles.boundBucketedWrite(changes, "k", st.buckets,
+        changes.queryExecution.optimizedPlan.stats.sizeInBytes),
+      table, Seq("k"), st.buckets, Some(path.toString), SaveMode.Overwrite)
+    if (IndexFiles.dirBytes(spark, path) == 0) {
+      spark.sql(s"DROP TABLE $table")
+      IndexFiles.deleteTree(spark, path)
+      prev
+    } else {
       segLog(dir).commit(spark, st, batchTag)
       prev.copy(ids = prev.ids :+ st.nextId)
-    } finally batch.unpersist(blocking = false)
+    }
   }
 
   /** Attach the store: re-registers any segment table a fresh session's
@@ -131,21 +135,20 @@ object CdcStore {
     * forward, newest `maxTags` kept; a crash leaves the old list serving
     * the old segments, at worst an orphan table). Old segment tables are
     * left for the caller to garbage-collect. */
-  def compactStore(spark: SparkSession, store: Store, buckets: Int = 16,
+  def compactStore(spark: SparkSession, store: Store,
                    maxTags: Int = 1024): Store = {
     require(store.ids.nonEmpty, "compactStore: empty store")
-    val b = segLog(store.dir).buckets(spark, buckets)
     val id = store.ids.last + 1
     // the compacted base's file count derives from the live segments'
     // TRUE on-disk bytes (the resolved state is never larger)
     val liveBytes = store.ids.map(i =>
       IndexFiles.dirBytes(spark, new HPath(store.pathOf(i)))).sum
     Bucketing.saveBucketed(
-      IndexFiles.boundBucketedWrite(currentState(spark, store), "k", b,
-        BigInt(liveBytes)),
-      store.tableOf(id), Seq("k"), b, Some(store.pathOf(id)),
+      IndexFiles.boundBucketedWrite(currentState(spark, store), "k",
+        store.buckets, BigInt(liveBytes)),
+      store.tableOf(id), Seq("k"), store.buckets, Some(store.pathOf(id)),
       SaveMode.Overwrite)
     segLog(store.dir).commitCompaction(spark, store.ids, id, maxTags)
-    store.copy(ids = Seq(id), buckets = b)
+    store.copy(ids = Seq(id))
   }
 }

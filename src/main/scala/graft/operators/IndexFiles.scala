@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.plans.OneSplitPlans
 import graft.sources.Bucketing
 
 /** The commit layer of the five persisted stores ([[CdcStore]],
@@ -117,6 +118,10 @@ private[graft] object IndexFiles {
 
   def delete(spark: SparkSession, p: Path): Unit =
     p.getFileSystem(conf(spark)).delete(p, false)
+
+  /** Delete the directory `p` and everything under it. */
+  def deleteTree(spark: SparkSession, p: Path): Unit =
+    p.getFileSystem(conf(spark)).delete(p, true)
 
   /** The bucket count stored in `file`, or None before the first write. */
   def storedBuckets(spark: SparkSession, file: Path): Option[Int] =
@@ -252,7 +257,7 @@ private[graft] object IndexFiles {
 
   /** Delete the stages of a swap that never committed. */
   def discardStages(spark: SparkSession, dirs: Seq[Path]): Unit =
-    dirs.foreach(d => d.getFileSystem(conf(spark)).delete(stageOf(d), true))
+    dirs.foreach(d => deleteTree(spark, stageOf(d)))
 
   /** Per dir: the old generation is renamed ASIDE (never deleted before
     * the new one is in place, so any failure leaves a complete generation
@@ -281,17 +286,26 @@ private[graft] object IndexFiles {
     * write emits one file per (task, bucket) pair, so a batch arriving at
     * the session's full shuffle width fans a few-MB delta into
     * tasks×buckets tiny files, and every later resolve pays a fixed
-    * ~90-250 ms task setup per file. Every batch REPARTITIONS on the
-    * bucket key at a MULTIPLE of the bucket count (floored at the bucket
-    * count itself — r19, see the inline note on why the r18 small-batch
-    * coalesce arm was a width cliff): Spark's shuffle hash and its
-    * bucketing hash are the same pmod(murmur3(_, 42)) family, so with
-    * n = m·buckets every write task holds exactly one bucket's rows and
-    * the file count is exactly the non-empty (task, bucket) pairs —
-    * growing with bytes (~1 file / 64 MB), never with the caller's
-    * width. `statBytes` is the caller's best
-    * PRE-CHECKPOINT estimate (a checkpointed plan reports the unknown
-    * sentinel); unknown keeps the core count, aligned. */
+    * ~90-250 ms task setup per file.
+    *
+    * A batch is written REPARTITIONED on the bucket key at a
+    * MULTIPLE of the bucket count (floored at the bucket count itself —
+    * see the inline note on why a small-batch coalesce arm was a width
+    * cliff): Spark's shuffle hash and its bucketing hash are the
+    * same pmod(murmur3(_, 42)) family, so with n = m·buckets every write
+    * task holds exactly one bucket's rows and the file count is exactly
+    * the non-empty (task, bucket) pairs — growing with bytes (~1 file /
+    * 64 MB), never with the caller's width. `statBytes` is the caller's
+    * best size estimate (plan stats, or a segment's bytes on disk);
+    * unknown keeps the core count, aligned.
+    *
+    * At that floor (n = buckets) a batch that is a narrow chain over ONE
+    * file split ([[graft.plans.OneSplitPlans.readsOneSplit]]) is written
+    * as is: its one task writes one file per non-empty bucket, the same
+    * file set as the floor's one-bucket-per-task write, with no exchange
+    * and no map job. Its upstream is one task either way (a split is at
+    * most `maxSplitBytes` of file), so this is not the coalesce cliff
+    * noted below. */
   def boundBucketedWrite(out: org.apache.spark.sql.DataFrame, key: String,
                          buckets: Int, statBytes: BigInt): org.apache.spark.sql.DataFrame = {
     val spark = out.sparkSession
@@ -322,7 +336,9 @@ private[graft] object IndexFiles {
         math.max(buckets.toLong, statBytes.toLong / (64L << 20)))
       else math.max(par.toLong, buckets.toLong)
     val n = ((tasks + buckets - 1) / buckets * buckets)
-    out.repartition(n.toInt, org.apache.spark.sql.functions.col(key))
+    if (n == buckets &&
+        OneSplitPlans.readsOneSplit(spark, out.queryExecution.sparkPlan)) out
+    else out.repartition(n.toInt, org.apache.spark.sql.functions.col(key))
   }
 
   /** Total on-disk bytes under `p` (0 if absent) — the TRUE size of a

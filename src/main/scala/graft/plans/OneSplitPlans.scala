@@ -37,9 +37,9 @@ import graft.Arms
 case class OneSplitPlans(spark: SparkSession) extends Rule[SparkPlan] {
 
   override def apply(plan: SparkPlan): SparkPlan =
-    if (Arms.forcedDistributed(spark)) plan
-    else plan.transformUp {
-      case op: UnaryExecNode if requiresShuffle(op) && oneSplit(source(op.child)) =>
+    plan.transformUp {
+      case op: UnaryExecNode if requiresShuffle(op) &&
+          OneSplitPlans.readsOneSplit(spark, op.child) =>
         op.withNewChildren(Seq(CoalesceExec(1, op.child)))
     }
 
@@ -49,11 +49,22 @@ case class OneSplitPlans(spark: SparkSession) extends Rule[SparkPlan] {
     val d = op.requiredChildDistribution.head
     d != UnspecifiedDistribution && SinglePartition.satisfies(d)
   }
+}
 
-  private def oneSplit(p: SparkPlan): Boolean = p match {
-    case s: FileSourceScanExec => OneSplitPlans.splits(s).contains(1)
-    case _ => false
-  }
+object OneSplitPlans {
+
+  /** `p` is a narrow chain over a file scan that Spark reads as exactly one
+    * split, so its output is one partition: the test this rule applies
+    * under an operator, and the one a bucketed store write uses to skip
+    * its aligned repartition ([[graft.operators.IndexFiles.boundBucketedWrite]]).
+    * `p` is a physical plan before `EnsureRequirements` (a Dataset's
+    * `queryExecution.sparkPlan`). Always false under
+    * `spark.graft.arms=distributed`. */
+  def readsOneSplit(spark: SparkSession, p: SparkPlan): Boolean =
+    !Arms.forcedDistributed(spark) && (source(p) match {
+      case s: FileSourceScanExec => splits(s).contains(1)
+      case _ => false
+    })
 
   /** The bottom of the narrow chain under `p`: the node its partitions come
     * from. Shuffled joins and planner-made exchanges end the chain. */
@@ -66,9 +77,6 @@ case class OneSplitPlans(spark: SparkSession) extends Rule[SparkPlan] {
       source(j.buildSide match { case BuildRight => j.left; case BuildLeft => j.right })
     case _ => p
   }
-}
-
-object OneSplitPlans {
 
   /** How many splits Spark's read of `scan` will have, from the file listing
     * with Spark's own split and packing logic; None for a scan this rule

@@ -1,14 +1,16 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.{CdcStore, Relational}
+import graft.operators.{CdcStore, IndexFiles, Relational}
+import graft.plans.OneSplitPlans
 import graft.streaming.CorpusStreams
 
 class CdcStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
@@ -136,11 +138,58 @@ class CdcStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     CorpusStreams.processCdcBatch(spark, changes, 1L, "cdc_rp", dir)
     val before = stateRows(CdcStore.attachStore(spark, "cdc_rp", dir))
     CorpusStreams.processCdcBatch(spark, changes, 1L, "cdc_rp", dir) // replay
-    CorpusStreams.processCdcBatch(spark, changes.filter(lit(false)), 2L,
-      "cdc_rp", dir) // empty
-    val store = CdcStore.attachStore(spark, "cdc_rp", dir)
-    assert(store.ids == Seq(0, 1), s"replay/empty appended: ${store.ids}")
-    assert(stateRows(store) == before)
+    assert(CdcStore.attachStore(spark, "cdc_rp", dir).ids == Seq(0, 1))
+    // an empty plan, and an empty batch Spark reads as one file split
+    // (written without a repartition): neither may leave a trace
+    val file = Files.createTempDirectory("cdc_empty").resolve("batch").toString
+    changes.coalesce(1).write.parquet(file)
+    val oneSplit = spark.read.parquet(file).filter($"k" < 0)
+    assert(OneSplitPlans.readsOneSplit(spark, oneSplit.queryExecution.sparkPlan))
+    for ((empty, batchId) <- Seq((changes.filter(lit(false)), 2L), (oneSplit, 3L))) {
+      CorpusStreams.processCdcBatch(spark, empty, batchId, "cdc_rp", dir)
+      val store = CdcStore.attachStore(spark, "cdc_rp", dir)
+      assert(store.ids == Seq(0, 1), s"empty batch $batchId appended: ${store.ids}")
+      val list = new String(
+        Files.readAllBytes(Paths.get(dir, "cdc_segments.list")), "UTF-8")
+      assert(!list.contains(f"cdc-$batchId%020d"), s"batch $batchId listed: $list")
+      assert(!spark.catalog.tableExists("cdc_rp_cdc2"), s"batch $batchId: table")
+      assert(!Files.exists(Paths.get(dir, "cdc_rp_cdc2")), s"batch $batchId: directory")
+      assert(stateRows(store) == before)
+    }
+  }
+
+  test("a one-split change batch appends in one job with no exchange") {
+    val file = Files.createTempDirectory("cdc_one").resolve("batch1").toString
+    batch(1).coalesce(1).write.parquet(file)
+    // the same two batches into a store per arm; under `distributed` the
+    // batch takes the aligned repartition
+    def grow(prefix: String): (CdcStore.Store, QueryRecord.Record) = {
+      val dir = Files.createTempDirectory(prefix).toString
+      CdcStore.appendChanges(spark, seed, prefix, dir, batchTag = Some("b0"))
+      val changes = spark.read.parquet(file)
+      QueryRecord.of(spark)(CdcStore.appendChanges(spark, changes, prefix,
+        dir, batchTag = Some("b1")))
+    }
+    val (store, record) = grow("cdc_one")
+    assert(store.ids == Seq(0, 1))
+    assert(record.jobs == 1 && record.stages.size == 1 && record.tasks == 1,
+      s"append ran ${record.jobs} jobs, ${record.stages.size} stages, " +
+        s"${record.tasks} tasks")
+    val changes = spark.read.parquet(file)
+    val write = IndexFiles.boundBucketedWrite(changes, "k", store.buckets,
+      changes.queryExecution.optimizedPlan.stats.sizeInBytes)
+    assert(write eq changes)
+    assert(collect(write.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e }.isEmpty)
+    val (aligned, alignedRecord) = withArms("distributed")(grow("cdc_al"))
+    assert(alignedRecord.stages.size > 1, "the aligned write lost its exchange")
+    def bucketIds(s: CdcStore.Store) = new java.io.File(s.pathOf(1)).list()
+      .toSeq.filter(_.endsWith(".parquet")).flatMap(BucketingUtils.getBucketId)
+      .sorted
+    assert(bucketIds(store).nonEmpty && bucketIds(store) == bucketIds(aligned))
+    val state = byKey(CdcStore.currentState(spark, store).collect().toSeq)
+    assert(state == byKey(unionState(store).collect().toSeq))
+    assert(state == byKey(CdcStore.currentState(spark, aligned).collect().toSeq))
   }
 
   test("appendChanges bounds the delta-segment file count by batch bytes, not caller width") {
@@ -166,7 +215,6 @@ class CdcStoreSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // Feeding fake "large" stats forces the aligned arm on a small batch:
     // 1 GiB / 64 MiB = 16 tasks over 8 buckets ⇒ exactly 16 files iff
     // every task held exactly one bucket.
-    import graft.operators.IndexFiles
     val dir = Files.createTempDirectory("cdc_aligned").toString
     IndexFiles.boundBucketedWrite(seed, "k", 8, BigInt(1L << 30))
       .write.mode("overwrite")

@@ -8,7 +8,9 @@ import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SparkPl
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+import org.apache.spark.sql.functions.col
 import graft.plans.OneSplitPlans
+import graft.sources.Bucketing
 
 /** [[OneSplitPlans]] on a session built with [[GraftExtensions]] (the
   * shared `spark` session has none). Every sf0.001 table is one parquet
@@ -136,5 +138,25 @@ class OneSplitPlansSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val (split, m) = counts(lineitem)
       assert(split.contains(m) && m >= 2, s"split file: $split vs $m")
     }
+  }
+
+  test("the one-split predicate holds for a narrow chain over one split only") {
+    def oneSplit(df: DataFrame): Boolean =
+      OneSplitPlans.readsOneSplit(ext, df.queryExecution.sparkPlan)
+    val chain = ext.read.parquet(s"$sfDir/customer.parquet")
+      .filter(col("c_custkey") > 10).select("c_custkey", "c_acctbal")
+    assert(oneSplit(chain))
+    assert(!oneSplit(chain.repartition(4)))
+    assert(!oneSplit(ext.createDataFrame(Seq((1L, "a"))).toDF("k", "v")))
+    // one bucket in one file: the listing alone would say one split
+    val dir = Files.createTempDirectory("onesplit_pred").toString
+    ext.range(0, 200).selectExpr("id AS k", "id % 7 AS v").coalesce(1)
+      .write.option("path", dir).bucketBy(1, "k").saveAsTable("onesplit_pred")
+    try {
+      val bucketed = Bucketing.readBucketed(ext, Seq(dir),
+        ext.table("onesplit_pred").schema, Seq("k"), 1)
+      assert(!oneSplit(bucketed.filter(col("v") > 1)))
+    } finally ext.sql("DROP TABLE onesplit_pred")
+    withConf(Arms.Key, "distributed")(assert(!oneSplit(chain)))
   }
 }

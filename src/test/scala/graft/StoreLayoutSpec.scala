@@ -59,7 +59,7 @@ class StoreLayoutSpec extends SparkSpec {
     check(dir, "second append",
       files ++ table("sl_cdc_cdc0") ++ table("sl_cdc_cdc1"),
       Map("cdc_segments.list" -> "0:b0 1:b1", "cdc_store.buckets" -> "4"))
-    CdcStore.compactStore(spark, store, buckets = 4)
+    CdcStore.compactStore(spark, store)
     check(dir, "compact",
       files ++ Seq(0, 1, 2).flatMap(i => table(s"sl_cdc_cdc$i")),
       Map("cdc_segments.list" -> "2:b0,b1", "cdc_store.buckets" -> "4"))
